@@ -3,6 +3,9 @@ package graft
 /**
  * Benchmark main — runs every SparkEntry query against
  * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with per-query seconds.
+ * `Bench <query> [<query> ...]` runs only the named queries (an A/B or
+ * single-query magnifier) with the same per-query hygiene and line
+ * shape, minus the board-coverage check; per-run seconds go to stderr.
  *
  * Each query is forced through the `noop` sink, not `count()`: count lets
  * Catalyst prune every projected column (a filter query would measure only
@@ -63,7 +66,8 @@ object Bench {
     // steady-state cost. SPARK_GRAFT_BENCH_REPS=1 opts into one pass for
     // long boards (the sf1 full-board run) where wall-clock dominates.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
-    val results = SparkEntry.queries.keys.toSeq.sorted.map { n =>
+    val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val results = names.map { n =>
       val runs = (1 to math.max(1, reps)).map(_ => runOnce(n))
       n -> Run(runs.map(_.sec).min, runs.forall(_.ok))
     }
@@ -76,7 +80,8 @@ object Bench {
     // stale exactly when the tree is — is what actually catches a
     // stale-compiled-tree board run against a fresh checkout.
     val manifest = new java.io.File("tools/expected_queries.txt")
-    if (manifest.isFile) {
+    if (args.nonEmpty) () // a subset run covers only what it names
+    else if (manifest.isFile) {
       val src = scala.io.Source.fromFile(manifest, "UTF-8")
       val expected =
         try src.getLines().map(_.trim).filter(_.nonEmpty).toSet

@@ -118,28 +118,13 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // AQE coalescing floor and the small-scan spread cap stay
-      // env-overridable for A/B runs. The floor KEEPS Spark's 1 MB
-      // default: a 64 KB floor was tried this round (it parallelizes
-      // byte-small compute-heavy reduce stages, e.g. q_basket_rules'
-      // 1.9 MB pair-explosion stage) but measured a NET loss — the
-      // extra tiny tasks taxed the many window/agg queries more than
-      // the few CPU-bound stages gained (OPTIMIZATION_r10.md, A/B/C/D
-      // subset experiments).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "1m"))
-      .config("spark.graft.scan.spreadMaxBytes",
-        sys.env.getOrElse("SPARK_GRAFT_SPREAD_MAX",
-          (64L * 1024 * 1024).toString))
-      // spread width: a width-only A/B at fixed 32 cores (r11) read
-      // linkage_score 1.85/2.73/3.16 s at widths 32/16/8 — the linkage
-      // probe wants the full machine — while the embed gates' 16-width
-      // edge (3.14 vs 4.08 on pca) sat inside the ambient noise band,
-      // so the default stays defaultParallelism; the knob remains for
-      // cluster tuning
-      .config("spark.graft.scan.spreadWidth",
-        sys.env.getOrElse("SPARK_GRAFT_SPREAD_WIDTH",
-          shufflePartitions.toString))
+      // AQE coalescing floor: Spark's 1 MB default, pinned. A 64 KB
+      // floor was tried (it parallelizes byte-small compute-heavy reduce
+      // stages, e.g. q_basket_rules' 1.9 MB pair-explosion stage) but
+      // measured a NET loss — the extra tiny tasks taxed the many
+      // window/agg queries more than the few CPU-bound stages gained
+      // (OPTIMIZATION_r10.md, A/B/C/D subset experiments).
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // Codegen class cache (static conf, default 100 entries): one
       // iterative query (pageRank = ~25 stages and their broadcast

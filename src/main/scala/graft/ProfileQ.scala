@@ -19,7 +19,8 @@ import scala.collection.mutable
  *
  * then dumps `.explain("formatted")` to `<SPARK_GRAFT_PLAN_DIR, default
  * plans/r11>/<query>_<tag>.txt` (tag from SPARK_GRAFT_PLAN_TAG, default
- * "before"). Diagnostic only —
+ * "before"). `SPARK_GRAFT_PLAN_ONLY=1` skips execution and only dumps
+ * the formatted plans — the plan inspector. Diagnostic only —
  * never part of the bench/oracle surface.
  */
 object ProfileQ {

@@ -56,8 +56,7 @@ object SparkEntry {
     * in a single-task window-digest scan; q_embed_covariance ran its
     * whole 10M-cell explode serially). Guide §2.5: an unsplittable
     * input is repartitioned immediately after the read. Engages only
-    * while the relation's stats size is at or below
-    * `spark.graft.scan.spreadMaxBytes` (default 64 MB; 0 disables): a
+    * while the relation's stats size is at or below 64 MB: a
     * production-scale input has many row groups, splits naturally,
     * and must never pay a corpus shuffle here — the spread shuffle is
     * by construction bounded by that threshold. Applied PER GATE, only
@@ -66,27 +65,487 @@ object SparkEntry {
     * a blanket spread of the docs/embeddings helpers was tried and
     * measurably TAXED the many light consumers (the exchange costs
     * more than the 1-task scan it parallelizes; A/B/C/D experiments in
-    * OPTIMIZATION_r10.md). */
-  private def spread(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val maxBytes = spark.conf.getOption("spark.graft.scan.spreadMaxBytes")
-      .map(_.toLong).getOrElse(64L << 20)
-    // width is its own knob (spark.graft.scan.spreadWidth, default
-    // defaultParallelism): r10's 8-core driver run beat 32 cores on the
-    // spread gates, and a width-only A/B at fixed 32 cores confirmed
-    // defaultParallelism over-shards this SF's single-row-group scans
-    val width = spark.conf.getOption("spark.graft.scan.spreadWidth")
-      .map(_.toInt).getOrElse(spark.sparkContext.defaultParallelism)
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= maxBytes)
-      df.repartition(width)
+    * OPTIMIZATION_r10.md). The width is `defaultParallelism`: a
+    * width-only A/B at fixed 32 cores (r11) read linkage_score
+    * 1.85/2.73/3.16 s at widths 32/16/8 — the linkage probe wants the
+    * full machine — while the embed gates' narrower-width edge sat
+    * inside the ambient noise band. */
+  private def spread(df: DataFrame): DataFrame =
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= (64L << 20))
+      df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     else df
-  }
 
   private def docs(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/documents.parquet")
 
+  private def docIds(spark: SparkSession, dir: String): DataFrame =
+    docs(spark, dir).select(col("doc_id"))
+
   private def embeddings(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/embeddings.parquet")
+
+  // ---------------------------------------------------------- gate fixtures
+  //
+  // Inputs that two or more gates share, each defined once. Every builder
+  // makes fresh frames per call — no frame is cached across gates. Where
+  // the oracles repeat an input too, its DuckDB mirror sits next to it.
+
+  /** Id offset of every synthesized twin row, doc or vector — far above
+    * any testdata id. */
+  private val TwinShift = 1000000L
+
+  /** documents (doc_id, text) ∪ a twin of every doc at doc_id +
+    * [[TwinShift]] whose text is `twinText` (an exact copy by default —
+    * the known-50%-duplicate corpus). */
+  private def docsWithTwins(s: SparkSession, d: String,
+                            twinText: Column = col("text")): DataFrame = {
+    val d0 = docs(s, d).select(col("doc_id"), col("text"))
+    d0.unionByName(
+      d0.select((col("doc_id") + lit(TwinShift)).as("doc_id"), twinText))
+  }
+
+  /** SQL mirror of [[docsWithTwins]]. */
+  private val docsWithTwinsSql =
+    "SELECT doc_id, text FROM documents UNION ALL " +
+      s"SELECT doc_id + $TwinShift AS doc_id, text FROM documents"
+
+  /** Closed form of the twin-recall gates: one (doc, twin) pair per
+    * doc, plus `extra` constant columns. */
+  private def docTwinPairsSql(extra: String): String =
+    s"SELECT doc_id AS id_a, doc_id + $TwinShift AS id_b$extra FROM documents ORDER BY id_a"
+
+  /** Closed-form components of [[exactDupPairs]]: each id labeled by
+    * the minimum id of its text class. */
+  private val twinComponentsSql =
+    s"WITH all_docs AS ($docsWithTwinsSql) " +
+      "SELECT doc_id AS id, min(doc_id) OVER (PARTITION BY text) AS comp " +
+      "FROM all_docs ORDER BY id"
+
+  /** Exact-duplicate pair graph over [[docsWithTwins]]: (id_a < id_b)
+    * for every md5-equal text pair — a complete graph per text class. */
+  private def exactDupPairs(s: SparkSession, d: String): DataFrame = {
+    val keyed = docsWithTwins(s, d).withColumn("__digest", md5(col("text")))
+    keyed.as("a").join(keyed.as("b"),
+        col("a.__digest") === col("b.__digest") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+  }
+
+  /** (vec_id, v): every embedding as array<double>. */
+  private def vecs(s: SparkSession, d: String): DataFrame =
+    embeddings(s, d).select(col("vec_id"), VF.asDouble(col("embedding")).as("v"))
+
+  /** (vec_id, label, v). */
+  private def labeledVecs(s: SparkSession, d: String): DataFrame =
+    embeddings(s, d).select(col("vec_id"), col("label"),
+      VF.asDouble(col("embedding")).as("v"))
+
+  /** SQL over [[labeledVecs]]: vectors `e`(vec_id, label, v) and
+    * per-label centroids `cl`(label, cv) — per-dim DECIMAL sums of
+    * 9-dp components over the label count, Centroids' mirror. */
+  private val labelCentroidsSql: String =
+    """e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
+      |           FROM embeddings),
+      |ex AS (SELECT vec_id, label, unnest(v) AS x,
+      |              unnest(range(1, len(v) + 1)) AS pos FROM e),
+      |cent AS (
+      |  SELECT label, pos,
+      |    CAST(sum(CAST(round(x, 9) AS DECIMAL(27,9))) AS DOUBLE) / count(*) AS c
+      |  FROM ex GROUP BY 1, 2),
+      |cl AS (SELECT label, list(c ORDER BY pos) AS cv FROM cent GROUP BY 1)""".stripMargin
+
+  /** An exactly parallel twin of every (vec_id, v) row: id +
+    * [[TwinShift]], v × 2 — same direction, so its cosine to the
+    * original is exactly 1. */
+  private def vecTwins(e: DataFrame): DataFrame =
+    e.select((col("vec_id") + lit(TwinShift)).as("vec_id"),
+      transform(col("v"), x => x * lit(2.0)).as("v"))
+
+  private def withVecTwins(e: DataFrame): DataFrame = e.unionByName(vecTwins(e))
+
+  /** Closed-form oracles of the vector-twin gates: every vector's twin
+    * pair at cosine 1, and each probe's rank-1 neighbor = its twin. */
+  private val vecTwinPairsSql =
+    s"SELECT vec_id AS id_a, vec_id + $TwinShift AS id_b, " +
+      "CAST(1.0 AS DOUBLE) AS cosine FROM embeddings ORDER BY id_a, id_b"
+  private val vecTwinTop1Sql =
+    "SELECT vec_id AS query_id, CAST(1 AS BIGINT) AS rank, " +
+      s"vec_id + $TwinShift AS vec_id, CAST(1.0 AS DOUBLE) AS cosine " +
+      "FROM embeddings WHERE vec_id < 5 ORDER BY query_id"
+
+  /** [[vecs]] plus its first five vectors as (query_id, qv) probes. */
+  private def annInputs(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val e = vecs(s, d)
+    val probes = e.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("query_id"), col("v").as("qv"))
+    (e, probes)
+  }
+
+  /** SQL over [[annInputs]]: `e`, probes `p`, and every (probe,
+    * non-self vector) cosine `scored`(query_id, vec_id, cosine). */
+  private val probeScoresSql: String =
+    """e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      |p AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
+      |scored AS (
+      |  SELECT p.query_id, e.vec_id, list_cosine_similarity(p.qv, e.v) AS cosine
+      |  FROM e CROSS JOIN p WHERE e.vec_id != p.query_id)""".stripMargin
+
+  /** The PQ gates' codebook: 2 subspaces × 4 centroids, one Lloyd round. */
+  private def pqCodebook(e: DataFrame) =
+    graft.operators.Pq.fit(e, "vec_id", "v", subspaces = 2, k = 4, iterations = 1)
+
+  /** User-id parity as the A/B arm label ("0" / "1"). */
+  private def parityArm: Column = (col("user_id") % 2).cast("string")
+
+  /** SQL mirror of [[parityArm]]. */
+  private val paritySql = "CAST(user_id % 2 AS VARCHAR)"
+
+  /** The A/B gates' experiment: events with [[parityArm]] as `variant`,
+    * followed by `cols`. */
+  private def abArms(s: SparkSession, d: String, cols: Column*): DataFrame =
+    executor(s, d).table("events").select(parityArm.as("variant") +: cols: _*)
+
+  /** Per-event-type pooled two-proportion z on the parity arms
+    * (success = value > 50) — the segment sweep behind the grouped-z
+    * and FDR gates. */
+  private def segmentZ(s: SparkSession, d: String): DataFrame =
+    graft.operators.Experiment.proportionZGrouped(
+      executor(s, d).table("events").select(col("event_type").as("seg"),
+        parityArm.as("variant"), (col("value") > 50).as("ok")),
+      "seg", "variant", "ok", "0", "1")
+
+  /** Customer–supplier co-order pairs, one per lineitem:
+    * c = "c:<custkey>", p = "s:<suppkey>". */
+  private def coOrderPairs(s: SparkSession, d: String): DataFrame = {
+    val ex = executor(s, d)
+    ex.table("lineitem").join(ex.table("orders"),
+        col("l_orderkey") === col("o_orderkey"))
+      .select(concat(lit("c:"), col("o_custkey")).as("c"),
+        concat(lit("s:"), col("l_suppkey")).as("p"))
+  }
+
+  /** [[coOrderPairs]] in both directions as (src, dst), so every node
+    * both emits and receives mass. */
+  private def coOrderEdges(s: SparkSession, d: String): DataFrame = {
+    val pairs = coOrderPairs(s, d)
+    pairs.select(col("c").as("src"), col("p").as("dst"))
+      .unionByName(pairs.select(col("p").as("src"), col("c").as("dst")))
+  }
+
+  /** Quintet-star + hub-chain graph over `ids`(doc_id): each non-hub
+    * points at its quintet hub doc_id − doc_id % 5, each hub at the
+    * next hub when that doc exists. */
+  private def quintetEdges(ids: DataFrame): DataFrame = {
+    val leaves = ids.filter(col("doc_id") % 5 =!= 0)
+      .select(col("doc_id").as("src"),
+        (col("doc_id") - (col("doc_id") % 5)).as("dst"))
+    val hubIds = ids.filter(col("doc_id") % 5 === 0)
+      .select(col("doc_id").as("hid"))
+    val chain = ids.filter(col("doc_id") % 5 === 0)
+      .select(col("doc_id").as("src"), (col("doc_id") + 5).as("dst"))
+      .join(hubIds, col("dst") === col("hid"))
+      .select(col("src"), col("dst"))
+    leaves.unionByName(chain)
+  }
+
+  /** SQL mirror of [[quintetEdges]] over `ids`(`idCols`) plus its
+    * symmetrized, self-loop-free edge set `und`(a, b). */
+  private def quintetGraphSql(idCols: String = "doc_id"): String =
+    s"""ids AS (SELECT $idCols FROM documents),
+       |leaves AS (SELECT doc_id AS src, doc_id - (doc_id % 5) AS dst
+       |           FROM ids WHERE doc_id % 5 != 0),
+       |hubset AS (SELECT doc_id AS hid FROM ids WHERE doc_id % 5 = 0),
+       |chain AS (SELECT h.doc_id AS src, h.doc_id + 5 AS dst
+       |          FROM ids h JOIN hubset t ON h.doc_id + 5 = t.hid
+       |          WHERE h.doc_id % 5 = 0),
+       |fwd AS (SELECT src, dst FROM leaves UNION ALL SELECT src, dst FROM chain),
+       |${undSql("und")}""".stripMargin
+
+  /** `fwd`(src, dst) symmetrized into the distinct, self-loop-free
+    * edge set `name`(a, b). */
+  private def undSql(name: String): String =
+    s"""$name AS (SELECT DISTINCT a, b FROM (
+       |  SELECT src AS a, dst AS b FROM fwd
+       |  UNION ALL SELECT dst AS a, src AS b FROM fwd) t WHERE a != b)""".stripMargin
+
+  /** Unseeded 2-round LPA over [[quintetGraphSql]] — own id as the
+    * initial label, (count desc, label asc) STRING-order majority —
+    * ending in `l2`(node, lab); Graph.communities' mirror. */
+  private val communitiesSql: String =
+    s"""${quintetGraphSql()},
+       |nodes AS (SELECT DISTINCT a AS node FROM und),
+       |l0 AS (SELECT node, CAST(node AS VARCHAR) AS lab FROM nodes),
+       |v1 AS (SELECT u.b AS node, l.lab, count(*) AS n
+       |       FROM und u JOIN l0 l ON u.a = l.node GROUP BY 1, 2),
+       |m1 AS (SELECT node, lab FROM (
+       |         SELECT node, lab, row_number() OVER (PARTITION BY node
+       |           ORDER BY n DESC, lab ASC) AS rn FROM v1) t WHERE rn = 1),
+       |l1 AS (SELECT n.node, coalesce(m.lab, CAST(n.node AS VARCHAR)) AS lab
+       |       FROM nodes n LEFT JOIN m1 m USING (node)),
+       |v2 AS (SELECT u.b AS node, l.lab, count(*) AS n
+       |       FROM und u JOIN l1 l ON u.a = l.node GROUP BY 1, 2),
+       |m2 AS (SELECT node, lab FROM (
+       |         SELECT node, lab, row_number() OVER (PARTITION BY node
+       |           ORDER BY n DESC, lab ASC) AS rn FROM v2) t WHERE rn = 1),
+       |l2 AS (SELECT n.node, coalesce(m.lab, CAST(n.node AS VARCHAR)) AS lab
+       |       FROM nodes n LEFT JOIN m2 m USING (node))""".stripMargin
+
+  /** Chain + skip + decade-hub graph over `ids`(doc_id): i → i+1,
+    * i → i+2, and each non-decade id → its decade hub (consecutive-id
+    * triangles plus hub-closed wedges). */
+  private def decadeEdges(ids: DataFrame): DataFrame =
+    ids.select(col("doc_id").as("src"), (col("doc_id") + 1).as("dst"))
+      .unionByName(ids.select(col("doc_id").as("src"),
+        (col("doc_id") + 2).as("dst")))
+      .unionByName(ids.filter(col("doc_id") % 10 =!= 0)
+        .select(col("doc_id").as("src"),
+          (col("doc_id") - (col("doc_id") % 10)).as("dst")))
+
+  /** SQL mirror of [[decadeEdges]] over `ids`(doc_id), symmetrized
+    * into the edge set `und`(a, b) (see [[undSql]]). */
+  private def decadeGraphSql(und: String = "und"): String =
+    s"""ids AS (SELECT doc_id FROM documents),
+       |fwd AS (
+       |  SELECT doc_id AS src, doc_id + 1 AS dst FROM ids
+       |  UNION ALL SELECT doc_id, doc_id + 2 FROM ids
+       |  UNION ALL SELECT doc_id, doc_id - (doc_id % 10) FROM ids
+       |    WHERE doc_id % 10 != 0),
+       |${undSql(und)}""".stripMargin
+
+  /** The three fixed BM25 probe queries as (query_id, term). */
+  private def searchTerms(s: SparkSession): DataFrame = {
+    import s.implicits._
+    Seq((1L, "spark"), (1L, "join"), (2L, "window"), (2L, "merge"),
+      (2L, "sort"), (3L, "customer")).toDF("query_id", "term")
+  }
+
+  /** Whitespace tokens of `text` (trimmed; lower-cased in the second
+    * form) as a DuckDB list — the oracles' tokenizer. */
+  private val toksSql = "regexp_split_to_array(trim(text), '[ \\t\\n\\x0b\\f\\r]+')"
+  private val lowerToksSql =
+    "regexp_split_to_array(trim(lower(text)), '[ \\t\\n\\x0b\\f\\r]+')"
+
+  /** The corpus as a lower-cased token stream `toks`(term), and per
+    * doc `toks`(doc_id, term). */
+  private val termsSql = s"toks AS (SELECT unnest($lowerToksSql) AS term FROM documents)"
+  private val docTermsSql =
+    s"toks AS (SELECT doc_id, unnest($lowerToksSql) AS term FROM documents)"
+
+  /** SQL mirror of [[searchTerms]] (`q`) plus BM25 (k1 = 1.2, b = 0.75)
+    * per-(query, doc) term contributions `contrib`, 9 dp. */
+  private val bm25ContribSql: String =
+    s"""q AS (
+       |  SELECT CAST(query_id AS BIGINT) AS query_id, term
+       |  FROM (VALUES (1, 'spark'), (1, 'join'), (2, 'window'), (2, 'merge'),
+       |               (2, 'sort'), (3, 'customer')) v(query_id, term)),
+       |$docTermsSql,
+       |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
+       |       WHERE length(term) > 0 GROUP BY 1, 2),
+       |dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
+       |dfreq AS (SELECT term, count(*) AS n_t FROM tf GROUP BY 1),
+       |stats AS (
+       |  SELECT (SELECT count(*) FROM documents) AS n,
+       |         (SELECT CAST(sum(dl) AS DOUBLE) / count(*) FROM dl) AS avgdl),
+       |contrib AS (
+       |  SELECT q.query_id, tf.doc_id,
+       |    round(ln(1 + (n - n_t + 0.5) / (n_t + 0.5)) * (tf * 2.2) /
+       |          (tf + 1.2 * (0.25 + 0.75 * dl / avgdl)), 9) AS w
+       |  FROM tf JOIN q USING (term) JOIN dfreq USING (term)
+       |       JOIN dl USING (doc_id) CROSS JOIN stats)""".stripMargin
+
+  /** [[bm25ContribSql]] summed per (query, doc) at 6 dp → top-10
+    * `bm`(query_id, rank, doc_id). */
+  private val bm25Top10Sql: String =
+    s"""$bm25ContribSql,
+       |scoredb AS (
+       |  SELECT query_id, doc_id,
+       |    round(CAST(sum(CAST(w AS DECIMAL(20,9))) AS DOUBLE), 6) AS score
+       |  FROM contrib GROUP BY 1, 2),
+       |bm AS (SELECT query_id, rank, doc_id FROM (
+       |  SELECT query_id, doc_id,
+       |    CAST(row_number() OVER (PARTITION BY query_id
+       |         ORDER BY score DESC, doc_id ASC) AS BIGINT) AS rank
+       |  FROM scoredb) WHERE rank <= 10)""".stripMargin
+
+  /** Exact cosine top-10 for probe vectors 1..3 — ids aligned with the
+    * [[searchTerms]] query ids. */
+  private def denseTop10(s: SparkSession, d: String): DataFrame = {
+    val e = vecs(s, d)
+    val p = e.filter(col("vec_id").isin(1L, 2L, 3L))
+      .select(col("vec_id").as("qid"), col("v").as("qv"))
+    Ann.bruteForceTopK(e, "vec_id", "v", p, "qid", "qv", k = 10)
+  }
+
+  /** SQL mirror of [[denseTop10]]: `ann`(query_id, rank, doc_id). */
+  private val denseTop10Sql: String =
+    """e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      |p AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id IN (1, 2, 3)),
+      |scoreda AS (
+      |  SELECT p.query_id, e.vec_id, list_cosine_similarity(p.qv, e.v) AS cosine
+      |  FROM e CROSS JOIN p WHERE e.vec_id != p.query_id),
+      |ann AS (SELECT query_id, rank, vec_id AS doc_id FROM (
+      |  SELECT query_id, vec_id,
+      |    CAST(row_number() OVER (PARTITION BY query_id
+      |         ORDER BY cosine DESC, vec_id ASC) AS BIGINT) AS rank
+      |  FROM scoreda) WHERE rank <= 10)""".stripMargin
+
+  /** (vec_id, v) → one (vec_id, dim, value) row per component, dim
+    * 1-based. */
+  private def explodeDims(df: DataFrame): DataFrame =
+    df.select(col("vec_id"), posexplode(col("v")).as(Seq("__p", "value")))
+      .select(col("vec_id"), (col("__p") + 1).as("dim"), col("value"))
+
+  /** The rater gates' keep/drop heuristics: char length, token count,
+    * line count. */
+  private def lenRater: Column =
+    when(col("n_chars") >= 400, lit("keep")).otherwise(lit("drop"))
+  private def tokRater: Column =
+    when(TF.tokenCount(col("text")) >= 60, lit("keep")).otherwise(lit("drop"))
+  private def linesRater: Column =
+    when(size(split(col("text"), "\n", -1)) >= 5, lit("keep"))
+      .otherwise(lit("drop"))
+
+  /** SQL mirrors of [[lenRater]], [[tokRater]] and [[linesRater]]. */
+  private val lenRaterSql = "CASE WHEN n_chars >= 400 THEN 'keep' ELSE 'drop' END"
+  private val tokRaterSql = s"CASE WHEN len($toksSql) >= 60 THEN 'keep' ELSE 'drop' END"
+  private val linesRaterSql =
+    "CASE WHEN len(string_split(text, chr(10))) >= 5 THEN 'keep' ELSE 'drop' END"
+
+  /** SQL mirror of [[raterPanel]]: per-doc ratings `r`, long form `long`. */
+  private def raterPanelSql(lines: String): String =
+    s"""r AS (
+       |  SELECT doc_id, $lenRaterSql AS r_len,
+       |    $tokRaterSql AS r_tok, $lines AS r_lines
+       |  FROM documents),
+       |long AS (
+       |  SELECT doc_id, r_len AS label FROM r UNION ALL
+       |  SELECT doc_id, r_tok FROM r UNION ALL
+       |  SELECT doc_id, r_lines FROM r)""".stripMargin
+
+  /** Three-rater panel in long form (doc_id, label): [[lenRater]],
+    * [[tokRater]] and the given line rater. */
+  private def raterPanel(s: SparkSession, d: String, lines: Column): DataFrame =
+    docs(s, d).select(col("doc_id"), lenRater.as("r_len"),
+        tokRater.as("r_tok"), lines.as("r_lines"))
+      .selectExpr("doc_id", "stack(3, r_len, r_tok, r_lines) AS label")
+
+  /** Deterministic synthetic classifier score: 37·doc_id mod 101 scaled
+    * to [0, 1] plus a 0.15 bump for English docs, 6 dp. */
+  private def docScore: Column =
+    round((col("doc_id") * 37 % 101).cast("double") / lit(100.0) +
+      when(col("lang") === "en", lit(0.15)).otherwise(lit(0.0)), 6)
+
+  /** SQL mirror of [[docScore]]. */
+  private val docScoreSql = "round(CAST((doc_id * 37) % 101 AS DOUBLE) / 100.0 + " +
+    "CASE WHEN lang = 'en' THEN 0.15 ELSE 0.0 END, 6)"
+
+  /** Snapshot v2 of (doc_id, text): drops ids ≡ 0 mod 10, edits ids
+    * ≡ 0 mod 7, adds twins of docs 0..4. */
+  private def snapshotV2(base: DataFrame): DataFrame =
+    base.filter(col("doc_id") % 10 =!= 0)
+      .withColumn("text", when(col("doc_id") % 7 === 0,
+        concat(col("text"), lit(" v2"))).otherwise(col("text")))
+      .unionByName(base.filter(col("doc_id") < 5)
+        .select((col("doc_id") + TwinShift).as("doc_id"), col("text")))
+
+  /** Each doc of `ds` with its successor: (id, a = text, b = text of
+    * doc id + 1). */
+  private def nextDocPairs(ds: DataFrame): DataFrame =
+    ds.select(col("doc_id").as("id"), col("text").as("a"))
+      .join(ds.select((col("doc_id") - 1).as("id"), col("text").as("b")), Seq("id"))
+
+  /** SQL mirror of [[snapshotV2]] over documents. */
+  private val snapshotV2Sql: String =
+    s"""SELECT doc_id, CASE WHEN doc_id % 7 = 0 THEN text || ' v2'
+       |                    ELSE text END AS text
+       |FROM documents WHERE doc_id % 10 != 0
+       |UNION ALL
+       |SELECT doc_id + $TwinShift, text FROM documents WHERE doc_id < 5""".stripMargin
+
+  /** documents with a synthetic email/IP/SSN/phone suffix built from
+    * doc_id on 2 of every 3 docs. */
+  private def piiInjected(s: SparkSession, d: String): DataFrame =
+    docs(s, d).select(col("doc_id"),
+      when(col("doc_id") % 3 =!= 0,
+        concat(col("text"), lit(" reach user"), col("doc_id").cast("string"),
+          lit("@example.com or 10."), (col("doc_id") % 200).cast("string"),
+          lit(".0.1 ssn 123-45-6789 tel 555-123-4567")))
+        .otherwise(col("text")).as("text"))
+
+  /** SQL mirror of [[piiInjected]]: `injected`(doc_id, text). */
+  private val piiInjectedSql: String =
+    """injected AS (
+      |  SELECT doc_id,
+      |    CASE WHEN doc_id % 3 <> 0 THEN text || ' reach user' ||
+      |      CAST(doc_id AS VARCHAR) || '@example.com or 10.' ||
+      |      CAST(doc_id % 200 AS VARCHAR) || '.0.1 ssn 123-45-6789 tel 555-123-4567'
+      |    ELSE text END AS text
+      |  FROM documents)""".stripMargin
+
+  /** (doc_id, n_tokens) — whitespace tokens per doc as BIGINT. */
+  private def docTokens(s: SparkSession, d: String): DataFrame =
+    docs(s, d).select(col("doc_id"),
+      TF.tokenCount(col("text")).cast("long").as("n_tokens"))
+
+  /** SQL mirror of [[docTokens]] sharded 8 ways by doc_id with each
+    * shard's running token total, `c`(doc_id, shard, n_tokens, cum). */
+  private val packCumSql: String =
+    s"""t AS (
+       |  SELECT doc_id, doc_id % 8 AS shard,
+       |    CAST(len($toksSql) AS BIGINT) AS n_tokens
+       |  FROM documents),
+       |c AS (SELECT doc_id, shard, n_tokens,
+       |        sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id) AS cum
+       |      FROM t)""".stripMargin
+
+  /** The decontamination oracles' distinct 3-gram shingles `docs`(doc_id,
+    * sh), the eval slice's (doc_id < 10) shingle set `ev` and the
+    * corpus inverted list `inv`(doc_id, s). */
+  private val decontamSql: String =
+    s"""docs AS (
+       |  SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(toks)-2, 1)+1),
+       |         i -> array_to_string(list_slice(toks, i, i+2), ' '))) AS sh
+       |  FROM (SELECT doc_id, $toksSql AS toks FROM documents)),
+       |ev AS (SELECT DISTINCT unnest(sh) AS s FROM docs WHERE doc_id < 10),
+       |inv AS (SELECT doc_id, unnest(sh) AS s FROM docs)""".stripMargin
+
+  /** (doc_id, payload): document text as binary media payloads. */
+  private def docPayloads(s: SparkSession, d: String): DataFrame =
+    docs(s, d).select(col("doc_id"), col("text").cast("binary").as("payload"))
+
+  /** The committed tiny.png and tiny.wav as (file, payload). */
+  private def mediaFixtures(s: SparkSession): DataFrame = {
+    import s.implicits._
+    Seq("tiny.png", "tiny.wav").map { f =>
+      (f, java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$fixtureDir/$f")))
+    }.toDF("file", "payload")
+  }
+
+  /** (key, doc_id, q): per-doc quality score keyed by `key`. */
+  private def docQuality(s: SparkSession, d: String, key: Column): DataFrame =
+    docs(s, d).select(key, col("doc_id"), TF.qualityScore(col("text")).as("q"))
+
+  /** Quasi-identifiers of the privacy audits: (lang, source,
+    * len_bucket = n_chars % 10). */
+  private def quasiIds(s: SparkSession, d: String): DataFrame =
+    docs(s, d).withColumn("len_bucket", col("n_chars") % 10)
+      .select(col("lang"), col("source"), col("len_bucket"))
+
+  /** The OLAP gates' orders slice and measures (decimal revenue sum). */
+  private def olapOrders(s: SparkSession, d: String): DataFrame =
+    executor(s, d).table("orders")
+      .select(col("o_orderpriority"), col("o_orderstatus"), col("o_totalprice"))
+  private def olapMeasures: Seq[Column] = Seq(count(lit(1)).as("n"),
+    sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("rev"))
+  private val olapSelectSql = "SELECT o_orderpriority, o_orderstatus, " +
+    "CAST(GROUPING(o_orderpriority, o_orderstatus) AS BIGINT) AS gid, " +
+    "count(*) AS n, CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS rev"
+
+  /** events (event_id, user_id, `mid`…, value). */
+  private def eventValues(s: SparkSession, d: String, mid: Column*): DataFrame =
+    executor(s, d).table("events")
+      .select(col("event_id") +: col("user_id") +: mid :+ col("value"): _*)
 
   /** Subject table for the survival gates: one row per user with
     * duration = whole days (µs delta DIV 86400000000 — exact integer
@@ -94,25 +553,20 @@ object SparkEntry {
     * censored at the last observed event when the user never purchases;
     * grouped by user-id parity so the two curves are comparable. */
   private def survivalSubjects(events: DataFrame): DataFrame =
-    events
-      .groupBy(col("user_id"))
-      .agg(
-        min(epochMicros(col("ts"))).as("t0"),
-        min(when(col("event_type") === "purchase", epochMicros(col("ts"))))
-          .as("tp"),
-        max(epochMicros(col("ts"))).as("tmax"))
-      .select(
-        when(col("user_id") % 2 === 0, lit("even")).otherwise(lit("odd"))
-          .as("grp0"),
-        expr("CAST((coalesce(tp, tmax) - t0) DIV 86400000000 AS DOUBLE)")
-          .as("dur"),
-        col("tp").isNotNull.as("ev"))
+    survivalSubjectsWith(events,
+      expr("CAST((coalesce(tp, tmax) - t0) DIV 86400000000 AS DOUBLE)"))
 
   /** [[survivalSubjects]] with durations in fractional SECONDS
     * (µs delta / 10⁶, an exact double for deltas < 2⁵³ µs) — the
     * wide-range gate's continuous-duration shape: nearly every
     * subject is a distinct 6-dp event time. */
   private def survivalSubjectsSeconds(events: DataFrame): DataFrame =
+    survivalSubjectsWith(events,
+      (coalesce(col("tp"), col("tmax")) - col("t0")).cast("double")./(lit(1000000.0)))
+
+  /** Per-user first event t0, first purchase tp and last event tmax
+    * (µs) → (grp0, dur, ev), `dur` a column over t0/tp/tmax. */
+  private def survivalSubjectsWith(events: DataFrame, dur: Column): DataFrame =
     events
       .groupBy(col("user_id"))
       .agg(
@@ -123,8 +577,7 @@ object SparkEntry {
       .select(
         when(col("user_id") % 2 === 0, lit("even")).otherwise(lit("odd"))
           .as("grp0"),
-        (coalesce(col("tp"), col("tmax")) - col("t0")).cast("double")
-          ./(lit(1000000.0)).as("dur"),
+        dur.as("dur"),
         col("tp").isNotNull.as("ev"))
 
   /** Shared shape of the basket gates: baskets = users, items = the
@@ -152,37 +605,33 @@ object SparkEntry {
     * score = 37·doc_id mod 101 scaled to [0, 1] plus a 0.15 bump for
     * English docs (ties + class separation), label = lang = 'en'. */
   private def scoredDocs(s: SparkSession, d: String): DataFrame =
-    docs(s, d).select(
-      round((col("doc_id") * 37 % 101).cast("double") / lit(100.0) +
-        when(col("lang") === "en", lit(0.15)).otherwise(lit(0.0)), 6)
-        .as("score"),
-      (col("lang") === "en").as("label"))
+    docs(s, d).select(docScore.as("score"), (col("lang") === "en").as("label"))
 
   /** Deterministic pairwise-comparison stream for the arena gates:
     * each event pits item `event_id % 7` against `(event_id div 7) % 7`
     * (self-matches dropped); the lower-numbered item wins unless
     * `event_id % 3 == 0` (a 1-in-3 upset), so strengths decrease in
     * item id with every matchup observed both ways. */
-  private def arenaComparisons(s: SparkSession, d: String): DataFrame = {
-    val base = executor(s, d).table("events")
-      .select(col("event_id"), (col("event_id") % 7).as("a"),
-        (expr("event_id div 7") % 7).as("b"))
-      .filter(col("a") =!= col("b"))
-    base.select(
+  private def arenaComparisons(s: SparkSession, d: String): DataFrame =
+    arenaPairs(s, d).select(
       when(col("event_id") % 3 > 0, least(col("a"), col("b")))
         .otherwise(greatest(col("a"), col("b"))).as("w"),
       when(col("event_id") % 3 > 0, greatest(col("a"), col("b")))
         .otherwise(least(col("a"), col("b"))).as("l"))
-  }
+
+  /** The arena gates' matchups: event `event_id` pits item a =
+    * event_id % 7 against b = (event_id div 7) % 7, self-matches dropped. */
+  private def arenaPairs(s: SparkSession, d: String): DataFrame =
+    executor(s, d).table("events")
+      .select(col("event_id"), (col("event_id") % 7).as("a"),
+        (expr("event_id div 7") % 7).as("b"))
+      .filter(col("a") =!= col("b"))
 
   /** Tie-aware arena stream: `(a, b, outcome)` with outcome for side a
     * — 0.5 (tie) when `event_id % 6 == 0`, else side a wins 2 of 3
     * (`event_id % 3 > 0`), b the rest. */
   private def arenaTies(s: SparkSession, d: String): DataFrame =
-    executor(s, d).table("events")
-      .select(col("event_id"), (col("event_id") % 7).as("a"),
-        (expr("event_id div 7") % 7).as("b"))
-      .filter(col("a") =!= col("b"))
+    arenaPairs(s, d)
       .select(col("a"), col("b"),
         when(col("event_id") % 6 === 0, lit(0.5))
           .when(col("event_id") % 3 > 0, lit(1.0))
@@ -215,9 +664,26 @@ object SparkEntry {
     val base = docs(spark, dir).select(col("doc_id").as("id"),
       (((col("doc_id") * lit(2654435761L)) % lit(2147483647L)) * lit(4294967296L) +
         (col("doc_id") * lit(40503L)) % lit(2147483647L)).as("fp"))
-    base.unionByName(base.select((col("id") + lit(1000000L)).as("id"),
+    base.unionByName(base.select((col("id") + lit(TwinShift)).as("id"),
       col("fp").bitwiseXOR(lit(5L)).as("fp")))
   }
+
+  /** Sorted-neighborhood pairs (window 3) of `table` blocked on the
+    * `blkLen`-char prefix of `key`: (id_a, id_b, dist) plus `extra`
+    * columns over the ranked sides a, b — Dedup.sortedNeighborhoodPairs'
+    * mirror as a rank-difference self-join. */
+  private def sortedNeighborsSql(table: String, id: String, key: String,
+                                 blkLen: Int, extra: String): String =
+    s"""WITH ranked AS (
+       |  SELECT $id AS id, $key AS k, substr($key, 1, $blkLen) AS blk,
+       |    row_number() OVER (PARTITION BY substr($key, 1, $blkLen)
+       |                       ORDER BY $key, $id) AS rnk
+       |  FROM $table)
+       |SELECT a.id AS id_a, b.id AS id_b,
+       |  CAST(b.rnk - a.rnk AS INTEGER) AS dist$extra
+       |FROM ranked a JOIN ranked b
+       |  ON a.blk = b.blk AND b.rnk > a.rnk AND b.rnk - a.rnk <= 2
+       |ORDER BY id_a, id_b""".stripMargin
 
   /** Mixed JSON/prose corpus for the structured-data gate: even ids get
     * a concat-constructed JSON object (identical string on the DuckDB
@@ -694,10 +1160,7 @@ object SparkEntry {
     // Duplication report over docs ∪ exact twins (known 50% dup mass):
     // the decide-before-you-dedup audit numbers.
     "q_dedup_report" -> ((s, d) => {
-      val d0 = docs(s, d).select(col("doc_id"), col("text"))
-      val twins = d0.select((col("doc_id") + lit(1000000L)).as("doc_id"),
-        col("text"))
-      Dedup.duplicationReport(d0.unionByName(twins), "doc_id", "text")
+      Dedup.duplicationReport(docsWithTwins(s, d), "doc_id", "text")
     }),
 
     // Exact-dup group digest (md5 matches DuckDB's md5 for the oracle).
@@ -716,9 +1179,7 @@ object SparkEntry {
     // string-shingle oracle finds the same pairs; hash collisions aside,
     // set equality is representation-independent).
     "q_dedup_minhash_exact" -> ((s, d) => {
-      val d0 = docs(s, d).select(col("doc_id"), col("text"))
-      val twins = d0.select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text"))
-      Dedup.minhashPairs(d0.unionByName(twins), "doc_id", "text",
+      Dedup.minhashPairs(docsWithTwins(s, d), "doc_id", "text",
         shingleN = 3, numHashes = 64, bands = 16, threshold = 1.0)
         .orderBy("id_a", "id_b")
     }),
@@ -735,10 +1196,8 @@ object SparkEntry {
     // near-dups whose counter signs all agree) stay out of the oracle'd
     // set; the probabilistic surface remains q_dedup_simhash (rows-only).
     "q_dedup_simhash_twins" -> ((s, d) => {
-      val d0 = docs(s, d).select(col("doc_id"), col("text"))
-      val twins = d0.select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text"))
-      Dedup.simhashPairs(d0.unionByName(twins), "doc_id", "text", maxHamming = 0)
-        .filter(col("id_b") === col("id_a") + 1000000L)
+      Dedup.simhashPairs(docsWithTwins(s, d), "doc_id", "text", maxHamming = 0)
+        .filter(col("id_b") === col("id_a") + TwinShift)
         .orderBy("id_a")
     }),
 
@@ -798,10 +1257,8 @@ object SparkEntry {
     // (UPPER + trailing ' !!'): every twin normalizes to its original's
     // key, so survivors = the min-id representative per normalized text.
     "q_dedup_normalized" -> ((s, d) => {
-      val d0 = docs(s, d).select(col("doc_id"), col("text"))
-      val twins = d0.select((col("doc_id") + lit(1000000L)).as("doc_id"),
-        concat(upper(col("text")), lit(" !!")).as("text"))
-      Dedup.exactDedupNormalized(d0.unionByName(twins), "doc_id", "text")
+      Dedup.exactDedupNormalized(docsWithTwins(s, d,
+          concat(upper(col("text")), lit(" !!")).as("text")), "doc_id", "text")
         .select(col("doc_id"))
         .orderBy("doc_id")
     }),
@@ -815,7 +1272,7 @@ object SparkEntry {
     "q_dedup_incremental" -> ((s, d) => {
       val history = docs(s, d).select(col("doc_id"), col("text"))
       val copies = history.filter(col("doc_id") < 50)
-      val edited = copies.select((col("doc_id") + lit(1000000L)).as("doc_id"),
+      val edited = copies.select((col("doc_id") + lit(TwinShift)).as("doc_id"),
         concat(col("text"), lit(" revised edition")).as("text"))
       Dedup.incrementalDedup(copies.unionByName(edited), history,
         "doc_id", "text", expectedHistoryItems = 10000L)
@@ -830,11 +1287,9 @@ object SparkEntry {
     // deterministically reach estimate 1.0 with probability j^k — those
     // stay out of the oracle'd set, cf. q_dedup_simhash_twins).
     "q_dedup_minhash_estimate" -> ((s, d) => {
-      val d0 = docs(s, d).select(col("doc_id"), col("text"))
-      val twins = d0.select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text"))
-      Dedup.minhashPairsEstimated(d0.unionByName(twins), "doc_id", "text",
+      Dedup.minhashPairsEstimated(docsWithTwins(s, d), "doc_id", "text",
         shingleN = 3, numHashes = 64, bands = 16, threshold = 1.0)
-        .filter(col("id_b") === col("id_a") + 1000000L)
+        .filter(col("id_b") === col("id_a") + TwinShift)
         .orderBy("id_a")
     }),
 
@@ -877,28 +1332,14 @@ object SparkEntry {
     // Gates the iterative min-label-propagation loop (the pairs→clusters
     // step of dedup) with a closed-form answer.
     "q_dedup_components" -> ((s, d) => {
-      val d0 = docs(s, d).select(col("doc_id"), col("text"))
-      val twins = d0.select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text"))
-      val keyed = d0.unionByName(twins).withColumn("__digest", md5(col("text")))
-      val pairs = keyed.as("a").join(keyed.as("b"),
-          col("a.__digest") === col("b.__digest") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      Dedup.connectedComponents(pairs).orderBy("id")
+      Dedup.connectedComponents(exactDupPairs(s, d)).orderBy("id")
     }),
 
     // Same pair graph through the O(log d) alternating star-contraction
     // algorithm (Kiveris SoCC'14) — pins that the two CC algorithms are
     // interchangeable on the same closed-form oracle.
     "q_dedup_components_star" -> ((s, d) => {
-      val d0 = docs(s, d).select(col("doc_id"), col("text"))
-      val twins = d0.select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text"))
-      val keyed = d0.unionByName(twins).withColumn("__digest", md5(col("text")))
-      val pairs = keyed.as("a").join(keyed.as("b"),
-          col("a.__digest") === col("b.__digest") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      Dedup.connectedComponentsStar(pairs).orderBy("id")
+      Dedup.connectedComponentsStar(exactDupPairs(s, d)).orderBy("id")
     }),
 
     // Adversarial-diameter CC: a PATH over all doc_ids (doc k ↔ next id
@@ -908,7 +1349,7 @@ object SparkEntry {
     // one component labeled by the global minimum id. (The window chain
     // builder is test scaffolding, not the operator under test.)
     "q_dedup_components_chain" -> ((s, d) => {
-      val ids = docs(s, d).select(col("doc_id"))
+      val ids = docIds(s, d)
       // bounded-window: test-scaffold — gate-local diameter-chain fixture builder, documented non-production
       val w = org.apache.spark.sql.expressions.Window.orderBy("doc_id")
       val pairs = ids
@@ -971,8 +1412,7 @@ object SparkEntry {
     // full corpus vs the even-id half — Centroids ∘ Drift composition
     // (an embedding-space shift shows up here before any label flips).
     "q_drift_embedding" -> ((s, d) => {
-      val e = embeddings(s, d).select(col("vec_id"), col("label"),
-        VF.asDouble(col("embedding")).as("v"))
+      val e = labeledVecs(s, d)
       val scored = graft.operators.Centroids.cosineToCentroid(e, "vec_id", "v", "label")
       graft.operators.Drift.numericJs(
         scored.select(col("vec_id"), col("cosine")),
@@ -1023,7 +1463,7 @@ object SparkEntry {
     // global window).
     "q_shuffle" -> ((s, d) =>
       graft.operators.Sample.deterministicShuffle(
-          docs(s, d).select(col("doc_id")), "doc_id", seed = "graft")
+          docIds(s, d), "doc_id", seed = "graft")
         .select(col("pos"), col("doc_id"))
         .orderBy("pos")),
 
@@ -1033,7 +1473,7 @@ object SparkEntry {
     // no cross join).
     "q_sample_negatives" -> ((s, d) =>
       graft.operators.Sample.negativePairs(
-        docs(s, d).select(col("doc_id")), "doc_id", k = 3)
+        docIds(s, d), "doc_id", k = 3)
         .orderBy("anchor_id", "neg_idx")),
 
     // HARD negative mining: each probe's top retrieval candidates with
@@ -1137,11 +1577,9 @@ object SparkEntry {
     // testdata doc has ≥ 8 positional 3-grams, so no fingerprint set is
     // empty and the oracle is exactly one row per doc.
     "q_dedup_winnow_twins" -> ((s, d) => {
-      val d0 = docs(s, d).select(col("doc_id"), col("text"))
-      val twins = d0.select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text"))
-      Dedup.winnowJaccardPairs(d0.unionByName(twins), "doc_id", "text",
+      Dedup.winnowJaccardPairs(docsWithTwins(s, d), "doc_id", "text",
         k = 3, w = 4, threshold = 1.0)
-        .filter(col("id_b") === col("id_a") + 1000000L)
+        .filter(col("id_b") === col("id_a") + TwinShift)
         .orderBy("id_a")
     }),
 
@@ -1221,8 +1659,7 @@ object SparkEntry {
     // a media magic sequence (asserted against the oracle's own check).
     "q_multimodal_meta" -> ((s, d) => {
       import graft.operators.Multimodal
-      val payloads = docs(s, d).select(col("doc_id"), col("text").cast("binary").as("payload"))
-      Multimodal.withMetadata(payloads, "payload")
+      Multimodal.withMetadata(docPayloads(s, d), "payload")
         .select(col("doc_id"), col("meta.mime").as("mime"), col("meta.n_bytes").as("n_bytes"))
     }),
 
@@ -1234,12 +1671,7 @@ object SparkEntry {
     // VALUES oracle.
     "q_multimodal_decode_real" -> ((s, _) => {
       import graft.operators.Multimodal
-      val rows = Seq("tiny.png", "tiny.wav").map { f =>
-        (f, java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(s"$fixtureDir/$f")))
-      }
-      import s.implicits._
-      val meta = Multimodal.withMetadata(rows.toDF("file", "payload"), "payload")
+      val meta = Multimodal.withMetadata(mediaFixtures(s), "payload")
       Multimodal.decodeFeatures(meta, "payload")
         .select(col("file"), col("meta.mime").as("mime"),
           col("feat.width").as("width"), col("feat.height").as("height"),
@@ -1252,12 +1684,7 @@ object SparkEntry {
     // WAV is not an image → NULL.
     "q_multimodal_phash" -> ((s, _) => {
       import graft.operators.Multimodal
-      val rows = Seq("tiny.png", "tiny.wav").map { f =>
-        (f, java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(s"$fixtureDir/$f")))
-      }
-      import s.implicits._
-      Multimodal.imagePhash(rows.toDF("file", "payload"), "payload")
+      Multimodal.imagePhash(mediaFixtures(s), "payload")
         .select(col("file"), col("phash"))
         .orderBy("file")
     }),
@@ -1281,8 +1708,7 @@ object SparkEntry {
     // ImageIO rejects text bytes → deterministic stub features).
     "q_multimodal_decode" -> ((s, d) => {
       import graft.operators.Multimodal
-      val payloads = docs(s, d).select(col("doc_id"), col("text").cast("binary").as("payload"))
-      Multimodal.decodeFeatures(payloads, "payload")
+      Multimodal.decodeFeatures(docPayloads(s, d), "payload")
         .select(col("doc_id"), col("feat.width").as("width"),
           col("feat.height").as("height"), col("feat.channels").as("channels"))
     }),
@@ -1312,14 +1738,12 @@ object SparkEntry {
     // xxhash64. Case perturbation is deliberately excluded (lower∘upper
     // is not identity for ß/Turkish-i classes).
     "q_text_fingerprint_twins" -> ((s, d) => {
-      val d0 = docs(s, d).select(col("doc_id"), col("text"))
-      val twins = d0.select((col("doc_id") + lit(1000000L)).as("doc_id"),
-        concat(lit("  "), regexp_replace(col("text"), " ", "  "), lit(" ")).as("text"))
-      val fps = d0.unionByName(twins)
+      val fps = docsWithTwins(s, d,
+          concat(lit("  "), regexp_replace(col("text"), " ", "  "), lit(" ")).as("text"))
         .select(col("doc_id"), TF.contentFingerprint(col("text")).as("fp"))
       fps.as("a").join(fps.as("b"),
           col("a.fp") === col("b.fp") &&
-            col("b.doc_id") === col("a.doc_id") + lit(1000000L))
+            col("b.doc_id") === col("a.doc_id") + lit(TwinShift))
         .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
         .orderBy("id_a")
     }),
@@ -1373,12 +1797,12 @@ object SparkEntry {
               size(array_except(array_sort(col("fph")), array_sort(col("fp")))) === 0)
             .as("matches_spec"))
       val twin = d0
-        .select((col("doc_id") + lit(1000000L)).as("tid"), col("text"))
+        .select((col("doc_id") + lit(TwinShift)).as("tid"), col("text"))
         .select(col("tid"), TF.winnowedFingerprints(col("text")).as("tfp"))
         .select(col("tid"),
           size(col("tfp")).as("t_n_fp"),
           xxhash64(col("tfp")).as("t_dig"))
-      sig.join(twin, col("tid") === col("doc_id") + lit(1000000L))
+      sig.join(twin, col("tid") === col("doc_id") + lit(TwinShift))
         .select(col("doc_id"),
           (col("n_fp") === col("t_n_fp")).as("same_count"),
           (col("dig") === col("t_dig")).as("same_digest"),
@@ -1453,8 +1877,7 @@ object SparkEntry {
     // under the 0.95 threshold) → the flagged set is exactly the sampled
     // originals, each matching its own eval twin — closed-form oracle.
     "q_decontaminate_semantic" -> ((s, d) => {
-      val e = embeddings(s, d).select(col("vec_id"),
-        VF.asDouble(col("embedding")).as("v"))
+      val e = vecs(s, d)
       val eval_ = e.filter(col("vec_id") % 20 === 0)
         .select(col("vec_id").as("eval_id"),
           transform(col("v"), x => x * lit(3.0)).as("ev"))
@@ -1488,10 +1911,10 @@ object SparkEntry {
       val path = exportDir(s, "graft_minhash_index")
       Dedup.saveMinhashIndex(d0, "doc_id", "text", path,
         shingleN = 3, numHashes = 64, bands = 16)
-      val probes = d0.select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text"))
+      val probes = d0.select((col("doc_id") + lit(TwinShift)).as("doc_id"), col("text"))
       Dedup.minhashPairsAgainstIndex(probes, "doc_id", "text", path,
           shingleN = 3, numHashes = 64, bands = 16, threshold = 1.0)
-        .filter(col("id_new") === col("id_hist") + 1000000L)
+        .filter(col("id_new") === col("id_hist") + TwinShift)
         .orderBy("id_hist")
     }),
 
@@ -1521,8 +1944,7 @@ object SparkEntry {
     // margin-gated — a single map-side-combined aggregate per group.
     "q_pref_pairs" -> ((s, d) =>
       graft.operators.Preference.pairs(
-          docs(s, d).select(col("lang").as("group"), col("doc_id"),
-            TF.qualityScore(col("text")).as("q")),
+          docQuality(s, d, col("lang").as("group")),
           "group", "doc_id", "q", minMargin = 0.05)
         .withColumnRenamed("group", "lang")
         .orderBy("lang")),
@@ -1531,8 +1953,7 @@ object SparkEntry {
     // window variant (non-crossing ranks, so no candidate double-sides).
     "q_pref_topk" -> ((s, d) =>
       graft.operators.Preference.topBottomPairs(
-          docs(s, d).select(col("lang").as("group"), col("doc_id"),
-            TF.qualityScore(col("text")).as("q")),
+          docQuality(s, d, col("lang").as("group")),
           "group", "doc_id", "q", k = 3, minMargin = 0.0)
         .withColumnRenamed("group", "lang")
         .orderBy("lang", "rank")),
@@ -1626,8 +2047,7 @@ object SparkEntry {
     // broadcast centroids, argmax per vector (relabeling/confusion pass).
     "q_cluster_assign" -> ((s, d) =>
       graft.operators.Centroids.assignNearest(
-          embeddings(s, d).select(col("vec_id"), col("label"),
-            VF.asDouble(col("embedding")).as("v")),
+          labeledVecs(s, d),
           "vec_id", "v", "label")
         .orderBy("vec_id")),
 
@@ -1636,8 +2056,7 @@ object SparkEntry {
     // the same iterations; 6-dp-rounded cosines + decimal per-dim means
     // make every intermediate assignment engine-exact.
     "q_cluster_lloyd" -> ((s, d) => {
-      val e = embeddings(s, d)
-        .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"))
+      val e = vecs(s, d)
       val seeds = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("label"), col("v").as("centroid"))
       graft.operators.Centroids.lloyd(e, "vec_id", "v", seeds, iterations = 2)
@@ -1692,9 +2111,7 @@ object SparkEntry {
     // candidate pipeline with a closed-form oracle.
     "q_ann_lsh_twin" -> ((s, d) => {
       val (e, probes) = annInputs(s, d)
-      val twins = e.select((col("vec_id") + lit(1000000L)).as("vec_id"),
-        transform(col("v"), x => x * lit(2.0)).as("v"))
-      Ann.lshTopK(e.unionByName(twins), "vec_id", "v", probes, "query_id", "qv",
+      Ann.lshTopK(withVecTwins(e), "vec_id", "v", probes, "query_id", "qv",
         k = 1, bands = 16, bandBits = 8)
     }),
 
@@ -1703,9 +2120,7 @@ object SparkEntry {
     // it and rank 1 is the twin — closed-form oracle for the IVF path.
     "q_ann_ivf_twin" -> ((s, d) => {
       val (e, probes) = annInputs(s, d)
-      val twins = e.select((col("vec_id") + lit(1000000L)).as("vec_id"),
-        transform(col("v"), x => x * lit(2.0)).as("v"))
-      Ann.ivfTopK(e.unionByName(twins), "vec_id", "v", probes, "query_id", "qv",
+      Ann.ivfTopK(withVecTwins(e), "vec_id", "v", probes, "query_id", "qv",
         k = 1, nCentroids = 16, nProbe = 2)
     }),
 
@@ -1717,9 +2132,7 @@ object SparkEntry {
     // lets a probe batch prune to its nProbe cell directories.
     "q_ann_ivf_persisted" -> ((s, d) => {
       val (e, probes) = annInputs(s, d)
-      val twins = e.select((col("vec_id") + lit(1000000L)).as("vec_id"),
-        transform(col("v"), x => x * lit(2.0)).as("v"))
-      val idx = Ann.ivfIndex(e.unionByName(twins), "vec_id", "v",
+      val idx = Ann.ivfIndex(withVecTwins(e), "vec_id", "v",
         nCentroids = 16)
       val path = System.getProperty("java.io.tmpdir") +
         "/graft_ivf_gate_" + new java.io.File(d).getName
@@ -1742,9 +2155,7 @@ object SparkEntry {
         "/graft_ivf_append_" + new java.io.File(d).getName
       // save overwrites the assigned dir, so the append stays idempotent
       Ann.saveIvfIndex(idx, path)
-      val twins = e.select((col("vec_id") + lit(1000000L)).as("vec_id"),
-        transform(col("v"), x => x * lit(2.0)).as("v"))
-      Ann.appendToIvfIndex(s, path, twins, "v")
+      Ann.appendToIvfIndex(s, path, vecTwins(e), "v")
       val loaded = Ann.loadIvfIndex(s, path)
       Ann.ivfSearch(loaded, "vec_id", "v", probes, "query_id", "qv",
         k = 1, nProbe = 2)
@@ -1759,9 +2170,7 @@ object SparkEntry {
     // in StreamingAnnCrossCheckSpec.
     "q_ann_ivf_stream" -> ((s, d) => {
       val (e, probes) = annInputs(s, d)
-      val twins = e.select((col("vec_id") + lit(1000000L)).as("vec_id"),
-        transform(col("v"), x => x * lit(2.0)).as("v"))
-      val idx = Ann.ivfIndex(e.unionByName(twins), "vec_id", "v",
+      val idx = Ann.ivfIndex(withVecTwins(e), "vec_id", "v",
         nCentroids = 16)
       Ann.topK(Ann.ivfSearchStream(idx, "vec_id", "v",
         probes, "query_id", "qv", nProbe = 2), 1)
@@ -1778,10 +2187,8 @@ object SparkEntry {
     // ~0.6, so the result is exactly the N twin pairs — which makes this
     // LSH path fully DuckDB-oracle-checkable instead of rows-only.
     "q_dedup_embed" -> ((s, d) => {
-      val e = embeddings(s, d).select(col("vec_id"), VF.asDouble(col("embedding")).as("v"))
-      val twins = e.select((col("vec_id") + lit(1000000L)).as("vec_id"),
-        transform(col("v"), x => x * lit(2.0)).as("v"))
-      Ann.cosineNearDupPairs(e.unionByName(twins), "vec_id", "v",
+      val e = vecs(s, d)
+      Ann.cosineNearDupPairs(withVecTwins(e), "vec_id", "v",
         threshold = 0.9, bands = 8, bandBits = 16)
         .orderBy("id_a", "id_b")
     }),
@@ -1936,30 +2343,22 @@ object SparkEntry {
     // Normalized compression distance of each doc against its successor
     // — the tokenizer-free similarity. Rows-only (zlib-versioned, like
     // q_quality_compress); the oracle-green surface is the twin below.
-    "q_text_ncd" -> ((s, d) => {
-      val ds = docs(s, d)
-      ds.select(col("doc_id").as("id"), col("text").as("a"))
-        .join(ds.select((col("doc_id") - 1).as("id"), col("text").as("b")),
-          Seq("id"))
+    "q_text_ncd" -> ((s, d) =>
+      nextDocPairs(docs(s, d))
         .select(col("id"), TF.ncd(col("a"), col("b")).as("ncd"))
-        .orderBy("id")
-    }),
+        .orderBy("id")),
 
     // NCD structural twins (zlib guarantees, engine-independent): the
     // self-distance beats the distance to a different document, and
     // both land in the sane [0, 1.25] band.
-    "q_text_ncd_twins" -> ((s, d) => {
-      val ds = docs(s, d).filter(col("n_chars") >= 64)
-      ds.select(col("doc_id").as("id"), col("text").as("a"))
-        .join(ds.select((col("doc_id") - 1).as("id"), col("text").as("b")),
-          Seq("id"))
+    "q_text_ncd_twins" -> ((s, d) =>
+      nextDocPairs(docs(s, d).filter(col("n_chars") >= 64))
         .select(col("id"),
           (TF.ncd(col("a"), col("a")) < TF.ncd(col("a"), col("b")))
             .as("self_beats_cross"),
           (TF.ncd(col("a"), col("b")) >= 0.0 &&
             TF.ncd(col("a"), col("b")) <= 1.25).as("in_band"))
-        .orderBy("id")
-    }),
+        .orderBy("id")),
 
     // PII detect + redact over a deterministically PII-injected corpus
     // (2/3 of docs get a synthetic email/SSN/phone/IP suffix built from
@@ -1967,12 +2366,7 @@ object SparkEntry {
     // the redacted string are oracle-checked exactly).
     "q_pii_redact" -> ((s, d) => {
       import graft.operators.Pii
-      val injected = docs(s, d).select(col("doc_id"),
-        when(col("doc_id") % 3 =!= 0,
-          concat(col("text"), lit(" reach user"), col("doc_id").cast("string"),
-            lit("@example.com or 10."), (col("doc_id") % 200).cast("string"),
-            lit(".0.1 ssn 123-45-6789 tel 555-123-4567")))
-          .otherwise(col("text")).as("text"))
+      val injected = piiInjected(s, d)
       Pii.detect(injected, "doc_id", "text")
         .join(Pii.redact(injected, "doc_id", "text")
           .withColumnRenamed("text", "redacted"), "doc_id")
@@ -2064,8 +2458,7 @@ object SparkEntry {
     // same (score desc, id asc) selection as the window form.
     "q_sample_topk_heap" -> ((s, d) =>
       graft.operators.Sample.topPerKeyHeap(
-          docs(s, d).select(col("lang"), col("doc_id"),
-            TF.qualityScore(col("text")).as("q")),
+          docQuality(s, d, col("lang")),
           "lang", "q", k = 5, idCol = "doc_id")
         .orderBy("lang", "doc_id")),
 
@@ -2084,33 +2477,27 @@ object SparkEntry {
     // GROUPING(). Decimal sums per the float-determinism policy.
     "q_olap_rollup" -> ((s, d) =>
       graft.operators.Olap.rollupAgg(
-        executor(s, d).table("orders")
-          .select(col("o_orderpriority"), col("o_orderstatus"), col("o_totalprice")),
+        olapOrders(s, d),
         Seq("o_orderpriority", "o_orderstatus"),
-        Seq(count(lit(1)).as("n"),
-          sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("rev")))),
+        olapMeasures)),
 
     // Full CUBE lattice over the same shape (2^n grouping sets in one
     // aggregation), vs SQL-standard GROUP BY CUBE.
     "q_olap_cube" -> ((s, d) =>
       graft.operators.Olap.cubeAgg(
-        executor(s, d).table("orders")
-          .select(col("o_orderpriority"), col("o_orderstatus"), col("o_totalprice")),
+        olapOrders(s, d),
         Seq("o_orderpriority", "o_orderstatus"),
-        Seq(count(lit(1)).as("n"),
-          sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("rev")))),
+        olapMeasures)),
 
     // Explicit GROUPING SETS — ((priority), (status)): two INDEPENDENT
     // one-dimensional subtotal slices with no cross product, a lattice
     // ROLLUP/CUBE can't express; same single-shuffle map-side expansion.
     "q_olap_grouping_sets" -> ((s, d) =>
       graft.operators.Olap.groupingSetsAgg(
-        executor(s, d).table("orders")
-          .select(col("o_orderpriority"), col("o_orderstatus"), col("o_totalprice")),
+        olapOrders(s, d),
         Seq(Seq("o_orderpriority"), Seq("o_orderstatus")),
         Seq("o_orderpriority", "o_orderstatus"),
-        Seq(count(lit(1)).as("n"),
-          sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("rev")))),
+        olapMeasures)),
 
     // Count matrix (day × event_type): explicit pivot domain — no
     // domain-discovery scan — and 0-filled empty cells, vs DuckDB
@@ -2185,8 +2572,7 @@ object SparkEntry {
     // small enough that violations exist at every SF.
     "q_pii_kanon" -> ((s, d) =>
       graft.operators.Pii.kAnonymityViolations(
-          docs(s, d).withColumn("len_bucket", col("n_chars") % 10)
-            .select(col("lang"), col("source"), col("len_bucket")),
+          quasiIds(s, d),
           Seq("lang", "source", "len_bucket"), k = 4)
         .orderBy(col("lang").asc_nulls_last, col("source").asc_nulls_last,
           col("len_bucket").asc_nulls_last)),
@@ -2196,8 +2582,7 @@ object SparkEntry {
     // q_pii_kanon.
     "q_pii_ldiv" -> ((s, d) =>
       graft.operators.Pii.lDiversityViolations(
-          docs(s, d).withColumn("len_bucket", col("n_chars") % 10)
-            .select(col("lang"), col("source"), col("len_bucket")),
+          quasiIds(s, d),
           Seq("lang", "source"), "len_bucket", l = 10)
         .orderBy(col("lang").asc_nulls_last, col("source").asc_nulls_last)),
 
@@ -2214,8 +2599,7 @@ object SparkEntry {
     // sliding add/remove evaluator).
     "q_rolling_window" -> ((s, d) =>
       graft.operators.Rolling.trailingAgg(
-        executor(s, d).table("events")
-          .select(col("event_id"), col("user_id"), col("ts"), col("value")),
+        eventValues(s, d, col("ts")),
         "user_id", "ts", "value", windowSeconds = 3600L)
         .select(col("event_id"), col("n_window"), col("sum_window"))),
 
@@ -2225,8 +2609,7 @@ object SparkEntry {
     // built on float avg/stddev.
     "q_anomaly_zscore" -> ((s, d) =>
       graft.operators.Profile.zscoreFlags(
-        executor(s, d).table("events")
-          .select(col("event_id"), col("user_id"), col("value")),
+        eventValues(s, d),
         "user_id", "value", threshold = 2.0)
         .select(col("event_id"), col("z"), col("is_outlier"))),
 
@@ -2235,8 +2618,7 @@ object SparkEntry {
     // clipping is engine-exact (no interpolated float thresholds).
     "q_clip_winsorize" -> ((s, d) =>
       graft.operators.Profile.winsorize(
-        executor(s, d).table("events")
-          .select(col("event_id"), col("user_id"), col("value")),
+        eventValues(s, d),
         "user_id", "value", pLo = 0.05, pHi = 0.95)
         .select(col("event_id"), col("value_clipped"), col("was_clipped"))),
 
@@ -2245,8 +2627,7 @@ object SparkEntry {
     // survive), deterministic kept set, (key, bucket) shuffle.
     "q_sample_rate_limit" -> ((s, d) =>
       graft.operators.Sample.rateLimit(
-        executor(s, d).table("events")
-          .select(col("event_id"), col("user_id"), col("ts"), col("value")),
+        eventValues(s, d, col("ts")),
         "user_id", "ts", "event_id", windowSeconds = 604800L, maxPerWindow = 3)
         .select(col("event_id"), col("user_id"), col("value"))
         .orderBy("event_id")),
@@ -2257,8 +2638,7 @@ object SparkEntry {
     // no arithmetic, so it hash-matches).
     "q_window_nav" -> ((s, d) =>
       graft.operators.Rolling.keyedNav(
-        executor(s, d).table("events")
-          .select(col("event_id"), col("user_id"), col("ts"), col("value")),
+        eventValues(s, d, col("ts")),
         "user_id", "ts", "event_id", "value")
         .select(col("event_id"), col("user_id"), col("rn"),
           col("gap_micros"), col("next_value"))),
@@ -2302,9 +2682,7 @@ object SparkEntry {
     // sharded so the cumulative window parallelizes (shards = independent
     // shuffle partitions); exact integer arithmetic → SQL oracle.
     "q_pack" -> ((s, d) => {
-      val toks = docs(s, d).select(col("doc_id"),
-        TF.tokenCount(col("text")).cast("long").as("n_tokens"))
-      graft.operators.Pack.packByTokenBudget(toks, "doc_id", "n_tokens",
+      graft.operators.Pack.packByTokenBudget(docTokens(s, d), "doc_id", "n_tokens",
         budget = 500L, shards = 8)
         .select(col("doc_id"), col("shard"), col("pack"), col("n_tokens"))
         .orderBy("doc_id")
@@ -2413,10 +2791,8 @@ object SparkEntry {
     // cosine exactly 1.0; no natural pair reaches 0.9 (testdata max
     // ~0.6), so the result is exactly the N twin pairs.
     "q_dedup_semantic_twins" -> ((s, d) => {
-      val e = embeddings(s, d).select(col("vec_id"), VF.asDouble(col("embedding")).as("v"))
-      val twins = e.select((col("vec_id") + lit(1000000L)).as("vec_id"),
-        transform(col("v"), x => x * lit(2.0)).as("v"))
-      graft.operators.SemDedup.semanticPairs(e.unionByName(twins), "vec_id", "v",
+      val e = vecs(s, d)
+      graft.operators.SemDedup.semanticPairs(withVecTwins(e), "vec_id", "v",
         threshold = 0.9, nCentroids = 16)
         .orderBy("id_a", "id_b")
     }),
@@ -2425,10 +2801,8 @@ object SparkEntry {
     // smaller-id near-dup (its original) and gets dropped; every original
     // survives (no natural pair ≥ 0.9) — survivors = the original ids.
     "q_dedup_semantic" -> ((s, d) => {
-      val e = embeddings(s, d).select(col("vec_id"), VF.asDouble(col("embedding")).as("v"))
-      val twins = e.select((col("vec_id") + lit(1000000L)).as("vec_id"),
-        transform(col("v"), x => x * lit(2.0)).as("v"))
-      graft.operators.SemDedup.dedup(e.unionByName(twins), "vec_id", "v",
+      val e = vecs(s, d)
+      graft.operators.SemDedup.dedup(withVecTwins(e), "vec_id", "v",
         threshold = 0.9, nCentroids = 16)
         .select(col("vec_id"))
         .orderBy("vec_id")
@@ -2472,10 +2846,8 @@ object SparkEntry {
     // BM25 top-k search for three fixed probe queries (mirrored in the
     // oracle's VALUES list).
     "q_search_bm25" -> ((s, d) => {
-      import s.implicits._
-      val q = Seq((1L, "spark"), (1L, "join"), (2L, "window"), (2L, "merge"),
-        (2L, "sort"), (3L, "customer")).toDF("query_id", "term")
-      graft.operators.Search.bm25TopK(docs(s, d), "doc_id", "text", q, k = 10)
+      graft.operators.Search.bm25TopK(docs(s, d), "doc_id", "text",
+          searchTerms(s), k = 10)
         .orderBy("query_id", "rank")
     }),
 
@@ -2485,15 +2857,9 @@ object SparkEntry {
     // doc_id), so the fusion exercises both-present and one-sided
     // candidates.
     "q_search_hybrid" -> ((s, d) => {
-      import s.implicits._
-      val q = Seq((1L, "spark"), (1L, "join"), (2L, "window"), (2L, "merge"),
-        (2L, "sort"), (3L, "customer")).toDF("query_id", "term")
-      val bm = graft.operators.Search.bm25TopK(docs(s, d), "doc_id", "text", q, k = 10)
-      val e = embeddings(s, d)
-        .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"))
-      val p = e.filter(col("vec_id").isin(1L, 2L, 3L))
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
-      val ann = graft.operators.Ann.bruteForceTopK(e, "vec_id", "v", p, "qid", "qv", k = 10)
+      val bm = graft.operators.Search.bm25TopK(docs(s, d), "doc_id", "text",
+        searchTerms(s), k = 10)
+      val ann = denseTop10(s, d)
         .select(col("query_id"), col("rank"), col("vec_id").as("doc_id"))
       graft.operators.Search.rrfFuse(bm, ann, k = 10)
         .orderBy("query_id", "rank")
@@ -2536,15 +2902,9 @@ object SparkEntry {
     // q_search_hybrid fusion (same aligned ids: probe vec_id 1..3 ↔
     // query terms 1..3).
     "q_retrieval_eval" -> ((s, d) => {
-      import s.implicits._
-      val q = Seq((1L, "spark"), (1L, "join"), (2L, "window"), (2L, "merge"),
-        (2L, "sort"), (3L, "customer")).toDF("query_id", "term")
-      val bm = graft.operators.Search.bm25TopK(docs(s, d), "doc_id", "text", q, k = 10)
-      val e = embeddings(s, d)
-        .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"))
-      val p = e.filter(col("vec_id").isin(1L, 2L, 3L))
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
-      val gold = Ann.bruteForceTopK(e, "vec_id", "v", p, "qid", "qv", k = 10)
+      val bm = graft.operators.Search.bm25TopK(docs(s, d), "doc_id", "text",
+        searchTerms(s), k = 10)
+      val gold = denseTop10(s, d)
         .select(col("query_id"), col("vec_id").as("doc_id"))
       graft.operators.Eval.rankedRetrieval(bm, gold,
           "query_id", "doc_id", "rank", k = 10)
@@ -2626,11 +2986,9 @@ object SparkEntry {
     // md5 and folds in the same sequential order.
     "q_embed_jl" -> ((s, d) =>
       graft.operators.Quantize.jlProject(
-          embeddings(s, d).select(col("vec_id"),
-            VF.asDouble(col("embedding")).as("v")),
+          vecs(s, d),
           "vec_id", "v", sourceDims = 64, targetDims = 16)
-        .select(col("vec_id"), posexplode(col("v")).as(Seq("__p", "value")))
-        .select(col("vec_id"), (col("__p") + 1).as("dim"), col("value"))
+        .transform(explodeDims)
         .orderBy("vec_id", "dim")),
 
     // Per-dimension embedding health: dead dims (variance ~ 0) and
@@ -2674,8 +3032,7 @@ object SparkEntry {
       graft.operators.Pca.removeComponent(
           embeddings(s, d).select(col("vec_id"), col("embedding")),
           "vec_id", "embedding", comp)
-        .select(col("vec_id"), posexplode(col("v")).as(Seq("__p", "value")))
-        .select(col("vec_id"), (col("__p") + 1).as("dim"), col("value"))
+        .transform(explodeDims)
         .orderBy("vec_id", "dim")
     }),
 
@@ -2686,8 +3043,7 @@ object SparkEntry {
       graft.operators.Pca.standardize(
           embeddings(s, d).select(col("vec_id"), col("embedding")),
           "vec_id", "embedding")
-        .select(col("vec_id"), posexplode(col("v")).as(Seq("__p", "value")))
-        .select(col("vec_id"), (col("__p") + 1).as("dim"), col("value"))
+        .transform(explodeDims)
         .orderBy("vec_id", "dim")),
 
     // Product quantization codes: 2 subspaces × 4 centroids fit with
@@ -2696,10 +3052,8 @@ object SparkEntry {
     // the oracle replays seed → assign → decimal-mean → assign exactly
     // (raw-double fold distances need no rounding — same IEEE order).
     "q_embed_pq_codes" -> ((s, d) => {
-      val e = embeddings(s, d).select(col("vec_id"),
-        VF.asDouble(col("embedding")).as("v"))
-      val cb = graft.operators.Pq.fit(e, "vec_id", "v",
-        subspaces = 2, k = 4, iterations = 1)
+      val e = vecs(s, d)
+      val cb = pqCodebook(e)
       graft.operators.Pq.encode(e, "vec_id", "v", cb)
         .select(col("vec_id"), posexplode(col("codes")).as(Seq("__s", "code")))
         .select(col("vec_id"), col("__s").as("subspace"), col("code"))
@@ -2710,10 +3064,8 @@ object SparkEntry {
     // number: per-vector L2 distance to the reconstruction, corpus
     // mean/max at 6 dp.
     "q_embed_pq_error" -> ((s, d) => {
-      val e = embeddings(s, d).select(col("vec_id"),
-        VF.asDouble(col("embedding")).as("v"))
-      val cb = graft.operators.Pq.fit(e, "vec_id", "v",
-        subspaces = 2, k = 4, iterations = 1)
+      val e = vecs(s, d)
+      val cb = pqCodebook(e)
       graft.operators.Pq.reconstructionError(e, "vec_id", "v", cb)
     }),
 
@@ -2722,13 +3074,9 @@ object SparkEntry {
     // scored with m table lookups (the codes corpus never materializes
     // a vector); top-3 by reconstruction dot.
     "q_ann_pq" -> ((s, d) => {
-      val e = embeddings(s, d).select(col("vec_id"),
-        VF.asDouble(col("embedding")).as("v"))
-      val cb = graft.operators.Pq.fit(e, "vec_id", "v",
-        subspaces = 2, k = 4, iterations = 1)
+      val (e, probes) = annInputs(s, d)
+      val cb = pqCodebook(e)
       val codes = graft.operators.Pq.encode(e, "vec_id", "v", cb)
-      val probes = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"))
       graft.operators.Pq.adcTopK(codes, "vec_id", "codes",
         probes, "query_id", "qv", cb, k = 3)
     }),
@@ -2739,12 +3087,9 @@ object SparkEntry {
     // exactly — the closed-form check that the cell tier subsets
     // without corrupting; nProbe < nCentroids subsetting is spec'd.
     "q_ann_ivfpq" -> ((s, d) => {
-      val e = embeddings(s, d).select(col("vec_id"),
-        VF.asDouble(col("embedding")).as("v"))
+      val (e, probes) = annInputs(s, d)
       val idx = Ann.ivfPqIndex(e, "vec_id", "v", nCentroids = 4,
         subspaces = 2, pqK = 4, lloydIter = 1, pqIter = 1)
-      val probes = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"))
       Ann.ivfPqSearch(idx, "vec_id", probes, "query_id", "qv",
         k = 3, nProbe = 4)
     }),
@@ -2754,17 +3099,13 @@ object SparkEntry {
     // exactly (same plain-ADC oracle), proving codes stay decodable
     // across the save/load boundary.
     "q_ann_pq_persisted" -> ((s, d) => {
-      val e = embeddings(s, d).select(col("vec_id"),
-        VF.asDouble(col("embedding")).as("v"))
-      val cb = graft.operators.Pq.fit(e, "vec_id", "v",
-        subspaces = 2, k = 4, iterations = 1)
+      val (e, probes) = annInputs(s, d)
+      val cb = pqCodebook(e)
       val codes = graft.operators.Pq.encode(e, "vec_id", "v", cb)
       val path = System.getProperty("java.io.tmpdir") +
         "/graft_pq_gate_" + new java.io.File(d).getName
       graft.operators.Pq.savePqIndex(codes, cb, path)
       val (cb2, codes2) = graft.operators.Pq.loadPqIndex(s, path)
-      val probes = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"))
       graft.operators.Pq.adcTopK(codes2, "vec_id", "codes",
         probes, "query_id", "qv", cb2, k = 3)
     }),
@@ -2780,13 +3121,9 @@ object SparkEntry {
     // is the feature; production budgets (8×256) are what PqSpec's
     // geometry and SCALING.md size for.
     "q_ann_pq_recall" -> ((s, d) => {
-      val e = embeddings(s, d).select(col("vec_id"),
-        VF.asDouble(col("embedding")).as("v"))
-      val cb = graft.operators.Pq.fit(e, "vec_id", "v",
-        subspaces = 2, k = 4, iterations = 1)
+      val (e, probes) = annInputs(s, d)
+      val cb = pqCodebook(e)
       val codes = graft.operators.Pq.encode(e, "vec_id", "v", cb)
-      val probes = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"))
       val exact = Ann.bruteForceTopK(e, "vec_id", "v", probes,
         "query_id", "qv", k = 10).select("query_id", "vec_id")
       val approx = graft.operators.Pq.adcTopK(codes, "vec_id", "codes",
@@ -2809,12 +3146,9 @@ object SparkEntry {
     // scoring) replays in SQL end-to-end; the multi-cell subsetting is
     // already pinned by q_ann_ivfpq + the PqSpec nProbe re-derivation.
     "q_ann_ivfpq_residual" -> ((s, d) => {
-      val e = embeddings(s, d).select(col("vec_id"),
-        VF.asDouble(col("embedding")).as("v"))
+      val (e, probes) = annInputs(s, d)
       val idx = Ann.ivfPqResidualIndex(e, "vec_id", "v", nCentroids = 1,
         subspaces = 2, pqK = 4, lloydIter = 1, pqIter = 1)
-      val probes = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"))
       Ann.ivfPqResidualSearch(idx, "vec_id", probes, "query_id", "qv",
         k = 3, nProbe = 1)
     }),
@@ -2823,8 +3157,7 @@ object SparkEntry {
     // selection fully in-plan (1-row argmax subplans broadcast into the
     // running min-distance), the oracle unrolls round for round.
     "q_sample_kcenter" -> ((s, d) => {
-      val e = embeddings(s, d)
-        .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"))
+      val e = vecs(s, d)
       graft.operators.Centroids.kCenterGreedy(e, "vec_id", "v", k = 4)
         .orderBy("center_order")
     }),
@@ -2842,23 +3175,14 @@ object SparkEntry {
     // coincide with DuckDB's native byte-level levenshtein — a full
     // cross-engine check of the rolling-DP expression on real text.
     // Word-granularity semantics are pinned by EvalSpec's hand DPs.
-    "q_eval_wer" -> ((s, d) => {
-      val p = werPairs(s, d)
-      graft.operators.Eval.tokenErrorRate(
-        p.select(col("id"), werChars(col("hs")).as("ht"),
-          werChars(col("rs")).as("rt")),
-        "id", "ht", "rt").orderBy("id")
-    }),
+    "q_eval_wer" -> ((s, d) =>
+      graft.operators.Eval.tokenErrorRate(werTokens(s, d), "id", "ht", "rt")
+        .orderBy("id")),
 
     // Pooled corpus WER over the same pairs (Σedits / Σ|ref|).
-    "q_eval_wer_corpus" -> ((s, d) => {
-      val p = werPairs(s, d)
+    "q_eval_wer_corpus" -> ((s, d) =>
       graft.operators.Eval.poolErrorRate(
-        graft.operators.Eval.tokenErrorRate(
-          p.select(col("id"), werChars(col("hs")).as("ht"),
-            werChars(col("rs")).as("rt")),
-          "id", "ht", "rt"))
-    }),
+        graft.operators.Eval.tokenErrorRate(werTokens(s, d), "id", "ht", "rt"))),
 
     // Corpus chrF2 over the mixed pairs: character 1..6-gram F-score
     // with β = 2 — the tokenization-robust MT metric; the self half
@@ -2903,10 +3227,7 @@ object SparkEntry {
     "q_rater_kappa" -> ((s, d) =>
       graft.operators.Eval.cohenKappa(
         docs(s, d).select(
-          when(col("n_chars") >= 400, lit("keep")).otherwise(lit("drop"))
-            .as("rater_len"),
-          when(TF.tokenCount(col("text")) >= 60, lit("keep")).otherwise(lit("drop"))
-            .as("rater_tok")),
+          lenRater.as("rater_len"), tokRater.as("rater_tok")),
         "rater_len", "rater_tok")),
 
     // Krippendorff's α with MISSING ratings: the same 3-heuristic panel,
@@ -2914,16 +3235,8 @@ object SparkEntry {
     // raters per item, which Fleiss cannot express.
     "q_rater_alpha" -> ((s, d) =>
       graft.operators.Eval.krippendorffAlpha(
-        docs(s, d).select(col("doc_id"),
-            when(col("n_chars") >= 400, lit("keep")).otherwise(lit("drop"))
-              .as("r_len"),
-            when(TF.tokenCount(col("text")) >= 60, lit("keep"))
-              .otherwise(lit("drop")).as("r_tok"),
-            when(col("doc_id") % 3 === 0, lit(null).cast("string"))
-              .otherwise(when(size(split(col("text"), "\n", -1)) >= 5,
-                lit("keep")).otherwise(lit("drop"))).as("r_lines"))
-          .selectExpr("doc_id",
-            "stack(3, r_len, r_tok, r_lines) AS label"),
+        raterPanel(s, d, when(col("doc_id") % 3 === 0, lit(null).cast("string"))
+          .otherwise(linesRater)),
         "doc_id", "label")),
 
     // Three-rater panel agreement (Fleiss' κ): char-length, token-count,
@@ -2931,15 +3244,7 @@ object SparkEntry {
     // to long form.
     "q_rater_fleiss" -> ((s, d) =>
       graft.operators.Eval.fleissKappa(
-        docs(s, d).select(col("doc_id"),
-            when(col("n_chars") >= 400, lit("keep")).otherwise(lit("drop"))
-              .as("r_len"),
-            when(TF.tokenCount(col("text")) >= 60, lit("keep"))
-              .otherwise(lit("drop")).as("r_tok"),
-            when(size(split(col("text"), "\n", -1)) >= 5, lit("keep"))
-              .otherwise(lit("drop")).as("r_lines"))
-          .selectExpr("doc_id",
-            "stack(3, r_len, r_tok, r_lines) AS label"),
+        raterPanel(s, d, linesRater),
         "doc_id", "label", nRaters = 3)),
 
     // Unigram LM self-scoring: every document's mean token NLL under the
@@ -3362,10 +3667,7 @@ object SparkEntry {
     // Split-conformal calibration: even doc_ids calibrate, odd test;
     // the (n+1)(1-alpha) order statistic walks the score-cell table.
     "q_eval_conformal" -> ((s, d) => {
-      val sc = docs(s, d).select(col("doc_id"),
-        round((col("doc_id") * 37 % 101).cast("double") / lit(100.0) +
-          when(col("lang") === "en", lit(0.15)).otherwise(lit(0.0)), 6)
-          .as("score"))
+      val sc = docs(s, d).select(col("doc_id"), docScore.as("score"))
       graft.operators.Eval.conformal(
         sc.where(col("doc_id") % 2 === 0),
         sc.where(col("doc_id") % 2 === 1), "score", alpha = 0.1)
@@ -3378,10 +3680,7 @@ object SparkEntry {
     // true MemoryStream twin is cross-checked in
     // StreamingConformalCrossCheckSpec.
     "q_eval_conformal_stream" -> ((s, d) => {
-      val sc = docs(s, d).select(col("doc_id"),
-        round((col("doc_id") * 37 % 101).cast("double") / lit(100.0) +
-          when(col("lang") === "en", lit(0.15)).otherwise(lit(0.0)), 6)
-          .as("score"))
+      val sc = docs(s, d).select(col("doc_id"), docScore.as("score"))
       graft.operators.Eval.conformalStream(
         sc.where(col("doc_id") % 2 === 0),
         sc.where(col("doc_id") % 2 === 1), "score", alpha = 0.1)
@@ -3428,17 +3727,10 @@ object SparkEntry {
     // Personalized PageRank from the 1%-custkey seed set over the
     // customer–supplier co-order graph.
     "q_graph_ppr" -> ((s, d) => {
-      val ex = executor(s, d)
-      val pairs = ex.table("lineitem").join(ex.table("orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(concat(lit("c:"), col("o_custkey")).as("c"),
-          concat(lit("s:"), col("l_suppkey")).as("p"))
-      val edges = pairs.select(col("c").as("src"), col("p").as("dst"))
-        .unionByName(pairs.select(col("p").as("src"), col("c").as("dst")))
-      val seeds = ex.table("customer")
+      val seeds = executor(s, d).table("customer")
         .where(col("c_custkey") % 100 === 0)
         .select(concat(lit("c:"), col("c_custkey")).as("node"))
-      graft.operators.Graph.personalizedPageRank(edges, "src", "dst",
+      graft.operators.Graph.personalizedPageRank(coOrderEdges(s, d), "src", "dst",
           seeds, "node", iterations = 3)
         .orderBy("node")
     }),
@@ -3446,11 +3738,7 @@ object SparkEntry {
     // Weighted PageRank over the co-order MULTIPLICITY graph: repeat
     // business carries proportional authority.
     "q_graph_pagerank_weighted" -> ((s, d) => {
-      val ex = executor(s, d)
-      val pairs = ex.table("lineitem").join(ex.table("orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(concat(lit("c:"), col("o_custkey")).as("c"),
-          concat(lit("s:"), col("l_suppkey")).as("p"))
+      val pairs = coOrderPairs(s, d)
       val edges = pairs
         .select(col("c").as("src"), col("p").as("dst"), lit(1.0).as("w"))
         .unionByName(pairs.select(col("p").as("src"), col("c").as("dst"),
@@ -3502,8 +3790,7 @@ object SparkEntry {
     // cosine to their own label's centroid (mislabel/junk curation queue).
     "q_embed_outliers" -> ((s, d) =>
       graft.operators.Centroids.outliers(
-          embeddings(s, d).select(col("vec_id"), col("label"),
-            VF.asDouble(col("embedding")).as("v")),
+          labeledVecs(s, d),
           "vec_id", "v", "label", k = 5)
         .orderBy("label", "rank")),
 
@@ -3522,11 +3809,7 @@ object SparkEntry {
     // classified per id against the original (mirrored in the oracle).
     "q_snapshot_diff" -> ((s, d) => {
       val base = docs(s, d).select(col("doc_id"), col("text"))
-      val v2 = base.filter(col("doc_id") % 10 =!= 0)
-        .withColumn("text", when(col("doc_id") % 7 === 0,
-          concat(col("text"), lit(" v2"))).otherwise(col("text")))
-        .unionByName(base.filter(col("doc_id") < 5)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
+      val v2 = snapshotV2(base)
       graft.operators.Snapshot.diff(base, v2, "doc_id", "text")
         .orderBy("id")
     }),
@@ -3537,11 +3820,7 @@ object SparkEntry {
     // diff + applyChanges compose into exact incremental maintenance.
     "q_snapshot_apply" -> ((s, d) => {
       val base = docs(s, d).select(col("doc_id"), col("text"))
-      val v2 = base.filter(col("doc_id") % 10 =!= 0)
-        .withColumn("text", when(col("doc_id") % 7 === 0,
-          concat(col("text"), lit(" v2"))).otherwise(col("text")))
-        .unionByName(base.filter(col("doc_id") < 5)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
+      val v2 = snapshotV2(base)
       val classified = graft.operators.Snapshot.diff(base, v2, "doc_id", "text")
       val changes = classified.filter(col("status") =!= "unchanged").as("c")
         .join(v2.as("v"), col("c.id") === col("v.doc_id"), "left")
@@ -3595,17 +3874,10 @@ object SparkEntry {
     // round + decimal contribution sum makes each iteration
     // order-independent, so the iterative Spark plan and the set-based
     // CTE chain agree bit-for-bit.
-    "q_graph_pagerank" -> ((s, d) => {
-      val ex = executor(s, d)
-      val pairs = ex.table("lineitem").join(ex.table("orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(concat(lit("c:"), col("o_custkey")).as("c"),
-          concat(lit("s:"), col("l_suppkey")).as("p"))
-      val edges = pairs.select(col("c").as("src"), col("p").as("dst"))
-        .unionByName(pairs.select(col("p").as("src"), col("c").as("dst")))
-      graft.operators.Graph.pageRank(edges, "src", "dst", iterations = 3)
-        .orderBy("node")
-    }),
+    "q_graph_pagerank" -> ((s, d) =>
+      graft.operators.Graph.pageRank(coOrderEdges(s, d), "src", "dst",
+          iterations = 3)
+        .orderBy("node")),
 
     // Label propagation: audited keep/drop seeds (even-quintet hubs)
     // spread over a quintet-star + hub-chain graph in 2 synchronous
@@ -3615,21 +3887,12 @@ object SparkEntry {
     // unrolling is oracle-exact.
     "q_graph_labelprop" -> ((s, d) => {
       val ids = docs(s, d).select(col("doc_id"), col("n_chars"))
-      val leaves = ids.filter(col("doc_id") % 5 =!= 0)
-        .select(col("doc_id").as("src"),
-          (col("doc_id") - (col("doc_id") % 5)).as("dst"))
-      val hubIds = ids.filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id").as("hid"))
-      val chain = ids.filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id").as("src"), (col("doc_id") + 5).as("dst"))
-        .join(hubIds, col("dst") === col("hid"))
-        .select(col("src"), col("dst"))
       val seeds = ids.filter(col("doc_id") % 10 === 0)
         .select(col("doc_id").as("node"),
           when(col("n_chars") >= 300, lit("keep")).otherwise(lit("drop"))
             .as("label"))
       graft.operators.Graph.labelPropagation(
-          leaves.unionByName(chain), "src", "dst",
+          quintetEdges(ids), "src", "dst",
           seeds, "node", "label", iterations = 2)
         .orderBy("node")
     }),
@@ -3637,37 +3900,17 @@ object SparkEntry {
     // LPA communities (unseeded): every node its own community, 2
     // synchronous majority rounds over the quintet graph — the
     // hub-resistant clustering that components' any-path merging lacks.
-    "q_graph_communities" -> ((s, d) => {
-      val ids = docs(s, d).select(col("doc_id"))
-      val leaves = ids.filter(col("doc_id") % 5 =!= 0)
-        .select(col("doc_id").as("src"),
-          (col("doc_id") - (col("doc_id") % 5)).as("dst"))
-      val hubIds = ids.filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id").as("hid"))
-      val chain = ids.filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id").as("src"), (col("doc_id") + 5).as("dst"))
-        .join(hubIds, col("dst") === col("hid"))
-        .select(col("src"), col("dst"))
+    "q_graph_communities" -> ((s, d) =>
       graft.operators.Graph.communities(
-          leaves.unionByName(chain), "src", "dst", iterations = 2)
-        .orderBy("node")
-    }),
+          quintetEdges(docIds(s, d)), "src", "dst",
+          iterations = 2)
+        .orderBy("node")),
 
     // Modularity of the LPA assignment on the same quintet graph — the
     // "is this clustering better than chance?" audit, exact integer
     // edge counts with decimal-summed per-community terms.
     "q_graph_modularity" -> ((s, d) => {
-      val ids = docs(s, d).select(col("doc_id"))
-      val leaves = ids.filter(col("doc_id") % 5 =!= 0)
-        .select(col("doc_id").as("src"),
-          (col("doc_id") - (col("doc_id") % 5)).as("dst"))
-      val hubIds = ids.filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id").as("hid"))
-      val chain = ids.filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id").as("src"), (col("doc_id") + 5).as("dst"))
-        .join(hubIds, col("dst") === col("hid"))
-        .select(col("src"), col("dst"))
-      val edges = leaves.unionByName(chain)
+      val edges = quintetEdges(docIds(s, d))
       val assign = graft.operators.Graph.communities(
         edges, "src", "dst", iterations = 2)
       graft.operators.Graph.modularity(edges, "src", "dst",
@@ -3678,84 +3921,44 @@ object SparkEntry {
     // graph (consecutive-id triangles plus hub-closed wedges): per-node
     // triangle counts and local clustering — the link-ring/spam audit.
     // Exact integer counts; the oracle runs the same oriented join.
-    "q_graph_triangles" -> ((s, d) => {
-      val ids = docs(s, d).select(col("doc_id"))
-      val fwd = ids.select(col("doc_id").as("src"),
-          (col("doc_id") + 1).as("dst"))
-        .unionByName(ids.select(col("doc_id").as("src"),
-          (col("doc_id") + 2).as("dst")))
-        .unionByName(ids.filter(col("doc_id") % 10 =!= 0)
-          .select(col("doc_id").as("src"),
-            (col("doc_id") - (col("doc_id") % 10)).as("dst")))
-      graft.operators.Graph.triangles(fwd, "src", "dst").orderBy("node")
-    }),
+    "q_graph_triangles" -> ((s, d) =>
+      graft.operators.Graph.triangles(decadeEdges(docIds(s, d)), "src", "dst")
+        .orderBy("node")),
 
     // Link prediction on the same graph: non-adjacent distance-2 pairs
     // with common-neighbor / jaccard / adamic-adar scores; center cap 8
     // exercises the hub skew guard (decade hubs are excluded as wedge
     // centers but keep their exact degrees in jaccard).
-    "q_graph_linkpred" -> ((s, d) => {
-      val ids = docs(s, d).select(col("doc_id"))
-      val fwd = ids.select(col("doc_id").as("src"),
-          (col("doc_id") + 1).as("dst"))
-        .unionByName(ids.select(col("doc_id").as("src"),
-          (col("doc_id") + 2).as("dst")))
-        .unionByName(ids.filter(col("doc_id") % 10 =!= 0)
-          .select(col("doc_id").as("src"),
-            (col("doc_id") - (col("doc_id") % 10)).as("dst")))
-      graft.operators.Graph.linkPrediction(fwd, "src", "dst",
-          maxCenterDegree = Some(8))
-        .orderBy("node_a", "node_b")
-    }),
+    "q_graph_linkpred" -> ((s, d) =>
+      graft.operators.Graph.linkPrediction(decadeEdges(docIds(s, d)),
+          "src", "dst", maxCenterDegree = Some(8))
+        .orderBy("node_a", "node_b")),
 
     // BFS hop distance (3 synchronous relaxations) from the
     // century-doc seed set: everything within 3 hops, exact integers.
     "q_graph_bfs" -> ((s, d) => {
-      val ids = docs(s, d).select(col("doc_id"))
-      val fwd = ids.select(col("doc_id").as("src"),
-          (col("doc_id") + 1).as("dst"))
-        .unionByName(ids.select(col("doc_id").as("src"),
-          (col("doc_id") + 2).as("dst")))
-        .unionByName(ids.filter(col("doc_id") % 10 =!= 0)
-          .select(col("doc_id").as("src"),
-            (col("doc_id") - (col("doc_id") % 10)).as("dst")))
+      val ids = docIds(s, d)
       val seeds = ids.filter(col("doc_id") % 100 === 0)
         .select(col("doc_id").as("node"))
-      graft.operators.Graph.bfsDistance(fwd, "src", "dst",
+      graft.operators.Graph.bfsDistance(decadeEdges(ids), "src", "dst",
           seeds, "node", rounds = 3)
         .orderBy("node")
     }),
 
     // Degree assortativity of the same graph — one-row structural
     // fingerprint (hub-leaf wiring is disassortative).
-    "q_graph_assortativity" -> ((s, d) => {
-      val ids = docs(s, d).select(col("doc_id"))
-      val fwd = ids.select(col("doc_id").as("src"),
-          (col("doc_id") + 1).as("dst"))
-        .unionByName(ids.select(col("doc_id").as("src"),
-          (col("doc_id") + 2).as("dst")))
-        .unionByName(ids.filter(col("doc_id") % 10 =!= 0)
-          .select(col("doc_id").as("src"),
-            (col("doc_id") - (col("doc_id") % 10)).as("dst")))
-      graft.operators.Graph.degreeAssortativity(fwd, "src", "dst")
-    }),
+    "q_graph_assortativity" -> ((s, d) =>
+      graft.operators.Graph.degreeAssortativity(decadeEdges(docIds(s, d)),
+        "src", "dst")),
 
     // k-core peeling (k=3, 4 fixed synchronous rounds) on the same
     // graph: survivors with their in-core degree plus a converged flag
     // (last round deleted nothing). Fixed rounds keep the result a pure
     // function of the data — the oracle unrolls the same 4 peels.
-    "q_graph_kcore" -> ((s, d) => {
-      val ids = docs(s, d).select(col("doc_id"))
-      val fwd = ids.select(col("doc_id").as("src"),
-          (col("doc_id") + 1).as("dst"))
-        .unionByName(ids.select(col("doc_id").as("src"),
-          (col("doc_id") + 2).as("dst")))
-        .unionByName(ids.filter(col("doc_id") % 10 =!= 0)
-          .select(col("doc_id").as("src"),
-            (col("doc_id") - (col("doc_id") % 10)).as("dst")))
-      graft.operators.Graph.kCore(fwd, "src", "dst", k = 3, rounds = 4)
-        .orderBy("node")
-    }),
+    "q_graph_kcore" -> ((s, d) =>
+      graft.operators.Graph.kCore(decadeEdges(docIds(s, d)), "src", "dst",
+          k = 3, rounds = 4)
+        .orderBy("node")),
 
     // Leaderboard with 95% Wilson intervals — the arena-UI view;
     // bounds are +,x,/,sqrt only (sqrt is IEEE-exact), oracle replays
@@ -3809,10 +4012,7 @@ object SparkEntry {
     // other quality terms are case-invariant, ties fall to the smaller
     // id) — so the oracle is closed-form: the originals + their scores.
     "q_dedup_keep_best" -> ((s, d) => {
-      val d0 = docs(s, d).select(col("doc_id"), col("text"))
-      val twins = d0.select((col("doc_id") + lit(1000000L)).as("doc_id"),
-        upper(col("text")).as("text"))
-      val all = d0.unionByName(twins)
+      val all = docsWithTwins(s, d, upper(col("text")).as("text"))
         .withColumn("__cluster", md5(lower(col("text"))))
         .withColumn("__q", TF.qualityScore(col("text")))
       graft.operators.Sample.topPerKey(all, "__cluster", "__q", k = 1, "doc_id")
@@ -3937,10 +4137,8 @@ object SparkEntry {
     // (DISTINCT) of two blocked self-joins then scores each pair once.
     "q_linkage_multi" -> ((s, d) => {
       val p = spread(executor(s, d).table("part"))
-      val blk1 = "concat(p_brand, '#', cast(p_size as string))"
-      val blk2 = "substring(p_name, 1, 12)"
       graft.operators.Linkage.linkageScoresMulti(p, p, "p_partkey",
-        "p_partkey", Seq(blk1 -> blk1, blk2 -> blk2), linkageFields,
+        "p_partkey", multiPassBlocks, linkageFields,
         selfPairs = true)
         .orderBy("id_a", "id_b")
     }),
@@ -3948,10 +4146,8 @@ object SparkEntry {
     // Per-pass audit of the multi-pass plan: (pass, block) pair volumes.
     "q_linkage_multi_blocks" -> ((s, d) => {
       val p = executor(s, d).table("part")
-      val blk1 = "concat(p_brand, '#', cast(p_size as string))"
-      val blk2 = "substring(p_name, 1, 12)"
       graft.operators.Linkage.blockAuditMulti(p, p,
-        Seq(blk1 -> blk1, blk2 -> blk2), selfPairs = true)
+        multiPassBlocks, selfPairs = true)
     }),
 
     // Skew-guarded linkage: every 7th part is funneled into one "HOT"
@@ -4014,26 +4210,17 @@ object SparkEntry {
     // Packing-efficiency report over the q_pack construction: pack
     // fill/overflow/padding mass and utilization in one pass.
     "q_pack_stats" -> ((s, d) => {
-      val toks = docs(s, d).select(col("doc_id"),
-        TF.tokenCount(col("text")).cast("long").as("n_tokens"))
       graft.operators.Pack.packStats(
-        graft.operators.Pack.packByTokenBudget(toks, "doc_id", "n_tokens",
+        graft.operators.Pack.packByTokenBudget(docTokens(s, d), "doc_id", "n_tokens",
           budget = 500L, shards = 8),
         "n_tokens", budget = 500L)
     }),
 
     // Corpus-level PII exposure report over the q_pii_redact injected
     // corpus: per-category document and match counts.
-    "q_pii_report" -> ((s, d) => {
-      val injected = docs(s, d).select(col("doc_id"),
-        when(col("doc_id") % 3 =!= 0,
-          concat(col("text"), lit(" reach user"), col("doc_id").cast("string"),
-            lit("@example.com or 10."), (col("doc_id") % 200).cast("string"),
-            lit(".0.1 ssn 123-45-6789 tel 555-123-4567")))
-          .otherwise(col("text")).as("text"))
-      graft.operators.Pii.detectionReport(injected, "doc_id", "text")
-        .orderBy("category")
-    }),
+    "q_pii_report" -> ((s, d) =>
+      graft.operators.Pii.detectionReport(piiInjected(s, d), "doc_id", "text")
+        .orderBy("category")),
 
     // Shannon entropy per column over documents (categorical lang/source
     // + the long-tailed n_chars) — the information-content profile.
@@ -4091,7 +4278,7 @@ object SparkEntry {
     // discipline as the split gates.
     "q_split_order" -> ((s, d) =>
       graft.operators.Split.trainingOrder(
-          docs(s, d).select(col("doc_id")), "doc_id", nShards = 8)
+          docIds(s, d), "doc_id", nShards = 8)
         .orderBy("shard", "position")),
 
     // Conversation-structure audit over the sftTurns reshaping: parity
@@ -4117,8 +4304,7 @@ object SparkEntry {
     // non-parametric twin (exact medians via the quantiles machinery).
     "q_anomaly_mad" -> ((s, d) =>
       graft.operators.Profile.madFlags(
-        executor(s, d).table("events")
-          .select(col("event_id"), col("user_id"), col("value")),
+        eventValues(s, d),
         "user_id", "value", threshold = 3.5)
         .select(col("event_id"), col("rz"), col("is_outlier"))
         .orderBy("event_id")),
@@ -4127,10 +4313,7 @@ object SparkEntry {
     // every text has ≥2 copies; naturally-duplicated texts form larger
     // classes.
     "q_dedup_cluster_sizes" -> ((s, d) => {
-      val d0 = docs(s, d).select(col("doc_id"), col("text"))
-      val twins = d0.select((col("doc_id") + lit(1000000L)).as("doc_id"),
-        col("text"))
-      Dedup.clusterSizeProfile(d0.unionByName(twins), "doc_id", "text")
+      Dedup.clusterSizeProfile(docsWithTwins(s, d), "doc_id", "text")
         .orderBy("cluster_size")
     }),
 
@@ -4138,7 +4321,7 @@ object SparkEntry {
     // carrying the same texts — the republication-flow audit.
     "q_dedup_cross_source" -> ((s, d) => {
       val d0 = docs(s, d).select(col("doc_id"), col("text"), col("source"))
-      val mirror = d0.select((col("doc_id") + lit(1000000L)).as("doc_id"),
+      val mirror = d0.select((col("doc_id") + lit(TwinShift)).as("doc_id"),
         col("text"), lit("mirror").as("source"))
       Dedup.crossSourceDuplication(d0.unionByName(mirror),
         "doc_id", "text", "source")
@@ -4157,7 +4340,7 @@ object SparkEntry {
     // Stride-scheduled mixture interleave: 3:1 evens:odds data-loader
     // order — every prefix of the mix_key order carries the weight mix.
     "q_mix_interleave" -> ((s, d) => {
-      val d0 = docs(s, d).select(col("doc_id"))
+      val d0 = docIds(s, d)
       graft.operators.Mix.interleave(Seq(
         (d0.filter(col("doc_id") % 2 === 0), 3.0),
         (d0.filter(col("doc_id") % 2 =!= 0), 1.0)), "doc_id", salt = "s")
@@ -4238,18 +4421,14 @@ object SparkEntry {
     // parity, success = purchase event — one wide aggregate pass.
     "q_ab_proportion" -> ((s, d) =>
       graft.operators.Experiment.proportionZ(
-        executor(s, d).table("events")
-          .select((col("user_id") % 2).cast("string").as("variant"),
-            (col("event_type") === "purchase").as("ok")),
+        abArms(s, d, (col("event_type") === "purchase").as("ok")),
         "variant", "ok", "0", "1")),
 
     // Welch's t on the event value by the same arms — the numeric
     // outcome companion (unequal-variance safe), decimal-summed moments.
     "q_ab_welch" -> ((s, d) =>
       graft.operators.Experiment.welchT(
-        executor(s, d).table("events")
-          .select((col("user_id") % 2).cast("string").as("variant"),
-            col("value")),
+        abArms(s, d, col("value")),
         "variant", "value", "0", "1")),
 
     // Uplift/Qini by score bucket: parity arms, event value as the
@@ -4257,9 +4436,7 @@ object SparkEntry {
     // cut on the score-cell table, cumulative qini over the 10-row frame.
     "q_ab_uplift" -> ((s, d) =>
       graft.operators.Experiment.upliftByBucket(
-        executor(s, d).table("events")
-          .select((col("user_id") % 2).cast("string").as("variant"),
-            col("value").as("score"),
+        abArms(s, d, col("value").as("score"),
             (col("event_id") % 3 === 0).cast("int").as("converted")),
         "variant", "score", "converted", "0", "1", nBuckets = 10)
         .orderBy("bucket")),
@@ -4268,9 +4445,7 @@ object SparkEntry {
     // split — the heavy-tail-proof companion to q_ab_welch.
     "q_ab_mannwhitney" -> ((s, d) =>
       graft.operators.Experiment.mannWhitney(
-        executor(s, d).table("events")
-          .select((col("user_id") % 2).cast("string").as("variant"),
-            col("value")),
+        abArms(s, d, col("value")),
         "variant", "value", "0", "1")),
 
     // The dense variant: a full-precision CONTINUOUS metric
@@ -4280,9 +4455,7 @@ object SparkEntry {
     // doubles (the single-reducer hazard the r8 verdict flagged).
     "q_ab_mannwhitney_dense" -> ((s, d) =>
       graft.operators.Experiment.mannWhitney(
-        executor(s, d).table("events")
-          .select((col("user_id") % 2).cast("string").as("variant"),
-            (col("value") * lit(math.Pi)).as("value")),
+        abArms(s, d, (col("value") * lit(math.Pi)).as("value")),
         "variant", "value", "0", "1")),
 
     // The WIDE-RANGE variant: metric = value + event_id·π — every row
@@ -4292,9 +4465,7 @@ object SparkEntry {
     // retired single-reducer window this shape degenerated at scale.
     "q_ab_mannwhitney_wide" -> ((s, d) =>
       graft.operators.Experiment.mannWhitney(
-        executor(s, d).table("events")
-          .select((col("user_id") % 2).cast("string").as("variant"),
-            (col("value") + col("event_id") * lit(math.Pi)).as("value")),
+        abArms(s, d, (col("value") + col("event_id") * lit(math.Pi)).as("value")),
         "variant", "value", "0", "1")),
 
     // Per-segment Welch sweep on the event value: t, Welch df, and the
@@ -4303,49 +4474,32 @@ object SparkEntry {
       graft.operators.Experiment.welchTGrouped(
         executor(s, d).table("events")
           .select(col("event_type").as("seg"),
-            (col("user_id") % 2).cast("string").as("variant"),
+            parityArm.as("variant"),
             col("value")),
         "seg", "variant", "value", "0", "1")
         .orderBy("group")),
 
     // Per-segment z sweep: one conditional-aggregate pass tests every
     // event type at once, two-sided p via the cross-engine erf chain.
-    "q_ab_z_grouped" -> ((s, d) =>
-      graft.operators.Experiment.proportionZGrouped(
-        executor(s, d).table("events")
-          .select(col("event_type").as("seg"),
-            (col("user_id") % 2).cast("string").as("variant"),
-            (col("value") > 50).as("ok")),
-        "seg", "variant", "ok", "0", "1")
-        .orderBy("group")),
+    "q_ab_z_grouped" -> ((s, d) => segmentZ(s, d).orderBy("group")),
 
     // BH step-up over the segment sweep: FDR-corrected q-values and
     // the discovery set at alpha 0.05.
     "q_ab_fdr" -> ((s, d) =>
-      graft.operators.Experiment.benjaminiHochberg(
-        graft.operators.Experiment.proportionZGrouped(
-          executor(s, d).table("events")
-            .select(col("event_type").as("seg"),
-              (col("user_id") % 2).cast("string").as("variant"),
-              (col("value") > 50).as("ok")),
-          "seg", "variant", "ok", "0", "1"),
+      graft.operators.Experiment.benjaminiHochberg(segmentZ(s, d),
         "group", "p_value", alpha = 0.05)
         .orderBy("rank")),
 
     // Proportion-metric MDE on purchase conversion by the parity arms.
     "q_ab_mde_prop" -> ((s, d) =>
       graft.operators.Experiment.minDetectableEffectProportion(
-        executor(s, d).table("events")
-          .select((col("user_id") % 2).cast("string").as("variant"),
-            (col("event_type") === "purchase").as("ok")),
+        abArms(s, d, (col("event_type") === "purchase").as("ok")),
         "variant", "ok", "0", "1")),
 
     // Always-valid mSPRT on the event value by the parity arms.
     "q_ab_msprt" -> ((s, d) =>
       graft.operators.Experiment.msprt(
-        executor(s, d).table("events")
-          .select((col("user_id") % 2).cast("string").as("variant"),
-            col("value")),
+        abArms(s, d, col("value")),
         "variant", "value", "0", "1", tau = 1.0)),
 
     // Minimum detectable effect + required per-arm n on the parity
@@ -4353,9 +4507,7 @@ object SparkEntry {
     // have seen the lift it reports.
     "q_ab_mde" -> ((s, d) =>
       graft.operators.Experiment.minDetectableEffect(
-        executor(s, d).table("events")
-          .select((col("user_id") % 2).cast("string").as("variant"),
-            col("value")),
+        abArms(s, d, col("value")),
         "variant", "value", "0", "1")),
 
     // Per-returnflag OLS of quantity on discount: the discount
@@ -4371,7 +4523,7 @@ object SparkEntry {
     "q_ab_did" -> ((s, d) =>
       graft.operators.Experiment.did(
         executor(s, d).table("events")
-          .select((col("user_id") % 2).cast("string").as("grp"),
+          .select(parityArm.as("grp"),
             when(dayofmonth(to_date(col("ts"))) <= 15, lit("pre"))
               .otherwise(lit("post")).as("period"),
             col("value")),
@@ -4390,9 +4542,7 @@ object SparkEntry {
     // case; one corpus pass, everything a closed form of the moments.
     "q_ab_cuped" -> ((s, d) =>
       graft.operators.Experiment.cuped(
-        executor(s, d).table("events")
-          .select((col("user_id") % 2).cast("string").as("variant"),
-            col("value"), floor(col("value")).cast("double").as("pre")),
+        abArms(s, d, col("value"), floor(col("value")).cast("double").as("pre")),
         "variant", "value", "pre", "0", "1")),
 
     // Quantile treatment effect on the same arms: p50/p90/p99 of the
@@ -4401,9 +4551,7 @@ object SparkEntry {
     // value-cell rank machinery.
     "q_ab_quantiles" -> ((s, d) =>
       graft.operators.Experiment.quantileLift(
-        executor(s, d).table("events")
-          .select((col("user_id") % 2).cast("string").as("variant"),
-            col("value")),
+        abArms(s, d, col("value")),
         "variant", "value", "0", "1", Seq(0.5, 0.9, 0.99))
         .orderBy("p")),
 
@@ -4414,7 +4562,7 @@ object SparkEntry {
       graft.operators.Experiment.cmh(
         executor(s, d).table("events")
           .select((col("user_id") % 5).cast("string").as("stratum"),
-            (col("user_id") % 2).cast("string").as("variant"),
+            parityArm.as("variant"),
             (col("event_type") === "purchase").as("ok")),
         "stratum", "variant", "ok", "0", "1")),
 
@@ -4422,8 +4570,7 @@ object SparkEntry {
     // 50/50 — the assignment-health gate every readout runs first.
     "q_ab_srm" -> ((s, d) =>
       graft.operators.Experiment.srm(
-        executor(s, d).table("events")
-          .select((col("user_id") % 2).cast("string").as("variant")),
+        abArms(s, d),
         "variant", "0", "1")),
 
     // Source-mix concentration: HHI + effective source count over the
@@ -4438,8 +4585,7 @@ object SparkEntry {
     // straddle label clusters in the embedding space.
     "q_cluster_silhouette" -> ((s, d) =>
       graft.operators.Centroids.labelSilhouette(
-          embeddings(s, d).select(col("vec_id"), col("label"),
-            VF.asDouble(col("embedding")).as("v")),
+          labeledVecs(s, d),
           "vec_id", "v", "label")
         .orderBy("vec_id")),
 
@@ -4466,6 +4612,14 @@ object SparkEntry {
     graft.operators.Linkage.FieldSpec(
       "substr(p_name, 1, 6)", "substr(p_name, 1, 6)", 0.8, 0.05),
     graft.operators.Linkage.FieldSpec("p_size", "p_size", 0.7, 0.02))
+
+  /** The multi-pass linkage gates' block keys: brand#size, then the
+    * 12-char name prefix. */
+  private val multiPassBlocks = {
+    val blk1 = "concat(p_brand, '#', cast(p_size as string))"
+    val blk2 = "substring(p_name, 1, 12)"
+    Seq(blk1 -> blk1, blk2 -> blk2)
+  }
 
   /** Mixed-script text appended by the script-profile gate — CJK,
     * Cyrillic, Arabic (incl. Arabic-Indic digits), ASCII digits — shared
@@ -4562,18 +4716,16 @@ object SparkEntry {
       |        ELSE regexp_replace(hs, '[aeiou]', '', 'g') || 'X'
       |      END AS rs FROM p)""".stripMargin
 
+  /** [[werPairs]] as character-token arrays (id, ht, rt). */
+  private def werTokens(s: SparkSession, d: String): DataFrame =
+    werPairs(s, d).select(col("id"), werChars(col("hs")).as("ht"),
+      werChars(col("rs")).as("rt"))
+
   /** A string as its character-token array (empty → empty array). */
   private def werChars(c: Column): Column =
     when(length(c) > 0,
       transform(sequence(lit(1), length(c)), i => c.substr(i, lit(1))))
       .otherwise(array().cast("array<string>"))
-
-  private def annInputs(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val e = embeddings(s, d).select(col("vec_id"), VF.asDouble(col("embedding")).as("v"))
-    val probes = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    (e, probes)
-  }
 
   // ------------------------------------------------------------- oracle SQL
 
@@ -4595,12 +4747,10 @@ object SparkEntry {
     * fp equality: near-dup docs can collide at Hamming 0 naturally, twin
     * pairs are the deterministic subset (cf. q_dedup_simhash_twins). */
   private val sqlSimhash: String =
-    """WITH all_docs AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL SELECT doc_id + 1000000 AS doc_id, text FROM documents),
+    s"""WITH all_docs AS ($docsWithTwinsSql),
       |fps AS (SELECT doc_id, simhash64(hashed_tokens(text)) AS fp FROM all_docs)
       |SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      |FROM fps a JOIN fps b ON a.fp = b.fp AND b.doc_id = a.doc_id + 1000000
+      |FROM fps a JOIN fps b ON a.fp = b.fp AND b.doc_id = a.doc_id + $TwinShift
       |ORDER BY id_a""".stripMargin
 
   /** Dialect-neutral window-function SQL (CUSTOM surface + its own
@@ -4623,14 +4773,26 @@ object SparkEntry {
   private def inList(lang: String): String =
     TF.stopwords(lang).map(w => s"'$w'").mkString("(", ", ", ")")
 
-  private val toksSql = "regexp_split_to_array(trim(text), '[ \\t\\n\\x0b\\f\\r]+')"
-
   /** Fixed well-formed merge list for the BPE-encode gate (each merge's
     * symbols are single chars or outputs of earlier merges). */
   private val bpeGateMerges = Seq(
     ("s", "c"), ("sc", "a"), ("sca", "n"),
     ("j", "o"), ("jo", "i"), ("joi", "n"),
     ("r", "o"), ("ro", "w"))
+
+  /** Upper-triangle (i <= j) embedding moment cells `g`(i, j, n, sxy,
+    * sx, sy): DECIMAL sums of 9-dp products — Pca.covariance's input. */
+  private val covCellsSql: String =
+    """x AS (SELECT CAST(embedding AS DOUBLE[]) AS v
+      |           FROM embeddings WHERE embedding IS NOT NULL),
+      |a AS (SELECT v, unnest(range(1, len(v)+1)) AS i FROM x),
+      |c AS (SELECT i, v, unnest(range(1, len(v)+1)) AS j FROM a),
+      |p AS (SELECT i, j, v[i] AS xi, v[j] AS xj FROM c WHERE j >= i),
+      |g AS (SELECT i, j, count(*) AS n,
+      |        sum(CAST(round(xi*xj, 9) AS DECIMAL(38,9))) AS sxy,
+      |        sum(CAST(round(xi, 9) AS DECIMAL(38,9))) AS sx,
+      |        sum(CAST(round(xj, 9) AS DECIMAL(38,9))) AS sy
+      |      FROM p GROUP BY 1, 2)""".stripMargin
 
   /** DuckDB oracle for [[graft.operators.Vocab.bpeTokenCount]]: the same
     * char-spacing regex and rank-ordered literal-replace chain, built
@@ -4640,10 +4802,7 @@ object SparkEntry {
   /** Shared DuckDB mirror for q_eval_conformal and its
     * stream-shaped twin gate (both compute the same row). */
   private val conformalOracleSql: String =
-    """WITH sc AS (SELECT doc_id,
-        |    round(CAST((doc_id * 37) % 101 AS DOUBLE) / 100.0 +
-        |      CASE WHEN lang = 'en' THEN 0.15 ELSE 0.0 END, 6) AS score
-        |  FROM documents),
+    s"""WITH sc AS (SELECT doc_id, $docScoreSql AS score FROM documents),
         |calc AS (SELECT round(score, 6) AS s, count(*) AS c FROM sc
         |         WHERE doc_id % 2 = 0 GROUP BY 1),
         |tot AS (SELECT coalesce(sum(c), 0) AS n_cal FROM calc),
@@ -4689,9 +4848,9 @@ object SparkEntry {
     * base, dense (·π), and wide-range (+ event_id·π) gates. */
   private def mannWhitneyOracle(metric: String): String =
     s"""WITH cells AS (SELECT round(CAST($metric AS DOUBLE), 6) AS v,
-       |    count(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '0'
+       |    count(CASE WHEN $paritySql = '0'
        |               THEN 1 END) AS ca,
-       |    count(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '1'
+       |    count(CASE WHEN $paritySql = '1'
        |               THEN 1 END) AS cb
        |  FROM events WHERE value IS NOT NULL GROUP BY 1),
        |rk AS (SELECT ca, cb, ca + cb AS c,
@@ -4775,41 +4934,160 @@ object SparkEntry {
   /** [[survivalSubjSql]] with durations in fractional SECONDS
     * (µs delta / 10⁶) — the wide-range twin of the whole-day
     * subject table. */
-  private val survivalSubjSecondsSql: String =
-    """ev0 AS (SELECT user_id AS u, epoch_us(CAST(ts AS TIMESTAMP)) AS t_us,
-      |               event_type AS et FROM events),
-      |subj AS (
-      |  SELECT CASE WHEN u % 2 = 0 THEN 'even' ELSE 'odd' END AS grp0,
-      |    CAST(coalesce(min(CASE WHEN et = 'purchase' THEN t_us END),
-      |                  max(t_us)) - min(t_us) AS DOUBLE) / 1000000.0
-      |      AS dur,
-      |    min(CASE WHEN et = 'purchase' THEN t_us END) IS NOT NULL AS ev
-      |  FROM ev0 GROUP BY u)""".stripMargin
+  private val survivalSubjSecondsSql: String = survivalSubjWith(tp =>
+    s"CAST(coalesce($tp, max(t_us)) - min(t_us) AS DOUBLE) / 1000000.0")
 
-  private val survivalSubjSql: String =
-    """ev0 AS (SELECT user_id AS u, epoch_us(CAST(ts AS TIMESTAMP)) AS t_us,
-      |               event_type AS et FROM events),
-      |subj AS (
-      |  SELECT CASE WHEN u % 2 = 0 THEN 'even' ELSE 'odd' END AS grp0,
-      |    CAST((coalesce(min(CASE WHEN et = 'purchase' THEN t_us END),
-      |                   max(t_us)) - min(t_us)) // 86400000000 AS DOUBLE)
-      |      AS dur,
-      |    min(CASE WHEN et = 'purchase' THEN t_us END) IS NOT NULL AS ev
-      |  FROM ev0 GROUP BY u)""".stripMargin
+  private val survivalSubjSql: String = survivalSubjWith(tp =>
+    s"CAST((coalesce($tp, max(t_us)) - min(t_us)) // 86400000000 AS DOUBLE)")
+
+  /** The survival subject CTEs `ev0` → `subj`(grp0, dur, ev): `dur` is
+    * an aggregate over the user's µs event times t_us, given the first
+    * purchase time's expression. */
+  private def survivalSubjWith(dur: String => String): String = {
+    val tp = "min(CASE WHEN et = 'purchase' THEN t_us END)"
+    s"""ev0 AS (SELECT user_id AS u, epoch_us(CAST(ts AS TIMESTAMP)) AS t_us,
+       |               event_type AS et FROM events),
+       |subj AS (
+       |  SELECT CASE WHEN u % 2 = 0 THEN 'even' ELSE 'odd' END AS grp0,
+       |    ${dur(tp)} AS dur,
+       |    $tp IS NOT NULL AS ev
+       |  FROM ev0 GROUP BY u)""".stripMargin
+  }
+
+  /** [[survivalSubjSql]] plus the per-(group, time) event/censor cells
+    * and the risk set at each time, `steps`(grp, t, events, at_risk). */
+  private def survivalStepsSql: String =
+    s"""$survivalSubjSql,
+       |cells AS (
+       |  SELECT grp0 AS grp, dur AS t,
+       |    count(*) FILTER (WHERE ev) AS events,
+       |    count(*) FILTER (WHERE NOT ev) AS cens
+       |  FROM subj GROUP BY 1, 2),
+       |steps AS (
+       |  SELECT grp, t, events,
+       |    CAST(sum(events + cens) OVER (PARTITION BY grp)
+       |      - sum(events + cens) OVER (PARTITION BY grp ORDER BY t)
+       |      + events + cens AS BIGINT) AS at_risk
+       |  FROM cells)""".stripMargin
+
+  /** Attribution journeys over events: touches `base`(u, t, id, ch, c),
+    * each converting user's first conversion time `cv` and its
+    * lowest event id `cid` (the same-timestamp tie-break). */
+  private val journeySql: String =
+    """base AS (
+      |  SELECT user_id AS u, epoch_us(CAST(ts AS TIMESTAMP)) AS t,
+      |         event_id AS id, event_type AS ch,
+      |         event_type = 'purchase' AS c
+      |  FROM events),
+      |cv AS (SELECT u, min(t) AS ct FROM base WHERE c GROUP BY 1),
+      |cid AS (SELECT b.u, min(b.id) AS cid FROM base b
+      |        JOIN cv ON b.u = cv.u AND b.t = cv.ct
+      |        WHERE b.c GROUP BY 1)""".stripMargin
+
+  /** Batch sessionization over events (30-min gap): `numbered`(user_id,
+    * ts, session_id) — Sessionize.batch's mirror. */
+  private val sessionsSql: String =
+    """flagged AS (
+      |  SELECT user_id, ts,
+      |    CASE WHEN epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts))
+      |              > 1800000000 THEN 1 ELSE 0 END AS new_s
+      |  FROM events),
+      |numbered AS (
+      |  SELECT user_id, ts,
+      |    CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT) AS session_id
+      |  FROM flagged)""".stripMargin
+
+  /** Exact discrete p50/p90/p99 (value at rank ⌈p·n⌉) of `durs`(g,
+    * dur_us) — the tail of the duration-quantile oracles. */
+  private val durQuantilesSql: String =
+    """ranked AS (
+      |  SELECT g, dur_us,
+      |    row_number() OVER (PARTITION BY g ORDER BY dur_us ASC) AS rn,
+      |    count(*) OVER (PARTITION BY g) AS n
+      |  FROM durs)
+      |SELECT g, CAST(p AS DOUBLE) AS p, dur_us AS value
+      |FROM ranked CROSS JOIN (VALUES (0.5), (0.9), (0.99)) AS ps(p)
+      |WHERE rn = CAST(ceil(p * n) AS BIGINT)
+      |ORDER BY p""".stripMargin
+
+  /** The funnel oracles' events `ev`(u, ts, et) and their per-step user
+    * counts over the step CTEs s1..s3. */
+  private val funnelEventsSql: String =
+    """ev AS (SELECT user_id AS u, CAST(ts AS TIMESTAMP) AS ts,
+      |              event_type AS et FROM events)""".stripMargin
+  private val funnelCountsSql: String =
+    """SELECT CAST(1 AS BIGINT) AS step, 'view' AS step_name,
+      |       (SELECT count(*) FROM s1) AS n_users
+      |UNION ALL SELECT 2, 'click', (SELECT count(*) FROM s2)
+      |UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3)
+      |ORDER BY step""".stripMargin
+
+  /** Per-language n_chars ranks `ranked`(lang, n_chars, rn, n). */
+  private val langLenRanksSql: String =
+    """ranked AS (
+      |  SELECT lang, n_chars,
+      |    row_number() OVER (PARTITION BY lang ORDER BY n_chars ASC) AS rn,
+      |    count(*) OVER (PARTITION BY lang) AS n
+      |  FROM documents WHERE n_chars IS NOT NULL)""".stripMargin
+
+  /** Distinct active (user, day) pairs with each user's previous and
+    * next active day, `t`(u, day, prev, nxt). */
+  private val userDaysSql: String =
+    """pairs AS (SELECT DISTINCT user_id AS u, CAST(ts AS DATE) AS day
+      |               FROM events
+      |               WHERE ts IS NOT NULL AND user_id IS NOT NULL),
+      |t AS (SELECT u, day,
+      |        lag(day) OVER (PARTITION BY u ORDER BY day) AS prev,
+      |        lead(day) OVER (PARTITION BY u ORDER BY day) AS nxt
+      |      FROM pairs)""".stripMargin
+
+  /** Daily 9-dp means of the rolling-correlation gates' two signals
+    * (x = value, y = event_id % 97), `dm`(day, mx, my). */
+  private val dailyMeansSql: String =
+    """e AS (SELECT CAST(ts AS DATE) AS day,
+      |    round(CAST(value AS DOUBLE), 9) AS x,
+      |    round(CAST(event_id % 97 AS DOUBLE), 9) AS y
+      |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL),
+      |daily AS (SELECT day, count(*) AS n,
+      |    sum(CAST(x AS DECIMAL(28,9))) AS sx,
+      |    sum(CAST(y AS DECIMAL(28,9))) AS sy
+      |  FROM e GROUP BY 1),
+      |dm AS (SELECT day, round(CAST(sx AS DOUBLE)/n, 9) AS mx,
+      |              round(CAST(sy AS DOUBLE)/n, 9) AS my FROM daily)""".stripMargin
+
+  /** Pearson correlation over a full 7-day window from the moment sums
+    * k, sx, sy, sxx, syy, sxy — NULL while the window is short or a
+    * side is constant. */
+  private val rollCorrSql: String =
+    """CASE WHEN k < 7
+      |    OR round(sxx - round(sx*sx/CAST(k AS DOUBLE), 9), 9) <= 0
+      |    OR round(syy - round(sy*sy/CAST(k AS DOUBLE), 9), 9) <= 0
+      |  THEN NULL ELSE
+      |    round(round(sxy - round(sx*sy/CAST(k AS DOUBLE), 9), 9) /
+      |      round(sqrt(round(sxx - round(sx*sx/CAST(k AS DOUBLE), 9), 9)) *
+      |            sqrt(round(syy - round(sy*sy/CAST(k AS DOUBLE), 9), 9)),
+      |        9), 6)
+      |  END""".stripMargin
+
+  /** Weekly cohorts: each user's first-event week and every week they
+    * are active in, `active`(u, cohort, period_offset). */
+  private val cohortActiveSql: String =
+    """ev AS (SELECT user_id AS u, CAST(ts AS TIMESTAMP) AS ts FROM events),
+      |fst AS (SELECT u, min(ts) AS first_ts FROM ev GROUP BY 1),
+      |active AS (
+      |  SELECT DISTINCT e.u,
+      |    CAST(date_trunc('week', f.first_ts) AS DATE) AS cohort,
+      |    CAST(datediff('day',
+      |           CAST(date_trunc('week', f.first_ts) AS DATE),
+      |           CAST(date_trunc('week', e.ts) AS DATE)) / 7 AS BIGINT)
+      |      AS period_offset
+      |  FROM ev e JOIN fst f ON e.u = f.u)""".stripMargin
 
   /** Shared journey derivation + credit rollup for the attribution
     * oracles; `credit` is the per-touch DuckDB expression over
     * (u, t, id, ch, ct, rn, k) — window functions over u allowed. */
   private def attributionOracle(credit: String): String =
-    s"""WITH base AS (
-       |  SELECT user_id AS u, epoch_us(CAST(ts AS TIMESTAMP)) AS t,
-       |         event_id AS id, event_type AS ch,
-       |         event_type = 'purchase' AS c
-       |  FROM events),
-       |cv AS (SELECT u, min(t) AS ct FROM base WHERE c GROUP BY 1),
-       |cid AS (SELECT b.u, min(b.id) AS cid FROM base b
-       |        JOIN cv ON b.u = cv.u AND b.t = cv.ct
-       |        WHERE b.c GROUP BY 1),
+    s"""WITH $journeySql,
        |tch AS (SELECT b.u, b.t, b.id, b.ch, cv.ct FROM base b
        |        JOIN cv ON b.u = cv.u JOIN cid ON b.u = cid.u
        |        WHERE NOT b.c AND (b.t < cv.ct OR
@@ -4847,15 +5125,7 @@ object SparkEntry {
          |      ON dy.rc = pk.rc AND dy.tsx = pk.fs
          |    GROUP BY 1, 2) d ON s.rc = d.rc AND s.fs = d.fs)""".stripMargin
     }.mkString(",\n")
-    s"""WITH base AS (
-       |  SELECT user_id AS u, epoch_us(CAST(ts AS TIMESTAMP)) AS t,
-       |         event_id AS id, event_type AS ch,
-       |         event_type = 'purchase' AS c
-       |  FROM events),
-       |cv AS (SELECT u, min(t) AS ct FROM base WHERE c GROUP BY 1),
-       |cid AS (SELECT b.u, min(b.id) AS cid FROM base b
-       |        JOIN cv ON b.u = cv.u AND b.t = cv.ct
-       |        WHERE b.c GROUP BY 1),
+    s"""WITH $journeySql,
        |tch AS (SELECT b.u, b.t, b.id, b.ch, cv.ct FROM base b
        |        LEFT JOIN cv ON b.u = cv.u LEFT JOIN cid ON b.u = cid.u
        |        WHERE NOT b.c AND (cv.ct IS NULL OR b.t < cv.ct OR
@@ -4947,6 +5217,17 @@ object SparkEntry {
        |ORDER BY antecedent, consequent""".stripMargin
   }
 
+  /** CTE `name`(`col`): the discrete lower median (the value at rank
+    * ⌈n/2⌉) of the per-value counts `src`(v, c). */
+  private def lowerMedianSql(name: String, col: String, src: String): String =
+    s"""$name AS (SELECT v AS $col FROM
+       |  (SELECT v, c, sum(c) OVER (ORDER BY v) AS cum,
+       |          sum(c) OVER () AS nn FROM $src)
+       |  WHERE cum - c < CAST(ceil(round(0.5 * CAST(nn AS DOUBLE), 9))
+       |          AS BIGINT)
+       |    AND CAST(ceil(round(0.5 * CAST(nn AS DOUBLE), 9)) AS BIGINT)
+       |          <= cum)""".stripMargin
+
   /** Shared day-grid CTEs for the time-series oracles. */
   private val tsGridSql: String =
     """counts AS (SELECT CAST(ts AS DATE) AS day, count(*) AS n
@@ -4956,6 +5237,12 @@ object SparkEntry {
       |                AS DATE) AS day FROM bnds),
       |g2 AS (SELECT g.day, coalesce(c.n, 0) AS n
       |       FROM grid g LEFT JOIN counts c ON g.day = c.day)""".stripMargin
+
+  /** [[tsGridSql]] plus each grid day's 1-based position, `b`(day, n, rn). */
+  private val tsSeriesSql: String =
+    s"""$tsGridSql,
+       |b AS (SELECT day, n, CAST(row_number() OVER (ORDER BY day)
+       |             AS BIGINT) AS rn FROM g2)""".stripMargin
 
   /** α/(1−α) for q_ts_holt (α = 0.3) at 9 dp — the same driver-side
     * constant Timeseries.holt folds into its plan. */
@@ -4969,14 +5256,14 @@ object SparkEntry {
     * Experiment.twoSidedP's exact mirror). Ends mid-WITH (trailing
     * comma) so each oracle appends its own final CTEs/SELECT. */
   private val abZGroupedSql: String =
-    """WITH m AS (SELECT event_type AS grp,
-      |    count(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '0'
+    s"""WITH m AS (SELECT event_type AS grp,
+      |    count(CASE WHEN $paritySql = '0'
       |               THEN 1 END) AS n_a,
-      |    count(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '0'
+      |    count(CASE WHEN $paritySql = '0'
       |                AND coalesce(value > 50, FALSE) THEN 1 END) AS k_a,
-      |    count(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '1'
+      |    count(CASE WHEN $paritySql = '1'
       |               THEN 1 END) AS n_b,
-      |    count(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '1'
+      |    count(CASE WHEN $paritySql = '1'
       |                AND coalesce(value > 50, FALSE) THEN 1 END) AS k_b
       |  FROM events GROUP BY 1),
       |zc AS (SELECT *,
@@ -5025,16 +5312,102 @@ object SparkEntry {
        |  FROM p_$out GROUP BY rn)""".stripMargin
   }
 
-  /** One DiD cell's (count, Σx, Σx²) conditional aggregates over the
-    * `e` CTE (columns g, p, value) — Experiment.did's mirror. */
-  private def didCellSql(g: String, p: String, sfx: String): String =
-    s"""count(CASE WHEN g = '$g' AND p = '$p' AND value IS NOT NULL
+  /** One cell's (count, Σx, Σx²) conditional aggregates of `value`
+    * (9-dp snapped, DECIMAL sums) where `cond` holds — the moment cells
+    * of the DiD and Welch-family oracles. */
+  private def momentCellsSql(cond: String, sfx: String): String =
+    s"""count(CASE WHEN $cond AND value IS NOT NULL
        |        THEN 1 END) AS n_$sfx,
-       |  sum(CASE WHEN g = '$g' AND p = '$p'
+       |  sum(CASE WHEN $cond
        |      THEN CAST(round(value, 9) AS DECIMAL(28,9)) END) AS s_$sfx,
-       |  sum(CASE WHEN g = '$g' AND p = '$p'
+       |  sum(CASE WHEN $cond
        |      THEN CAST(round(round(value, 9) * round(value, 9), 9)
        |           AS DECIMAL(28,9)) END) AS s2_$sfx""".stripMargin
+
+  /** Per-arm purchase-conversion cells over events: n = events,
+    * k = purchases, per [[paritySql]] arm (a = '0', b = '1'). */
+  private val purchaseCellsSql: String =
+    s"""m AS (SELECT
+       |    count(CASE WHEN $paritySql = '0'
+       |               THEN 1 END) AS n_a,
+       |    count(CASE WHEN $paritySql = '0'
+       |                AND coalesce(event_type = 'purchase', FALSE)
+       |               THEN 1 END) AS k_a,
+       |    count(CASE WHEN $paritySql = '1'
+       |               THEN 1 END) AS n_b,
+       |    count(CASE WHEN $paritySql = '1'
+       |                AND coalesce(event_type = 'purchase', FALSE)
+       |               THEN 1 END) AS k_b
+       |  FROM events)""".stripMargin
+
+  /** One CUPED arm's (n, Σx, Σy, Σxy, Σx², Σy²) cells over the `b` CTE
+    * (arm v, metric y, covariate x; complete rows only). */
+  private def cupedCellsSql(v: String, sfx: String): String = {
+    val complete = s"v = '$v' AND y IS NOT NULL AND x IS NOT NULL"
+    val sums = Seq("x" -> "sx", "y" -> "sy", "round(x * y, 9)" -> "sxy",
+      "round(x * x, 9)" -> "sxx", "round(y * y, 9)" -> "syy").map { case (e, n) =>
+      s"sum(CASE WHEN $complete\n             THEN CAST($e AS DECIMAL(28,9)) END) AS ${n}_$sfx"
+    }
+    (s"count(CASE WHEN $complete\n               THEN 1 END) AS n_$sfx" +: sums)
+      .mkString(",\n    ")
+  }
+
+  /** One CUPED arm's 9-dp means, covariance and variances from
+    * [[cupedCellsSql]]. */
+  private def cupedArmSql(sfx: String): String = {
+    def d(c: String) = s"CAST(${c}_$sfx AS DOUBLE)"
+    (Seq("sx" -> "mx", "sy" -> "my").map { case (c, nm) =>
+      s"round(${d(c)} / ${d("n")}, 9) AS ${nm}_$sfx"
+    } ++ Seq(("sxy", "sx", "sy", "cov"), ("sxx", "sx", "sx", "vx"),
+      ("syy", "sy", "sy", "vy")).map { case (sxy, sx, sy, nm) =>
+      s"round((${d(sxy)} - ${d(sx)} *\n      ${d(sy)} / ${d("n")}) /\n" +
+        s"      (${d("n")} - 1.0), 9) AS ${nm}_$sfx"
+    }).mkString(",\n    ")
+  }
+
+  /** Per-arm conversion rates conv_a, conv_b from (n, k) cells, 6 dp. */
+  private val convRatesSql: String =
+    """CASE WHEN n_a = 0 THEN NULL
+      |       ELSE round(CAST(k_a AS DOUBLE) / CAST(n_a AS DOUBLE), 6)
+      |  END AS conv_a,
+      |  CASE WHEN n_b = 0 THEN NULL
+      |       ELSE round(CAST(k_b AS DOUBLE) / CAST(n_b AS DOUBLE), 6)
+      |  END AS conv_b""".stripMargin
+
+  /** Welch–Satterthwaite degrees of freedom from per-arm (n, v), 6 dp. */
+  private val welchDfSql: String =
+    """round(
+      |         (v_a / CAST(n_a AS DOUBLE) + v_b / CAST(n_b AS DOUBLE)) *
+      |         (v_a / CAST(n_a AS DOUBLE) + v_b / CAST(n_b AS DOUBLE)) /
+      |         ((v_a / CAST(n_a AS DOUBLE)) * (v_a / CAST(n_a AS DOUBLE)) /
+      |            (CAST(n_a AS DOUBLE) - 1.0) +
+      |          (v_b / CAST(n_b AS DOUBLE)) * (v_b / CAST(n_b AS DOUBLE)) /
+      |            (CAST(n_b AS DOUBLE) - 1.0)), 6)""".stripMargin
+
+  /** Per-arm Welch moments over events: `m` cells ([[momentCellsSql]]
+    * on the [[paritySql]] arms), `st` means and E[x²] at 9 dp, `vv`
+    * sample variances — the Welch, MDE and mSPRT oracles' shared
+    * prefix. `grp`, when given, keys every CTE by that expression. */
+  private def welchMomentsSql(grp: Option[String] = None): String = {
+    val key = grp.fold("")(g => s" $g AS grp,")
+    val keyCol = grp.fold("")(_ => "grp, ")
+    s"""m AS (SELECT$key
+       |  ${momentCellsSql(s"$paritySql = '0'", "a")},
+       |  ${momentCellsSql(s"$paritySql = '1'", "b")}
+       |  FROM events${grp.fold("")(_ => " GROUP BY 1")}),
+       |st AS (SELECT ${keyCol}n_a, n_b,
+       |    round(CAST(s_a AS DOUBLE) / CAST(n_a AS DOUBLE), 9) AS m_a,
+       |    round(CAST(s_b AS DOUBLE) / CAST(n_b AS DOUBLE), 9) AS m_b,
+       |    round(CAST(s2_a AS DOUBLE) / CAST(n_a AS DOUBLE), 9) AS e2_a,
+       |    round(CAST(s2_b AS DOUBLE) / CAST(n_b AS DOUBLE), 9) AS e2_b
+       |  FROM m),
+       |vv AS (SELECT ${keyCol}n_a, n_b, m_a, m_b,
+       |    round((e2_a - m_a * m_a) *
+       |      (CAST(n_a AS DOUBLE) / (CAST(n_a AS DOUBLE) - 1.0)), 9) AS v_a,
+       |    round((e2_b - m_b * m_b) *
+       |      (CAST(n_b AS DOUBLE) / (CAST(n_b AS DOUBLE) - 1.0)), 9) AS v_b
+       |  FROM st)""".stripMargin
+  }
 
   private def didStatSql(sfx: String): String =
     s"""round(CAST(s_$sfx AS DOUBLE) / CAST(n_$sfx AS DOUBLE), 9)
@@ -5088,7 +5461,7 @@ object SparkEntry {
       s"replace($e, '$a $b', '$a$b')"
     }
     s"""WITH t AS (SELECT doc_id AS id,
-       |  unnest(regexp_split_to_array(trim(lower(text)), '[ \\t\\n\\x0b\\f\\r]+')) AS w
+       |  unnest($lowerToksSql) AS w
        |  FROM documents),
        |nz AS (SELECT id, w FROM t WHERE length(w) > 0),
        |enc AS (SELECT id, len(string_split($merged, ' ')) AS wt FROM nz),
@@ -5097,33 +5470,95 @@ object SparkEntry {
        |FROM documents d LEFT JOIN s ON d.doc_id = s.id ORDER BY id""".stripMargin
   }
 
+  /** Per-doc lower-cased term frequencies `tf`(doc_id, term, tf). */
+  private val docTfSql: String =
+    s"""dtoks AS (SELECT doc_id, unnest($lowerToksSql) AS term FROM documents),
+       |tf AS (SELECT doc_id, term, count(*) AS tf FROM dtoks
+       |       WHERE length(term) > 0 GROUP BY 1, 2)""".stripMargin
+
+  /** Add-0.5 unigram LM trained on `documents$where`, scoring every
+    * doc's [[docTfSql]] terms: `<p>scored`(doc_id, n_tokens, nll) with
+    * 9-dp per-term NLLs DECIMAL-summed — LmScore.unigramNll's mirror. */
+  private def unigramNllSql(p: String, where: String = ""): String =
+    s"""${p}toks AS (SELECT unnest($lowerToksSql) AS term FROM documents$where),
+       |${p}counts AS (SELECT term, count(*) AS c FROM ${p}toks
+       |           WHERE length(term) > 0 GROUP BY 1),
+       |${p}stats AS (SELECT CAST(sum(c) AS DOUBLE) AS t_total,
+       |                 CAST(count(*) AS DOUBLE) AS v FROM ${p}counts),
+       |${p}contrib AS (
+       |  SELECT doc_id, tf,
+       |    round(-tf * ln((coalesce(c, 0) + 0.5) /
+       |          (t_total + 0.5 * (v + 1.0))), 9) AS w
+       |  FROM tf LEFT JOIN ${p}counts USING (term) CROSS JOIN ${p}stats),
+       |${p}scored AS (
+       |  SELECT doc_id, sum(tf) AS n_tokens,
+       |    round(CAST(sum(CAST(w AS DECIMAL(20,9))) AS DOUBLE) / sum(tf), 6) AS nll
+       |  FROM ${p}contrib GROUP BY 1)""".stripMargin
+
+  /** Kneser-Ney scoring tail over the per-(doc, n-gram) probabilities
+    * `p`(doc_id, tf, v, p0): 9-dp NLL terms (unseen → 1/(V+1)),
+    * DECIMAL-summed per doc into (`n` n-grams, `nll`) for every doc. */
+  private def knScoreSql(n: String, nll: String): String =
+    s"""con AS (SELECT doc_id, tf,
+       |  round(-tf * ln(CASE WHEN p0 IS NULL OR p0 = 0.0
+       |                      THEN 1.0 / (v + 1.0) ELSE p0 END), 9) AS w
+       |  FROM p),
+       |s AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS $n,
+       |  round(CAST(sum(CAST(w AS DECIMAL(20,9))) AS DOUBLE) / sum(tf), 6)
+       |    AS $nll
+       |  FROM con GROUP BY 1)
+       |SELECT d.doc_id, CAST(coalesce(s.$n, 0) AS BIGINT) AS $n, s.$nll
+       |FROM documents d LEFT JOIN s USING (doc_id)
+       |ORDER BY doc_id""".stripMargin
+
+  /** Distinct non-empty lower-cased terms in the corpus, as DOUBLE. */
+  private val vocabSizeSql: String =
+    s"""(SELECT CAST(count(DISTINCT w) AS DOUBLE) FROM
+       |     (SELECT unnest($lowerToksSql) AS w FROM documents)
+       |     WHERE length(w) > 0)""".stripMargin
+
+  /** Hashed unigram+bigram features `fb`(doc_id, key, b) of every doc's
+    * lower-cased tokens: the polynomial character-fold hash mod
+    * `buckets` — the DSIR and classifier feature space. `key` is an
+    * optional (documents expression, column name) carried alongside. */
+  private def hashedFeatsSql(buckets: Int, distinct: Boolean,
+                             key: Option[(String, String)] = None): String = {
+    val sel = key.fold("")(k => s"${k._1}, ")
+    val kc = key.fold("")(k => s"${k._2}, ")
+    val akc = key.fold("")(k => s"a.${k._2}, ")
+    s"""toks AS (SELECT doc_id, $sel$lowerToksSql AS ws FROM documents),
+       |uni AS (
+       |  SELECT doc_id, ${kc}w, i
+       |  FROM (SELECT doc_id, ${kc}unnest(ws) AS w,
+       |               unnest(range(1, len(ws) + 1)) AS i FROM toks)
+       |  WHERE length(w) > 0),
+       |feats AS (
+       |  SELECT doc_id, ${kc}w AS f FROM uni
+       |  UNION ALL
+       |  SELECT a.doc_id, ${akc}a.w || ' ' || b.w
+       |  FROM uni a JOIN uni b ON a.doc_id = b.doc_id AND b.i = a.i + 1),
+       |fb AS (
+       |  SELECT ${if (distinct) "DISTINCT " else ""}doc_id, $kc
+       |    list_reduce(list_transform(string_split(f, ''), x -> unicode(x)),
+       |                (h, c) -> (h * 31 + c) % 2000003) % $buckets AS b
+       |  FROM feats)""".stripMargin
+  }
+
+  /** The DSIR oracles' feature buckets: lower-cased unigrams and
+    * bigrams per doc, polynomial-hashed into 4096 buckets `fb`, with
+    * target (English) `tc` and raw `rc` bucket counts and their totals. */
+  private val dsirBucketsSql: String =
+    s"""${hashedFeatsSql(4096, distinct = false, Some("lang" -> "lang"))},
+       |tc AS (SELECT b, count(*) AS ct FROM fb WHERE lang = 'en' GROUP BY 1),
+       |rc AS (SELECT b, count(*) AS cr FROM fb GROUP BY 1),
+       |tot AS (SELECT (SELECT CAST(sum(ct) AS DOUBLE) FROM tc) AS tt,
+       |               (SELECT CAST(sum(cr) AS DOUBLE) FROM rc) AS tr)""".stripMargin
+
   /** DuckDB oracle for [[graft.operators.Dsir.importanceWeights]] —
     * shared by the weights gate and the Gumbel-sample gate. The
     * polynomial bucket hash is reproduced character-by-character. */
   private val dsirWeightsSql: String =
-    """WITH toks AS (
-      |  SELECT doc_id, lang,
-      |    regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+') AS ws
-      |  FROM documents),
-      |uni AS (
-      |  SELECT doc_id, lang, w, i
-      |  FROM (SELECT doc_id, lang, unnest(ws) AS w,
-      |               unnest(range(1, len(ws) + 1)) AS i FROM toks)
-      |  WHERE length(w) > 0),
-      |feats AS (
-      |  SELECT doc_id, lang, w AS f FROM uni
-      |  UNION ALL
-      |  SELECT a.doc_id, a.lang, a.w || ' ' || b.w
-      |  FROM uni a JOIN uni b ON a.doc_id = b.doc_id AND b.i = a.i + 1),
-      |fb AS (
-      |  SELECT doc_id, lang,
-      |    list_reduce(list_transform(string_split(f, ''), x -> unicode(x)),
-      |                (h, c) -> (h * 31 + c) % 2000003) % 4096 AS b
-      |  FROM feats),
-      |tc AS (SELECT b, count(*) AS ct FROM fb WHERE lang = 'en' GROUP BY 1),
-      |rc AS (SELECT b, count(*) AS cr FROM fb GROUP BY 1),
-      |tot AS (SELECT (SELECT CAST(sum(ct) AS DOUBLE) FROM tc) AS tt,
-      |               (SELECT CAST(sum(cr) AS DOUBLE) FROM rc) AS tr),
+    s"""WITH $dsirBucketsSql,
       |df AS (SELECT doc_id, b, count(*) AS c FROM fb GROUP BY 1, 2),
       |con AS (
       |  SELECT doc_id, c,
@@ -5348,7 +5783,7 @@ object SparkEntry {
     "SELECT doc_id AS id, (doc_id * 2654435761 % 2147483647) * 4294967296 " +
       "+ (doc_id * 40503 % 2147483647) AS fp FROM documents " +
       "UNION ALL " +
-      "SELECT doc_id + 1000000, xor((doc_id * 2654435761 % 2147483647) * 4294967296 " +
+      s"SELECT doc_id + $TwinShift, xor((doc_id * 2654435761 % 2147483647) * 4294967296 " +
       "+ (doc_id * 40503 % 2147483647), 5) FROM documents"
 
   /** DuckDB mirror of `sftTurns` — the SFT gates' conversation re-keying
@@ -5404,7 +5839,7 @@ object SparkEntry {
       .map(w => s"'$w'").mkString("(", ", ", ")")
     s"""base AS (
        |  SELECT doc_id, text,
-       |    list_filter(regexp_split_to_array(trim(text), '[ \\t\\n\\x0b\\f\\r]+'), w -> length(w) > 0) AS ws,
+       |    list_filter($toksSql, w -> length(w) > 0) AS ws,
        |    list_filter(regexp_split_to_array(text, '\\n'), l -> length(trim(l)) > 0) AS ls,
        |    list_filter(regexp_split_to_array(trim(text), '\\n'), s -> length(trim(s)) > 0) AS segs
        |  FROM $corpus),
@@ -5469,18 +5904,12 @@ object SparkEntry {
     * constants (RE2/Java-portable by construction). */
   private def piiOracle: String = {
     import graft.operators.Pii._
-    val inject = "text || ' reach user' || CAST(doc_id AS VARCHAR) || " +
-      "'@example.com or 10.' || CAST(doc_id % 200 AS VARCHAR) || " +
-      "'.0.1 ssn 123-45-6789 tel 555-123-4567'"
     val redacted = Seq(emailPattern -> "[EMAIL]", ssnPattern -> "[SSN]",
       phonePattern -> "[PHONE]", ipv4Pattern -> "[IP]")
       .foldLeft("text") { case (acc, (pat, tag)) =>
         s"regexp_replace($acc, '$pat', '$tag', 'g')"
       }
-    s"""WITH injected AS (
-       |  SELECT doc_id,
-       |    CASE WHEN doc_id % 3 <> 0 THEN $inject ELSE text END AS text
-       |  FROM documents)
+    s"""WITH $piiInjectedSql
        |SELECT doc_id,
        |  CAST(len(regexp_extract_all(text, '$emailPattern')) AS BIGINT) AS n_email,
        |  CAST(len(regexp_extract_all(text, '$ssnPattern')) AS BIGINT) AS n_ssn,
@@ -5863,12 +6292,9 @@ object SparkEntry {
          |    CAST(n_approx + n_exact AS DOUBLE) END, 6) AS f1
          |FROM c""".stripMargin,
     "q_dedup_simhash_twins" ->
-      ("SELECT doc_id AS id_a, doc_id + 1000000 AS id_b, " +
-        "CAST(0 AS INTEGER) AS hamming FROM documents ORDER BY id_a"),
+      docTwinPairsSql(", CAST(0 AS INTEGER) AS hamming"),
     "q_dedup_minhash_exact" ->
-      ngramJaccardOracle(n = 3, threshold = 1.0, corpus =
-        "(SELECT doc_id, text FROM documents UNION ALL " +
-          "SELECT doc_id + 1000000 AS doc_id, text FROM documents)"),
+      ngramJaccardOracle(n = 3, threshold = 1.0, corpus = s"($docsWithTwinsSql)"),
     "q_multimodal_meta" ->
       ("SELECT doc_id, 'application/octet-stream' AS mime, " +
         "octet_length(encode(text)) AS n_bytes FROM documents"),
@@ -5886,54 +6312,22 @@ object SparkEntry {
     // Default window frames on both sides (RANGE to current row incl.
     // peers) — tie rows get identical running sums in both engines.
     "q_sessionize" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts))
-        |              > 1800000000 THEN 1 ELSE 0 END AS new_s
-        |  FROM events),
-        |numbered AS (
-        |  SELECT user_id, ts,
-        |    CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT) AS session_id
-        |  FROM flagged)
+      s"""WITH $sessionsSql
         |SELECT user_id, session_id, min(ts) AS session_start,
         |       max(ts) AS session_end, count(*) AS n_events
         |FROM numbered GROUP BY user_id, session_id
         |ORDER BY user_id, session_id""".stripMargin,
     "q_session_stats" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts))
-        |              > 1800000000 THEN 1 ELSE 0 END AS new_s
-        |  FROM events),
-        |numbered AS (
-        |  SELECT user_id, ts,
-        |    CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT) AS session_id
-        |  FROM flagged),
+      s"""WITH $sessionsSql,
         |sessions AS (
         |  SELECT user_id, session_id,
         |         epoch_us(CAST(max(ts) AS TIMESTAMP)) -
         |         epoch_us(CAST(min(ts) AS TIMESTAMP)) AS dur_us
         |  FROM numbered GROUP BY user_id, session_id),
         |durs AS (SELECT 'all' AS g, dur_us FROM sessions),
-        |ranked AS (
-        |  SELECT g, dur_us,
-        |    row_number() OVER (PARTITION BY g ORDER BY dur_us ASC) AS rn,
-        |    count(*) OVER (PARTITION BY g) AS n
-        |  FROM durs)
-        |SELECT g, CAST(p AS DOUBLE) AS p, dur_us AS value
-        |FROM ranked CROSS JOIN (VALUES (0.5), (0.9), (0.99)) AS ps(p)
-        |WHERE rn = CAST(ceil(p * n) AS BIGINT)
-        |ORDER BY p""".stripMargin,
-    "q_dedup_components" ->
-      ("WITH all_docs AS (SELECT doc_id, text FROM documents " +
-        "UNION ALL SELECT doc_id + 1000000 AS doc_id, text FROM documents) " +
-        "SELECT doc_id AS id, min(doc_id) OVER (PARTITION BY text) AS comp " +
-        "FROM all_docs ORDER BY id"),
-    "q_dedup_components_star" ->
-      ("WITH all_docs AS (SELECT doc_id, text FROM documents " +
-        "UNION ALL SELECT doc_id + 1000000 AS doc_id, text FROM documents) " +
-        "SELECT doc_id AS id, min(doc_id) OVER (PARTITION BY text) AS comp " +
-        "FROM all_docs ORDER BY id"),
+        |$durQuantilesSql""".stripMargin,
+    "q_dedup_components" -> twinComponentsSql,
+    "q_dedup_components_star" -> twinComponentsSql,
     "q_dedup_components_chain" ->
       ("SELECT doc_id AS id, (SELECT min(doc_id) FROM documents) AS comp " +
         "FROM documents ORDER BY id"),
@@ -5982,15 +6376,7 @@ object SparkEntry {
         |       valid_to IS NULL AS is_current
         |FROM f ORDER BY user_id, valid_from""".stripMargin,
     "q_drift_embedding" ->
-      s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-         |           FROM embeddings),
-         |ex AS (SELECT vec_id, label, unnest(v) AS x,
-         |              unnest(range(1, len(v) + 1)) AS pos FROM e),
-         |cent AS (
-         |  SELECT label, pos,
-         |    CAST(sum(CAST(round(x, 9) AS DECIMAL(27,9))) AS DOUBLE) / count(*) AS c
-         |  FROM ex GROUP BY 1, 2),
-         |cl AS (SELECT label, list(c ORDER BY pos) AS cv FROM cent GROUP BY 1),
+      s"""WITH $labelCentroidsSql,
          |scored AS (
          |  SELECT e.vec_id,
          |         round(list_cosine_similarity(e.v, cl.cv), 6) AS cosine
@@ -6182,9 +6568,7 @@ object SparkEntry {
         |  substring(md5(text), 1, 1)) - 1) % 4 AS INTEGER) AS fold
         |FROM documents""".stripMargin,
     "q_keywords" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+')) AS term
-        |  FROM documents),
+      s"""WITH $docTermsSql,
         |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
         |       WHERE length(term) > 1 GROUP BY doc_id, term),
         |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
@@ -6196,11 +6580,9 @@ object SparkEntry {
         |SELECT doc_id, rnk, term, tf, df FROM ranked WHERE rnk <= 5
         |ORDER BY doc_id, rnk""".stripMargin,
     "q_dedup_winnow_twins" ->
-      ("SELECT doc_id AS id_a, doc_id + 1000000 AS id_b, " +
-        "CAST(1.0 AS DOUBLE) AS jaccard FROM documents ORDER BY id_a"),
+      docTwinPairsSql(", CAST(1.0 AS DOUBLE) AS jaccard"),
     "q_text_fingerprint_twins" ->
-      ("SELECT doc_id AS id_a, doc_id + 1000000 AS id_b " +
-        "FROM documents ORDER BY id_a"),
+      docTwinPairsSql(""),
     "q_text_winnow_twins" ->
       ("SELECT doc_id, TRUE AS same_count, TRUE AS same_digest, " +
         "TRUE AS matches_spec FROM documents ORDER BY doc_id"),
@@ -6233,8 +6615,7 @@ object SparkEntry {
     "q_vocab_fertility" ->
       (s"""WITH t AS (SELECT lang,
          |  len(regexp_extract_all(text, '${TF.bpePattern.replace("'", "''")}')) AS b,
-         |  len(list_filter(regexp_split_to_array(trim(text),
-         |    '[ \\t\\n\\x0b\\f\\r]+'), w -> length(w) > 0)) AS w,
+         |  len(list_filter($toksSql, w -> length(w) > 0)) AS w,
          |  length(text) AS c
          |  FROM documents)
          |SELECT lang, CAST(sum(b) AS BIGINT) AS n_bpe,
@@ -6264,7 +6645,7 @@ object SparkEntry {
       s"""SELECT conv_id, turn, role, content FROM ($sftTurnsSql)
          |ORDER BY conv_id, turn""".stripMargin,
     "q_dedup_index" ->
-      ("SELECT doc_id + 1000000 AS id_new, doc_id AS id_hist, " +
+      (s"SELECT doc_id + $TwinShift AS id_new, doc_id AS id_hist, " +
         "CAST(1.0 AS DOUBLE) AS jaccard_est FROM documents ORDER BY id_hist"),
     "q_decontaminate_semantic" ->
       ("SELECT vec_id, vec_id AS eval_id, CAST(1.0 AS DOUBLE) AS cosine " +
@@ -6418,15 +6799,7 @@ object SparkEntry {
          |FROM ci ORDER BY item""".stripMargin
     },
     "q_cluster_assign" ->
-      s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-         |           FROM embeddings),
-         |ex AS (SELECT vec_id, label, unnest(v) AS x,
-         |              unnest(range(1, len(v) + 1)) AS pos FROM e),
-         |cent AS (
-         |  SELECT label, pos,
-         |    CAST(sum(CAST(round(x, 9) AS DECIMAL(27,9))) AS DOUBLE) / count(*) AS c
-         |  FROM ex GROUP BY 1, 2),
-         |cl AS (SELECT label, list(c ORDER BY pos) AS cv FROM cent GROUP BY 1),
+      s"""WITH $labelCentroidsSql,
          |sc AS (SELECT e.vec_id, cl.label,
          |              round(list_cosine_similarity(e.v, cl.cv), 6) AS c
          |       FROM e CROSS JOIN cl)
@@ -6439,16 +6812,7 @@ object SparkEntry {
     // q_cluster_assign, then a = 1 − best cosine, b = 1 − best cosine
     // among the OTHER labels, s = (b − a)/max(a, b).
     "q_cluster_silhouette" ->
-      """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings),
-        |ex AS (SELECT vec_id, label, unnest(v) AS x,
-        |              unnest(range(1, len(v) + 1)) AS pos FROM e),
-        |cent AS (
-        |  SELECT label, pos,
-        |    CAST(sum(CAST(round(x, 9) AS DECIMAL(27,9))) AS DOUBLE) /
-        |      count(*) AS c
-        |  FROM ex GROUP BY 1, 2),
-        |cl AS (SELECT label, list(c ORDER BY pos) AS cv FROM cent GROUP BY 1),
+      s"""WITH $labelCentroidsSql,
         |sc AS (SELECT e.vec_id, cl.label,
         |              round(list_cosine_similarity(e.v, cl.cv), 6) AS c
         |       FROM e CROSS JOIN cl),
@@ -6470,16 +6834,15 @@ object SparkEntry {
         |FROM top t LEFT JOIN sec s ON t.vec_id = s.vec_id
         |ORDER BY t.vec_id""".stripMargin,
     "q_dedup_minhash_estimate" ->
-      ("SELECT doc_id AS id_a, doc_id + 1000000 AS id_b, " +
-        "CAST(1.0 AS DOUBLE) AS jaccard_est FROM documents ORDER BY id_a"),
+      docTwinPairsSql(", CAST(1.0 AS DOUBLE) AS jaccard_est"),
     "q_dedup_incremental" ->
-      ("SELECT doc_id + 1000000 AS doc_id FROM documents " +
+      (s"SELECT doc_id + $TwinShift AS doc_id FROM documents " +
         "WHERE doc_id < 50 ORDER BY doc_id"),
     "q_dedup_containment" ->
       ngramJaccardOracle(n = 3, threshold = 0.6, containment = true),
     "q_text_chunks" ->
-      """WITH t AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '[ \t\n\x0b\f\r]+') AS toks
+      s"""WITH t AS (
+        |  SELECT doc_id, $toksSql AS toks
         |  FROM documents),
         |c AS (SELECT doc_id, toks,
         |        CASE WHEN len(toks) <= 32 THEN 1
@@ -6533,7 +6896,7 @@ object SparkEntry {
         "JOIN (SELECT p_partkey AS partkey, p_name, p_retailprice FROM part) r " +
         "ON l.partkey = r.partkey"),
     "q_custom_simhash" ->
-      "SELECT doc_id AS id_a, doc_id + 1000000 AS id_b FROM documents ORDER BY id_a",
+      docTwinPairsSql(""),
     "q_multimodal_decode_real" ->
       ("SELECT * FROM (VALUES " +
         "('tiny.png', 'image/png', 4, 3, 3), " +
@@ -6609,41 +6972,26 @@ object SparkEntry {
     // 0.9 threshold (max ~0.6 in testdata), so the result is exactly the
     // twin pairs — closed-form oracle, no vector math needed in DuckDB.
     "q_dedup_embed" ->
-      ("SELECT vec_id AS id_a, vec_id + 1000000 AS id_b, " +
-        "CAST(1.0 AS DOUBLE) AS cosine FROM embeddings ORDER BY id_a, id_b"),
+      vecTwinPairsSql,
     "q_ann_lsh_twin" ->
-      ("SELECT vec_id AS query_id, CAST(1 AS BIGINT) AS rank, " +
-        "vec_id + 1000000 AS vec_id, CAST(1.0 AS DOUBLE) AS cosine " +
-        "FROM embeddings WHERE vec_id < 5 ORDER BY query_id"),
+      vecTwinTop1Sql,
     "q_ann_ivf_twin" ->
-      ("SELECT vec_id AS query_id, CAST(1 AS BIGINT) AS rank, " +
-        "vec_id + 1000000 AS vec_id, CAST(1.0 AS DOUBLE) AS cosine " +
-        "FROM embeddings WHERE vec_id < 5 ORDER BY query_id"),
+      vecTwinTop1Sql,
     // save/load must be a no-op on results: same closed-form oracle
     "q_ann_ivf_persisted" ->
-      ("SELECT vec_id AS query_id, CAST(1 AS BIGINT) AS rank, " +
-        "vec_id + 1000000 AS vec_id, CAST(1.0 AS DOUBLE) AS cosine " +
-        "FROM embeddings WHERE vec_id < 5 ORDER BY query_id"),
+      vecTwinTop1Sql,
     // append against frozen centroids must find the appended twins
     "q_ann_ivf_append" ->
-      ("SELECT vec_id AS query_id, CAST(1 AS BIGINT) AS rank, " +
-        "vec_id + 1000000 AS vec_id, CAST(1.0 AS DOUBLE) AS cosine " +
-        "FROM embeddings WHERE vec_id < 5 ORDER BY query_id"),
+      vecTwinTop1Sql,
     // the stream-legal plan must lose nothing: same closed-form oracle
     "q_ann_ivf_stream" ->
-      ("SELECT vec_id AS query_id, CAST(1 AS BIGINT) AS rank, " +
-        "vec_id + 1000000 AS vec_id, CAST(1.0 AS DOUBLE) AS cosine " +
-        "FROM embeddings WHERE vec_id < 5 ORDER BY query_id"),
+      vecTwinTop1Sql,
     // Exact brute-force top-k IS DuckDB-expressible: both engines compute
     // double cosine (differences live below the 6-decimal rounding), and
     // rank ties break on vec_id in both. Top-10 cosine gaps in the
     // testdata are ~1e-3, far above FP noise, so ranks are stable.
     "q_ann_bruteforce" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |p AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-        |scored AS (
-        |  SELECT p.query_id, e.vec_id, list_cosine_similarity(p.qv, e.v) AS cosine
-        |  FROM e CROSS JOIN p WHERE e.vec_id != p.query_id),
+      s"""WITH $probeScoresSql,
         |ranked AS (
         |  SELECT query_id, vec_id, cosine,
         |         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC) AS rank
@@ -6687,11 +7035,7 @@ object SparkEntry {
     // re-rank on the ROUNDED cosine (the operator consumes topK's
     // 6-dp output) with id tie-breaks.
     "q_sample_hard_negatives" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |p AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-        |scored AS (
-        |  SELECT p.query_id, e.vec_id, list_cosine_similarity(p.qv, e.v) AS cosine
-        |  FROM e CROSS JOIN p WHERE e.vec_id != p.query_id),
+      s"""WITH $probeScoresSql,
         |ranked AS (
         |  SELECT query_id, vec_id, cosine,
         |         row_number() OVER (PARTITION BY query_id
@@ -6736,9 +7080,7 @@ object SparkEntry {
     // GROUP BY text ≡ the digest grouping (nulls group together both
     // ways); strlen = UTF-8 bytes, matching Spark octet_length.
     "q_dedup_report" ->
-      """WITH c AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text FROM documents),
+      s"""WITH c AS ($docsWithTwinsSql),
         |g AS (SELECT count(*) AS n,
         |        sum(coalesce(strlen(text), 0)) AS bytes,
         |        min(coalesce(strlen(text), 0)) AS one
@@ -6819,20 +7161,11 @@ object SparkEntry {
         |WHERE cum - s < tot * CAST(0.8 AS DECIMAL(10,9))
         |ORDER BY doc_id""".stripMargin,
     "q_olap_rollup" ->
-      ("SELECT o_orderpriority, o_orderstatus, " +
-        "CAST(GROUPING(o_orderpriority, o_orderstatus) AS BIGINT) AS gid, " +
-        "count(*) AS n, CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS rev " +
-        "FROM orders GROUP BY ROLLUP(o_orderpriority, o_orderstatus)"),
+      s"$olapSelectSql FROM orders GROUP BY ROLLUP(o_orderpriority, o_orderstatus)",
     "q_olap_cube" ->
-      ("SELECT o_orderpriority, o_orderstatus, " +
-        "CAST(GROUPING(o_orderpriority, o_orderstatus) AS BIGINT) AS gid, " +
-        "count(*) AS n, CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS rev " +
-        "FROM orders GROUP BY CUBE(o_orderpriority, o_orderstatus)"),
+      s"$olapSelectSql FROM orders GROUP BY CUBE(o_orderpriority, o_orderstatus)",
     "q_olap_grouping_sets" ->
-      ("SELECT o_orderpriority, o_orderstatus, " +
-        "CAST(GROUPING(o_orderpriority, o_orderstatus) AS BIGINT) AS gid, " +
-        "count(*) AS n, CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS rev " +
-        "FROM orders GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus))"),
+      s"$olapSelectSql FROM orders GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus))",
     "q_window_nav" ->
       """SELECT event_id, user_id, CAST(row_number() OVER w AS INTEGER) AS rn,
         |  epoch_us(CAST(ts AS TIMESTAMP)) - lag(epoch_us(CAST(ts AS TIMESTAMP))) OVER w
@@ -6866,11 +7199,7 @@ object SparkEntry {
         |  FROM documents WHERE n_chars IS NOT NULL) t
         |GROUP BY bucket""".stripMargin,
     "q_profile_quantiles" ->
-      """WITH ranked AS (
-        |  SELECT lang, n_chars,
-        |    row_number() OVER (PARTITION BY lang ORDER BY n_chars ASC) AS rn,
-        |    count(*) OVER (PARTITION BY lang) AS n
-        |  FROM documents WHERE n_chars IS NOT NULL)
+      s"""WITH $langLenRanksSql
         |SELECT lang, CAST(p AS DOUBLE) AS p, n_chars AS value
         |FROM ranked CROSS JOIN (VALUES (0.5), (0.9), (0.99)) AS ps(p)
         |WHERE rn = CAST(ceil(p * n) AS BIGINT)""".stripMargin,
@@ -6878,11 +7207,7 @@ object SparkEntry {
       ("SELECT lang, count(DISTINCT text) AS n_exact, TRUE AS within_tol " +
         "FROM documents GROUP BY lang"),
     "q_sketch_quantiles" ->
-      """WITH ranked AS (
-        |  SELECT lang, n_chars,
-        |    row_number() OVER (PARTITION BY lang ORDER BY n_chars ASC) AS rn,
-        |    count(*) OVER (PARTITION BY lang) AS n
-        |  FROM documents WHERE n_chars IS NOT NULL)
+      s"""WITH $langLenRanksSql
         |SELECT lang, CAST(p AS DOUBLE) AS p, n_chars AS value, TRUE AS within_tol
         |FROM ranked CROSS JOIN (VALUES (0.5), (0.9), (0.99)) AS ps(p)
         |WHERE rn = CAST(ceil(p * n) AS BIGINT)""".stripMargin,
@@ -6941,9 +7266,7 @@ object SparkEntry {
       ("SELECT doc_id, nfc_normalize(text || ' re\u0301sume\u0301') AS nfc_text " +
         "FROM documents"),
     "q_vocab_oov" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+')) AS term
-        |  FROM documents),
+      s"""WITH $docTermsSql,
         |nz AS (SELECT doc_id, term FROM toks WHERE length(term) > 0),
         |vocab AS (
         |  SELECT term FROM (
@@ -6955,21 +7278,15 @@ object SparkEntry {
         |  round(CAST(sum(oov) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS oov_rate
         |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin,
     "q_pack" ->
-      """WITH t AS (
-        |  SELECT doc_id, doc_id % 8 AS shard,
-        |    CAST(len(regexp_split_to_array(trim(text), '[ \t\n\x0b\f\r]+')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |c AS (SELECT doc_id, shard, n_tokens,
-        |        sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id) AS cum
-        |      FROM t)
+      s"""WITH $packCumSql
         |SELECT doc_id, shard,
         |  CAST(floor(CAST(cum - n_tokens AS DOUBLE) / CAST(500 AS DOUBLE)) AS BIGINT) AS pack,
         |  n_tokens
         |FROM c ORDER BY doc_id""".stripMargin,
     "q_pack_assemble" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id, text, doc_id % 8 AS shard,
-        |    CAST(len(regexp_split_to_array(trim(text), '[ \t\n\x0b\f\r]+')) AS BIGINT) AS n_tokens
+        |    CAST(len($toksSql) AS BIGINT) AS n_tokens
         |  FROM documents),
         |c AS (SELECT doc_id, text, shard, n_tokens,
         |        sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id) AS cum
@@ -6998,10 +7315,10 @@ object SparkEntry {
          |SELECT doc_id, n_words, mean_word_len, dup_line_frac
          |FROM m ORDER BY doc_id""".stripMargin,
     "q_quality_repetition" ->
-      """WITH g AS (
+      s"""WITH g AS (
         |  SELECT doc_id, unnest(list_transform(range(1, greatest(len(toks)-1, 1)+1),
         |    i -> array_to_string(list_slice(toks, i, i+1), ' '))) AS ngram
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '[ \t\n\x0b\f\r]+') AS toks
+        |  FROM (SELECT doc_id, $toksSql AS toks
         |        FROM documents)),
         |c AS (SELECT doc_id, ngram, count(*) AS cnt FROM g GROUP BY doc_id, ngram),
         |r AS (SELECT doc_id, ngram, cnt,
@@ -7021,10 +7338,10 @@ object SparkEntry {
     "q_pii_redact" -> piiOracle,
     "q_sample_stratified" -> sampleOracle,
     "q_ngram_counts" ->
-      """WITH grams AS (
+      s"""WITH grams AS (
         |  SELECT unnest(list_transform(range(1, greatest(len(toks)-1, 1)+1),
         |    i -> array_to_string(list_slice(toks, i, i+1), ' '))) AS ngram
-        |  FROM (SELECT regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+') AS toks
+        |  FROM (SELECT $lowerToksSql AS toks
         |        FROM documents))
         |SELECT ngram, count(*) AS n_occurrences FROM grams
         |WHERE length(ngram) > 0
@@ -7034,14 +7351,13 @@ object SparkEntry {
     // filtered on both sides. The PMI product chain is parenthesized
     // identically to the Spark expression.
     "q_pmi_collocations" ->
-      """WITH bg0 AS (
+      s"""WITH bg0 AS (
         |  SELECT unnest(list_transform(range(1, greatest(len(toks)-1, 1)+1),
         |    i -> array_to_string(list_slice(toks, i, i+1), ' '))) AS g
-        |  FROM (SELECT regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+') AS toks
+        |  FROM (SELECT $lowerToksSql AS toks
         |        FROM documents)),
         |bg AS (SELECT g FROM bg0 WHERE g LIKE '% %'),
-        |ut AS (SELECT unnest(regexp_split_to_array(trim(lower(text)),
-        |         '[ \t\n\x0b\f\r]+')) AS w FROM documents),
+        |ut AS (SELECT unnest($lowerToksSql) AS w FROM documents),
         |cu AS (SELECT w, count(*) AS cu FROM ut
         |       WHERE length(w) > 0 GROUP BY 1),
         |cb AS (SELECT string_split(g, ' ')[1] AS w1, string_split(g, ' ')[2] AS w2,
@@ -7057,24 +7373,12 @@ object SparkEntry {
         |SELECT w1, w2, c_pair, pmi FROM s
         |ORDER BY pmi DESC, w1 ASC, w2 ASC LIMIT 50""".stripMargin,
     "q_decontaminate" ->
-      """WITH docs AS (
-        |  SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(toks)-2, 1)+1),
-        |         i -> array_to_string(list_slice(toks, i, i+2), ' '))) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '[ \t\n\x0b\f\r]+') AS toks
-        |        FROM documents)),
-        |ev AS (SELECT DISTINCT unnest(sh) AS s FROM docs WHERE doc_id < 10),
-        |inv AS (SELECT doc_id, unnest(sh) AS s FROM docs)
+      s"""WITH $decontamSql
         |SELECT inv.doc_id, count(*) AS n_hits
         |FROM inv JOIN ev ON inv.s = ev.s
         |GROUP BY inv.doc_id ORDER BY doc_id""".stripMargin,
     "q_decontaminate_remove" ->
-      """WITH docs AS (
-        |  SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(toks)-2, 1)+1),
-        |         i -> array_to_string(list_slice(toks, i, i+2), ' '))) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '[ \t\n\x0b\f\r]+') AS toks
-        |        FROM documents)),
-        |ev AS (SELECT DISTINCT unnest(sh) AS s FROM docs WHERE doc_id < 10),
-        |inv AS (SELECT doc_id, unnest(sh) AS s FROM docs),
+      s"""WITH $decontamSql,
         |hit AS (SELECT DISTINCT inv.doc_id FROM inv JOIN ev ON inv.s = ev.s)
         |SELECT d.doc_id FROM documents d
         |WHERE d.doc_id NOT IN (SELECT doc_id FROM hit)
@@ -7082,8 +7386,7 @@ object SparkEntry {
     // Same closed-form twin construction as q_dedup_embed: the result is
     // exactly the N twin pairs (cell assignment is scale-invariant).
     "q_dedup_semantic_twins" ->
-      ("SELECT vec_id AS id_a, vec_id + 1000000 AS id_b, " +
-        "CAST(1.0 AS DOUBLE) AS cosine FROM embeddings ORDER BY id_a, id_b"),
+      vecTwinPairsSql,
     "q_dedup_semantic" ->
       "SELECT vec_id FROM embeddings ORDER BY vec_id",
     "q_lines_dedup" ->
@@ -7153,27 +7456,7 @@ object SparkEntry {
          |  '^\\n|\\n$$', '', 'g') AS text
          |FROM h ORDER BY doc_id""".stripMargin,
     "q_search_bm25" ->
-      """WITH q AS (
-        |  SELECT CAST(query_id AS BIGINT) AS query_id, term
-        |  FROM (VALUES (1, 'spark'), (1, 'join'), (2, 'window'), (2, 'merge'),
-        |               (2, 'sort'), (3, 'customer')) v(query_id, term)),
-        |toks AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)),
-        |    '[ \t\n\x0b\f\r]+')) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
-        |       WHERE length(term) > 0 GROUP BY 1, 2),
-        |dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
-        |dfreq AS (SELECT term, count(*) AS n_t FROM tf GROUP BY 1),
-        |stats AS (
-        |  SELECT (SELECT count(*) FROM documents) AS n,
-        |         (SELECT CAST(sum(dl) AS DOUBLE) / count(*) FROM dl) AS avgdl),
-        |contrib AS (
-        |  SELECT q.query_id, tf.doc_id,
-        |    round(ln(1 + (n - n_t + 0.5) / (n_t + 0.5)) * (tf * 2.2) /
-        |          (tf + 1.2 * (0.25 + 0.75 * dl / avgdl)), 9) AS w
-        |  FROM tf JOIN q USING (term) JOIN dfreq USING (term)
-        |       JOIN dl USING (doc_id) CROSS JOIN stats),
+      s"""WITH $bm25ContribSql,
         |scored AS (
         |  SELECT query_id, doc_id,
         |    round(CAST(sum(CAST(w AS DECIMAL(20,9))) AS DOUBLE), 6) AS score
@@ -7187,46 +7470,8 @@ object SparkEntry {
         |SELECT query_id, rank, doc_id, score FROM ranked
         |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
     "q_search_hybrid" ->
-      """WITH q AS (
-        |  SELECT CAST(query_id AS BIGINT) AS query_id, term
-        |  FROM (VALUES (1, 'spark'), (1, 'join'), (2, 'window'), (2, 'merge'),
-        |               (2, 'sort'), (3, 'customer')) v(query_id, term)),
-        |toks AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)),
-        |    '[ \t\n\x0b\f\r]+')) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
-        |       WHERE length(term) > 0 GROUP BY 1, 2),
-        |dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
-        |dfreq AS (SELECT term, count(*) AS n_t FROM tf GROUP BY 1),
-        |stats AS (
-        |  SELECT (SELECT count(*) FROM documents) AS n,
-        |         (SELECT CAST(sum(dl) AS DOUBLE) / count(*) FROM dl) AS avgdl),
-        |contrib AS (
-        |  SELECT q.query_id, tf.doc_id,
-        |    round(ln(1 + (n - n_t + 0.5) / (n_t + 0.5)) * (tf * 2.2) /
-        |          (tf + 1.2 * (0.25 + 0.75 * dl / avgdl)), 9) AS w
-        |  FROM tf JOIN q USING (term) JOIN dfreq USING (term)
-        |       JOIN dl USING (doc_id) CROSS JOIN stats),
-        |scoredb AS (
-        |  SELECT query_id, doc_id,
-        |    round(CAST(sum(CAST(w AS DECIMAL(20,9))) AS DOUBLE), 6) AS score
-        |  FROM contrib GROUP BY 1, 2),
-        |bm AS (SELECT query_id, rank, doc_id FROM (
-        |  SELECT query_id, doc_id,
-        |    CAST(row_number() OVER (PARTITION BY query_id
-        |         ORDER BY score DESC, doc_id ASC) AS BIGINT) AS rank
-        |  FROM scoredb) WHERE rank <= 10),
-        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |p AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id IN (1, 2, 3)),
-        |scoreda AS (
-        |  SELECT p.query_id, e.vec_id, list_cosine_similarity(p.qv, e.v) AS cosine
-        |  FROM e CROSS JOIN p WHERE e.vec_id != p.query_id),
-        |ann AS (SELECT query_id, rank, vec_id AS doc_id FROM (
-        |  SELECT query_id, vec_id,
-        |    CAST(row_number() OVER (PARTITION BY query_id
-        |         ORDER BY cosine DESC, vec_id ASC) AS BIGINT) AS rank
-        |  FROM scoreda) WHERE rank <= 10),
+      s"""WITH $bm25Top10Sql,
+        |$denseTop10Sql,
         |f AS (
         |  SELECT coalesce(bm.query_id, ann.query_id) AS query_id,
         |    coalesce(bm.doc_id, ann.doc_id) AS doc_id,
@@ -7298,46 +7543,8 @@ object SparkEntry {
     // (n_gold = 10 per query here, so the ideal-DCG prefix is the
     // constant Σ_{i=1..10} — matching the operator's least(k, n_gold)).
     "q_retrieval_eval" ->
-      """WITH q AS (
-        |  SELECT CAST(query_id AS BIGINT) AS query_id, term
-        |  FROM (VALUES (1, 'spark'), (1, 'join'), (2, 'window'), (2, 'merge'),
-        |               (2, 'sort'), (3, 'customer')) v(query_id, term)),
-        |toks AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)),
-        |    '[ \t\n\x0b\f\r]+')) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
-        |       WHERE length(term) > 0 GROUP BY 1, 2),
-        |dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
-        |dfreq AS (SELECT term, count(*) AS n_t FROM tf GROUP BY 1),
-        |stats AS (
-        |  SELECT (SELECT count(*) FROM documents) AS n,
-        |         (SELECT CAST(sum(dl) AS DOUBLE) / count(*) FROM dl) AS avgdl),
-        |contrib AS (
-        |  SELECT q.query_id, tf.doc_id,
-        |    round(ln(1 + (n - n_t + 0.5) / (n_t + 0.5)) * (tf * 2.2) /
-        |          (tf + 1.2 * (0.25 + 0.75 * dl / avgdl)), 9) AS w
-        |  FROM tf JOIN q USING (term) JOIN dfreq USING (term)
-        |       JOIN dl USING (doc_id) CROSS JOIN stats),
-        |scoredb AS (
-        |  SELECT query_id, doc_id,
-        |    round(CAST(sum(CAST(w AS DECIMAL(20,9))) AS DOUBLE), 6) AS score
-        |  FROM contrib GROUP BY 1, 2),
-        |bm AS (SELECT query_id, rank, doc_id FROM (
-        |  SELECT query_id, doc_id,
-        |    CAST(row_number() OVER (PARTITION BY query_id
-        |         ORDER BY score DESC, doc_id ASC) AS BIGINT) AS rank
-        |  FROM scoredb) WHERE rank <= 10),
-        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |p AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id IN (1, 2, 3)),
-        |scoreda AS (
-        |  SELECT p.query_id, e.vec_id, list_cosine_similarity(p.qv, e.v) AS cosine
-        |  FROM e CROSS JOIN p WHERE e.vec_id != p.query_id),
-        |ann AS (SELECT query_id, vec_id AS doc_id FROM (
-        |  SELECT query_id, vec_id,
-        |    row_number() OVER (PARTITION BY query_id
-        |         ORDER BY cosine DESC, vec_id ASC) AS rank
-        |  FROM scoreda) WHERE rank <= 10),
+      s"""WITH $bm25Top10Sql,
+        |$denseTop10Sql,
         |gct AS (SELECT query_id, count(*) AS n_gold FROM ann GROUP BY 1),
         |h AS (SELECT bm.query_id, bm.rank FROM bm JOIN ann USING (query_id, doc_id)),
         |perq AS (
@@ -7359,9 +7566,8 @@ object SparkEntry {
         |FROM gct g LEFT JOIN perq p USING (query_id) CROSS JOIN ideal
         |ORDER BY query_id""".stripMargin,
     "q_keywords_logodds" ->
-      """WITH toks AS (SELECT lang = 'es' AS t,
-        |    unnest(regexp_split_to_array(trim(lower(text)),
-        |      '[ \t\n\x0b\f\r]+')) AS term
+      s"""WITH toks AS (SELECT lang = 'es' AS t,
+        |    unnest($lowerToksSql) AS term
         |  FROM documents),
         |f AS (SELECT t, term FROM toks WHERE length(term) > 1),
         |cells AS (SELECT term,
@@ -7414,9 +7620,7 @@ object SparkEntry {
     // Average-rank Mann-Whitney over per-score cells; ranks kept
     // integral as ×2 until the one division.
     "q_eval_auc" ->
-      """WITH sc AS (SELECT round(CAST((doc_id * 37) % 101 AS DOUBLE) / 100.0 +
-        |    CASE WHEN lang = 'en' THEN 0.15 ELSE 0.0 END, 6) AS s,
-        |  lang = 'en' AS y FROM documents),
+      s"""WITH sc AS (SELECT $docScoreSql AS s, lang = 'en' AS y FROM documents),
         |cells AS (SELECT s, count(*) AS n,
         |    sum(CASE WHEN y THEN 1 ELSE 0 END) AS np FROM sc GROUP BY 1),
         |r AS (SELECT *, coalesce(sum(n) OVER (ORDER BY s
@@ -7431,9 +7635,7 @@ object SparkEntry {
         |          / (CAST(n_pos AS DOUBLE)*CAST(n_neg AS DOUBLE)), 6) END AS auc
         |FROM a""".stripMargin,
     "q_eval_calibration" ->
-      """WITH sc AS (SELECT round(CAST((doc_id * 37) % 101 AS DOUBLE) / 100.0 +
-        |    CASE WHEN lang = 'en' THEN 0.15 ELSE 0.0 END, 6) AS s,
-        |  lang = 'en' AS y FROM documents),
+      s"""WITH sc AS (SELECT $docScoreSql AS s, lang = 'en' AS y FROM documents),
         |cl AS (SELECT least(greatest(s, 0.0), 1.0) AS s2, y FROM sc),
         |cells AS (SELECT CAST(least(floor(s2 * 10), 9) AS INTEGER) AS bin,
         |    count(*) AS n, sum(CAST(s2 AS DECIMAL(20,9))) AS ss,
@@ -7448,9 +7650,7 @@ object SparkEntry {
         |            round(CAST(np AS DOUBLE)/n, 6)), 6) AS ece_term
         |FROM cells CROSS JOIN t ORDER BY bin""".stripMargin,
     "q_eval_brier" ->
-      """WITH sc AS (SELECT round(CAST((doc_id * 37) % 101 AS DOUBLE) / 100.0 +
-        |    CASE WHEN lang = 'en' THEN 0.15 ELSE 0.0 END, 6) AS s,
-        |  lang = 'en' AS b FROM documents),
+      s"""WITH sc AS (SELECT $docScoreSql AS s, lang = 'en' AS b FROM documents),
         |cl AS (SELECT least(greatest(s, 0.0), 1.0) AS s2,
         |    CASE WHEN b THEN 1.0 ELSE 0.0 END AS y FROM sc),
         |cells AS (SELECT CAST(least(floor(s2 * 10), 9) AS INTEGER) AS bin,
@@ -7580,16 +7780,7 @@ object SparkEntry {
     // once at 6 dp with +0.0 collapsing -0.0 — rounding short decimals
     // again would manufacture cross-engine .5 ties.
     "q_embed_covariance" ->
-      """WITH x AS (SELECT CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings WHERE embedding IS NOT NULL),
-        |a AS (SELECT v, unnest(range(1, len(v)+1)) AS i FROM x),
-        |c AS (SELECT i, v, unnest(range(1, len(v)+1)) AS j FROM a),
-        |p AS (SELECT i, j, v[i] AS xi, v[j] AS xj FROM c WHERE j >= i),
-        |g AS (SELECT i, j, count(*) AS n,
-        |        sum(CAST(round(xi*xj, 9) AS DECIMAL(38,9))) AS sxy,
-        |        sum(CAST(round(xi, 9) AS DECIMAL(38,9))) AS sx,
-        |        sum(CAST(round(xj, 9) AS DECIMAL(38,9))) AS sy
-        |      FROM p GROUP BY 1, 2)
+      s"""WITH $covCellsSql
         |SELECT CAST(i AS INTEGER) AS i, CAST(j AS INTEGER) AS j, n,
         |  round(CAST(sxy AS DOUBLE)/n -
         |    (CAST(sx AS DOUBLE)/n) * (CAST(sy AS DOUBLE)/n), 6) + 0.0
@@ -7601,16 +7792,7 @@ object SparkEntry {
     // normalized components are raw IEEE doubles — bit-identical across
     // engines — published once at 6 dp (+0.0 collapses -0.0).
     "q_embed_pca" ->
-      """WITH x AS (SELECT CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings WHERE embedding IS NOT NULL),
-        |a AS (SELECT v, unnest(range(1, len(v)+1)) AS i FROM x),
-        |c AS (SELECT i, v, unnest(range(1, len(v)+1)) AS j FROM a),
-        |p AS (SELECT i, j, v[i] AS xi, v[j] AS xj FROM c WHERE j >= i),
-        |g AS (SELECT i, j, count(*) AS n,
-        |        sum(CAST(round(xi*xj, 9) AS DECIMAL(38,9))) AS sxy,
-        |        sum(CAST(round(xi, 9) AS DECIMAL(38,9))) AS sx,
-        |        sum(CAST(round(xj, 9) AS DECIMAL(38,9))) AS sy
-        |      FROM p GROUP BY 1, 2),
+      s"""WITH $covCellsSql,
         |up AS (SELECT i, j,
         |         CAST(sxy AS DOUBLE)/n -
         |           (CAST(sx AS DOUBLE)/n) * (CAST(sy AS DOUBLE)/n) AS cov
@@ -7781,11 +7963,7 @@ object SparkEntry {
         |  END AS f1
         |FROM c ORDER BY id""".stripMargin,
     "q_rater_kappa" ->
-      """WITH r AS (
-        |  SELECT CASE WHEN n_chars >= 400 THEN 'keep' ELSE 'drop' END AS a,
-        |         CASE WHEN len(regexp_split_to_array(trim(text),
-        |           '[ \t\n\x0b\f\r]+')) >= 60 THEN 'keep' ELSE 'drop' END AS b
-        |  FROM documents),
+      s"""WITH r AS (SELECT $lenRaterSql AS a, $tokRaterSql AS b FROM documents),
         |cells AS (SELECT a, b, count(*) AS c FROM r GROUP BY 1, 2),
         |tot AS (SELECT CAST(sum(c) AS BIGINT) AS n,
         |               CAST(sum(CASE WHEN a = b THEN c ELSE 0 END) AS BIGINT) AS agree
@@ -7808,19 +7986,8 @@ object SparkEntry {
     // BM25 recipe); category products run in DECIMAL; divisions mirror
     // the operator's expression shapes exactly.
     "q_rater_alpha" ->
-      """WITH r AS (
-        |  SELECT doc_id,
-        |    CASE WHEN n_chars >= 400 THEN 'keep' ELSE 'drop' END AS r_len,
-        |    CASE WHEN len(regexp_split_to_array(trim(text),
-        |      '[ \t\n\x0b\f\r]+')) >= 60 THEN 'keep' ELSE 'drop' END AS r_tok,
-        |    CASE WHEN doc_id % 3 = 0 THEN NULL
-        |         WHEN len(string_split(text, chr(10))) >= 5
-        |         THEN 'keep' ELSE 'drop' END AS r_lines
-        |  FROM documents),
-        |long AS (
-        |  SELECT doc_id, r_len AS label FROM r UNION ALL
-        |  SELECT doc_id, r_tok FROM r UNION ALL
-        |  SELECT doc_id, r_lines FROM r),
+      s"""WITH ${raterPanelSql(
+           s"CASE WHEN doc_id % 3 = 0 THEN NULL ELSE $linesRaterSql END")},
         |cells AS (SELECT doc_id, label, count(*) AS nij FROM long
         |          WHERE label IS NOT NULL GROUP BY 1, 2),
         |items AS (SELECT doc_id, sum(nij) AS mi FROM cells
@@ -7848,18 +8015,7 @@ object SparkEntry {
     // is IEEE-identical cross-engine; multiplication order mirrors the
     // operator ((N·n)·(n−1) and (N·n)·(N·n)).
     "q_rater_fleiss" ->
-      """WITH r AS (
-        |  SELECT doc_id,
-        |    CASE WHEN n_chars >= 400 THEN 'keep' ELSE 'drop' END AS r_len,
-        |    CASE WHEN len(regexp_split_to_array(trim(text),
-        |      '[ \t\n\x0b\f\r]+')) >= 60 THEN 'keep' ELSE 'drop' END AS r_tok,
-        |    CASE WHEN len(string_split(text, chr(10))) >= 5
-        |         THEN 'keep' ELSE 'drop' END AS r_lines
-        |  FROM documents),
-        |long AS (
-        |  SELECT doc_id, r_len AS label FROM r UNION ALL
-        |  SELECT doc_id, r_tok FROM r UNION ALL
-        |  SELECT doc_id, r_lines FROM r),
+      s"""WITH ${raterPanelSql(linesRaterSql)},
         |cells AS (SELECT doc_id, label, count(*) AS nij FROM long GROUP BY 1, 2),
         |peri AS (SELECT doc_id, sum(nij) AS ni, sum(nij * nij) AS sq
         |         FROM cells GROUP BY 1 HAVING sum(nij) = 3),
@@ -7880,58 +8036,16 @@ object SparkEntry {
         |       ELSE round((po - pe) / (1.0 - pe), 6) END AS kappa
         |FROM m""".stripMargin,
     "q_lm_score" ->
-      """WITH toks AS (
-        |  SELECT unnest(regexp_split_to_array(trim(lower(text)),
-        |    '[ \t\n\x0b\f\r]+')) AS term
-        |  FROM documents),
-        |counts AS (SELECT term, count(*) AS c FROM toks
-        |           WHERE length(term) > 0 GROUP BY 1),
-        |stats AS (SELECT CAST(sum(c) AS DOUBLE) AS t_total,
-        |                 CAST(count(*) AS DOUBLE) AS v FROM counts),
-        |dtoks AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)),
-        |    '[ \t\n\x0b\f\r]+')) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM dtoks
-        |       WHERE length(term) > 0 GROUP BY 1, 2),
-        |contrib AS (
-        |  SELECT doc_id, tf,
-        |    round(-tf * ln((coalesce(c, 0) + 0.5) /
-        |          (t_total + 0.5 * (v + 1.0))), 9) AS w
-        |  FROM tf LEFT JOIN counts USING (term) CROSS JOIN stats),
-        |scored AS (
-        |  SELECT doc_id, sum(tf) AS n_tokens,
-        |    round(CAST(sum(CAST(w AS DECIMAL(20,9))) AS DOUBLE) / sum(tf), 6) AS nll
-        |  FROM contrib GROUP BY 1)
+      s"""WITH $docTfSql,
+        |${unigramNllSql("")}
         |SELECT d.doc_id, CAST(coalesce(s.n_tokens, 0) AS BIGINT) AS n_tokens, s.nll
         |FROM documents d LEFT JOIN scored s USING (doc_id)
         |ORDER BY doc_id""".stripMargin,
     // CCNet tiers: identical scoring CTE as q_lm_score, then a
     // per-language ntile with NULLS LAST pinned on both engines.
     "q_lm_buckets" ->
-      """WITH toks AS (
-        |  SELECT unnest(regexp_split_to_array(trim(lower(text)),
-        |    '[ \t\n\x0b\f\r]+')) AS term
-        |  FROM documents),
-        |counts AS (SELECT term, count(*) AS c FROM toks
-        |           WHERE length(term) > 0 GROUP BY 1),
-        |stats AS (SELECT CAST(sum(c) AS DOUBLE) AS t_total,
-        |                 CAST(count(*) AS DOUBLE) AS v FROM counts),
-        |dtoks AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)),
-        |    '[ \t\n\x0b\f\r]+')) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM dtoks
-        |       WHERE length(term) > 0 GROUP BY 1, 2),
-        |contrib AS (
-        |  SELECT doc_id, tf,
-        |    round(-tf * ln((coalesce(c, 0) + 0.5) /
-        |          (t_total + 0.5 * (v + 1.0))), 9) AS w
-        |  FROM tf LEFT JOIN counts USING (term) CROSS JOIN stats),
-        |scored AS (
-        |  SELECT doc_id, sum(tf) AS n_tokens,
-        |    round(CAST(sum(CAST(w AS DECIMAL(20,9))) AS DOUBLE) / sum(tf), 6) AS nll
-        |  FROM contrib GROUP BY 1)
+      s"""WITH $docTfSql,
+        |${unigramNllSql("")}
         |SELECT d.doc_id, d.lang,
         |  CAST(coalesce(s.n_tokens, 0) AS BIGINT) AS n_tokens, s.nll,
         |  CAST(ntile(3) OVER (PARTITION BY d.lang
@@ -7942,15 +8056,14 @@ object SparkEntry {
     // identically-parenthesized probability expression, LmScore
     // decimal-sum determinism recipe.
     "q_lm_kn" ->
-      """WITH bg AS (
+      s"""WITH bg AS (
         |  SELECT doc_id, string_split(g, ' ')[1] AS w1,
         |         string_split(g, ' ')[2] AS w2
         |  FROM (
         |    SELECT doc_id, unnest(list_transform(
         |      range(1, greatest(len(toks)-1, 1)+1),
         |      i -> array_to_string(list_slice(toks, i, i+1), ' '))) AS g
-        |    FROM (SELECT doc_id, regexp_split_to_array(trim(lower(text)),
-        |            '[ \t\n\x0b\f\r]+') AS toks FROM documents))
+        |    FROM (SELECT doc_id, $lowerToksSql AS toks FROM documents))
         |  WHERE g LIKE '% %'),
         |c12 AS (SELECT w1, w2, count(*) AS c12 FROM bg GROUP BY 1, 2),
         |ctx AS (SELECT w1, sum(c12) AS c1, count(*) AS n1fw
@@ -7958,10 +8071,7 @@ object SparkEntry {
         |cont AS (SELECT w2, count(*) AS n1bw FROM c12 GROUP BY 1),
         |tot AS (SELECT
         |  (SELECT CAST(count(*) AS DOUBLE) FROM c12) AS nbig,
-        |  (SELECT CAST(count(DISTINCT w) AS DOUBLE) FROM
-        |     (SELECT unnest(regexp_split_to_array(trim(lower(text)),
-        |        '[ \t\n\x0b\f\r]+')) AS w FROM documents)
-        |     WHERE length(w) > 0) AS v),
+        |  $vocabSizeSql AS v),
         |tf AS (SELECT doc_id, w1, w2, count(*) AS tf
         |       FROM bg GROUP BY 1, 2, 3),
         |p AS (SELECT doc_id, tf, v,
@@ -7971,18 +8081,7 @@ object SparkEntry {
         |  / CAST(c1 AS DOUBLE) AS p0
         |  FROM tf LEFT JOIN c12 USING (w1, w2) LEFT JOIN ctx USING (w1)
         |       LEFT JOIN cont USING (w2) CROSS JOIN tot),
-        |con AS (SELECT doc_id, tf,
-        |  round(-tf * ln(CASE WHEN p0 IS NULL OR p0 = 0.0
-        |                      THEN 1.0 / (v + 1.0) ELSE p0 END), 9) AS w
-        |  FROM p),
-        |s AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_bigrams,
-        |  round(CAST(sum(CAST(w AS DECIMAL(20,9))) AS DOUBLE) / sum(tf), 6)
-        |    AS kn_nll
-        |  FROM con GROUP BY 1)
-        |SELECT d.doc_id, CAST(coalesce(s.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-        |       s.kn_nll
-        |FROM documents d LEFT JOIN s USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
+        |${knScoreSql("n_bigrams", "kn_nll")}""".stripMargin,
     "q_profile_corr" -> corrOracle("lineitem",
       Seq("l_quantity", "l_extendedprice", "l_discount")),
     "q_sample_topk_heap" ->
@@ -8000,48 +8099,9 @@ object SparkEntry {
     // Moore-Lewis: the q_lm_score CTE twice (target = English slice,
     // general = whole corpus), diff of the two 6-dp scores.
     "q_lm_moore_lewis" ->
-      """WITH dtoks AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)),
-        |    '[ \t\n\x0b\f\r]+')) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM dtoks
-        |       WHERE length(term) > 0 GROUP BY 1, 2),
-        |ttoks AS (
-        |  SELECT unnest(regexp_split_to_array(trim(lower(text)),
-        |    '[ \t\n\x0b\f\r]+')) AS term
-        |  FROM documents WHERE lang = 'en'),
-        |tcounts AS (SELECT term, count(*) AS c FROM ttoks
-        |            WHERE length(term) > 0 GROUP BY 1),
-        |tstats AS (SELECT CAST(sum(c) AS DOUBLE) AS t_total,
-        |                  CAST(count(*) AS DOUBLE) AS v FROM tcounts),
-        |tcontrib AS (
-        |  SELECT doc_id, tf,
-        |    round(-tf * ln((coalesce(c, 0) + 0.5) /
-        |          (t_total + 0.5 * (v + 1.0))), 9) AS w
-        |  FROM tf LEFT JOIN tcounts USING (term) CROSS JOIN tstats),
-        |tscored AS (
-        |  SELECT doc_id, sum(tf) AS n_tokens,
-        |    round(CAST(sum(CAST(w AS DECIMAL(20,9))) AS DOUBLE) / sum(tf), 6)
-        |      AS nll
-        |  FROM tcontrib GROUP BY 1),
-        |gtoks AS (
-        |  SELECT unnest(regexp_split_to_array(trim(lower(text)),
-        |    '[ \t\n\x0b\f\r]+')) AS term
-        |  FROM documents),
-        |gcounts AS (SELECT term, count(*) AS c FROM gtoks
-        |            WHERE length(term) > 0 GROUP BY 1),
-        |gstats AS (SELECT CAST(sum(c) AS DOUBLE) AS t_total,
-        |                  CAST(count(*) AS DOUBLE) AS v FROM gcounts),
-        |gcontrib AS (
-        |  SELECT doc_id, tf,
-        |    round(-tf * ln((coalesce(c, 0) + 0.5) /
-        |          (t_total + 0.5 * (v + 1.0))), 9) AS w
-        |  FROM tf LEFT JOIN gcounts USING (term) CROSS JOIN gstats),
-        |gscored AS (
-        |  SELECT doc_id,
-        |    round(CAST(sum(CAST(w AS DECIMAL(20,9))) AS DOUBLE) / sum(tf), 6)
-        |      AS nll
-        |  FROM gcontrib GROUP BY 1)
+      s"""WITH $docTfSql,
+        |${unigramNllSql("t", " WHERE lang = 'en'")},
+        |${unigramNllSql("g")}
         |SELECT d.doc_id,
         |  CAST(coalesce(t.n_tokens, 0) AS BIGINT) AS n_tokens,
         |  round(t.nll - g.nll, 6) AS ce_diff
@@ -8049,7 +8109,7 @@ object SparkEntry {
         |     LEFT JOIN gscored g USING (doc_id)
         |ORDER BY doc_id""".stripMargin,
     "q_lm_kn3" ->
-      """WITH tg AS (
+      s"""WITH tg AS (
         |  SELECT doc_id, string_split(g, ' ')[1] AS w1,
         |         string_split(g, ' ')[2] AS w2,
         |         string_split(g, ' ')[3] AS w3
@@ -8057,8 +8117,7 @@ object SparkEntry {
         |    SELECT doc_id, unnest(list_transform(
         |      range(1, greatest(len(toks)-2, 1)+1),
         |      i -> array_to_string(list_slice(toks, i, i+2), ' '))) AS g
-        |    FROM (SELECT doc_id, regexp_split_to_array(trim(lower(text)),
-        |            '[ \t\n\x0b\f\r]+') AS toks FROM documents))
+        |    FROM (SELECT doc_id, $lowerToksSql AS toks FROM documents))
         |  WHERE len(string_split(g, ' ')) = 3),
         |c123 AS (SELECT w1, w2, w3, count(*) AS c123 FROM tg GROUP BY 1, 2, 3),
         |ctx12 AS (SELECT w1, w2, sum(c123) AS c12dot, count(*) AS n1fw12
@@ -8069,10 +8128,7 @@ object SparkEntry {
         |cont AS (SELECT w3, count(*) AS n1bw3 FROM t23 GROUP BY 1),
         |tot AS (SELECT
         |  (SELECT CAST(count(*) AS DOUBLE) FROM t23) AS nbt,
-        |  (SELECT CAST(count(DISTINCT w) AS DOUBLE) FROM
-        |     (SELECT unnest(regexp_split_to_array(trim(lower(text)),
-        |        '[ \t\n\x0b\f\r]+')) AS w FROM documents)
-        |     WHERE length(w) > 0) AS v),
+        |  $vocabSizeSql AS v),
         |tf AS (SELECT doc_id, w1, w2, w3, count(*) AS tf
         |       FROM tg GROUP BY 1, 2, 3, 4),
         |p AS (SELECT doc_id, tf, v,
@@ -8088,19 +8144,7 @@ object SparkEntry {
         |       LEFT JOIN t23 USING (w2, w3)
         |       LEFT JOIN mid USING (w2)
         |       LEFT JOIN cont USING (w3) CROSS JOIN tot),
-        |con AS (SELECT doc_id, tf,
-        |  round(-tf * ln(CASE WHEN p0 IS NULL OR p0 = 0.0
-        |                      THEN 1.0 / (v + 1.0) ELSE p0 END), 9) AS w
-        |  FROM p),
-        |s AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_trigrams,
-        |  round(CAST(sum(CAST(w AS DECIMAL(20,9))) AS DOUBLE) / sum(tf), 6)
-        |    AS kn3_nll
-        |  FROM con GROUP BY 1)
-        |SELECT d.doc_id,
-        |       CAST(coalesce(s.n_trigrams, 0) AS BIGINT) AS n_trigrams,
-        |       s.kn3_nll
-        |FROM documents d LEFT JOIN s USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
+        |${knScoreSql("n_trigrams", "kn3_nll")}""".stripMargin,
     // DSIR: the polynomial bucket hash is reproduced character-by-
     // character — list_reduce seeds with the first code point, which
     // equals the Spark fold's first step because PolyMod > 0x10FFFF.
@@ -8109,29 +8153,7 @@ object SparkEntry {
     // decimal sum per doc (associative — any summation order matches
     // the Spark HOF's left fold).
     "q_dsir_stream_score" ->
-      """WITH toks AS (
-        |  SELECT doc_id, lang,
-        |    regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+') AS ws
-        |  FROM documents),
-        |uni AS (
-        |  SELECT doc_id, lang, w, i
-        |  FROM (SELECT doc_id, lang, unnest(ws) AS w,
-        |               unnest(range(1, len(ws) + 1)) AS i FROM toks)
-        |  WHERE length(w) > 0),
-        |feats AS (
-        |  SELECT doc_id, lang, w AS f FROM uni
-        |  UNION ALL
-        |  SELECT a.doc_id, a.lang, a.w || ' ' || b.w
-        |  FROM uni a JOIN uni b ON a.doc_id = b.doc_id AND b.i = a.i + 1),
-        |fb AS (
-        |  SELECT doc_id, lang,
-        |    list_reduce(list_transform(string_split(f, ''), x -> unicode(x)),
-        |                (h, c) -> (h * 31 + c) % 2000003) % 4096 AS b
-        |  FROM feats),
-        |tc AS (SELECT b, count(*) AS ct FROM fb WHERE lang = 'en' GROUP BY 1),
-        |rc AS (SELECT b, count(*) AS cr FROM fb GROUP BY 1),
-        |tot AS (SELECT (SELECT CAST(sum(ct) AS DOUBLE) FROM tc) AS tt,
-        |               (SELECT CAST(sum(cr) AS DOUBLE) FROM rc) AS tr),
+      s"""WITH $dsirBucketsSql,
         |wt AS (SELECT t.b,
         |         round(ln((coalesce(ct, 0) + 1.0) / (tt + 1.0 * 4096)) -
         |               ln((coalesce(cr, 0) + 1.0) / (tr + 1.0 * 4096)), 9) AS w
@@ -8185,18 +8207,13 @@ object SparkEntry {
          |  chr(10)) AS text
          |FROM d2 ORDER BY doc_id""".stripMargin,
     "q_funnel" ->
-      """WITH ev AS (SELECT user_id AS u, CAST(ts AS TIMESTAMP) AS ts,
-        |              event_type AS et FROM events),
+      s"""WITH $funnelEventsSql,
         |s1 AS (SELECT u, min(ts) AS t FROM ev WHERE et = 'view' GROUP BY 1),
         |s2 AS (SELECT e.u, min(e.ts) AS t FROM ev e JOIN s1 ON e.u = s1.u
         |       WHERE e.et = 'click' AND e.ts > s1.t GROUP BY e.u),
         |s3 AS (SELECT e.u, min(e.ts) AS t FROM ev e JOIN s2 ON e.u = s2.u
         |       WHERE e.et = 'purchase' AND e.ts > s2.t GROUP BY e.u)
-        |SELECT CAST(1 AS BIGINT) AS step, 'view' AS step_name,
-        |       (SELECT count(*) FROM s1) AS n_users
-        |UNION ALL SELECT 2, 'click', (SELECT count(*) FROM s2)
-        |UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3)
-        |ORDER BY step""".stripMargin,
+        |$funnelCountsSql""".stripMargin,
     // Same lag pairing with the (ts, event_id) total order; p is an
     // exact-integer count over an exact-integer row sum, one 6-dp round.
     "q_event_transitions" ->
@@ -8218,26 +8235,16 @@ object SparkEntry {
         |  FROM documents)
         |WHERE hits = 0 ORDER BY doc_id""".stripMargin,
     "q_funnel_latency" ->
-      """WITH ev AS (SELECT user_id AS u, CAST(ts AS TIMESTAMP) AS ts,
-        |              event_type AS et FROM events),
+      s"""WITH $funnelEventsSql,
         |s1 AS (SELECT u, min(ts) AS t1 FROM ev WHERE et = 'view' GROUP BY 1),
         |s2 AS (SELECT e.u, s1.t1, min(e.ts) AS t2 FROM ev e JOIN s1 ON e.u = s1.u
         |       WHERE e.et = 'click' AND e.ts > s1.t1 GROUP BY e.u, s1.t1),
         |s3 AS (SELECT e.u, s2.t1, min(e.ts) AS t3 FROM ev e JOIN s2 ON e.u = s2.u
         |       WHERE e.et = 'purchase' AND e.ts > s2.t2 GROUP BY e.u, s2.t1),
         |durs AS (SELECT 'all' AS g, epoch_us(t3) - epoch_us(t1) AS dur_us FROM s3),
-        |ranked AS (
-        |  SELECT g, dur_us,
-        |    row_number() OVER (PARTITION BY g ORDER BY dur_us ASC) AS rn,
-        |    count(*) OVER (PARTITION BY g) AS n
-        |  FROM durs)
-        |SELECT g, CAST(p AS DOUBLE) AS p, dur_us AS value
-        |FROM ranked CROSS JOIN (VALUES (0.5), (0.9), (0.99)) AS ps(p)
-        |WHERE rn = CAST(ceil(p * n) AS BIGINT)
-        |ORDER BY p""".stripMargin,
+        |$durQuantilesSql""".stripMargin,
     "q_funnel_window" ->
-      """WITH ev AS (SELECT user_id AS u, CAST(ts AS TIMESTAMP) AS ts,
-        |              event_type AS et FROM events),
+      s"""WITH $funnelEventsSql,
         |s1 AS (SELECT u, min(ts) AS t, min(ts) AS t1 FROM ev
         |       WHERE et = 'view' GROUP BY 1),
         |s2 AS (SELECT e.u, min(e.ts) AS t, s1.t1 FROM ev e JOIN s1 ON e.u = s1.u
@@ -8248,35 +8255,13 @@ object SparkEntry {
         |       WHERE e.et = 'purchase' AND e.ts > s2.t
         |         AND e.ts <= s2.t1 + INTERVAL 86400 SECONDS
         |       GROUP BY e.u, s2.t1)
-        |SELECT CAST(1 AS BIGINT) AS step, 'view' AS step_name,
-        |       (SELECT count(*) FROM s1) AS n_users
-        |UNION ALL SELECT 2, 'click', (SELECT count(*) FROM s2)
-        |UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3)
-        |ORDER BY step""".stripMargin,
+        |$funnelCountsSql""".stripMargin,
     "q_cohort_retention" ->
-      """WITH ev AS (SELECT user_id AS u, CAST(ts AS TIMESTAMP) AS ts FROM events),
-        |fst AS (SELECT u, min(ts) AS first_ts FROM ev GROUP BY 1),
-        |active AS (
-        |  SELECT DISTINCT e.u,
-        |    CAST(date_trunc('week', f.first_ts) AS DATE) AS cohort,
-        |    CAST(datediff('day',
-        |           CAST(date_trunc('week', f.first_ts) AS DATE),
-        |           CAST(date_trunc('week', e.ts) AS DATE)) / 7 AS BIGINT)
-        |      AS period_offset
-        |  FROM ev e JOIN fst f ON e.u = f.u)
+      s"""WITH $cohortActiveSql
         |SELECT cohort, period_offset, count(*) AS n_users
         |FROM active GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
     "q_cohort_rate" ->
-      """WITH ev AS (SELECT user_id AS u, CAST(ts AS TIMESTAMP) AS ts FROM events),
-        |fst AS (SELECT u, min(ts) AS first_ts FROM ev GROUP BY 1),
-        |active AS (
-        |  SELECT DISTINCT e.u,
-        |    CAST(date_trunc('week', f.first_ts) AS DATE) AS cohort,
-        |    CAST(datediff('day',
-        |           CAST(date_trunc('week', f.first_ts) AS DATE),
-        |           CAST(date_trunc('week', e.ts) AS DATE)) / 7 AS BIGINT)
-        |      AS period_offset
-        |  FROM ev e JOIN fst f ON e.u = f.u),
+      s"""WITH $cohortActiveSql,
         |tri AS (SELECT cohort, period_offset, count(*) AS n_users
         |        FROM active GROUP BY 1, 2)
         |SELECT cohort, period_offset, n_users,
@@ -8286,18 +8271,7 @@ object SparkEntry {
     // Kaplan–Meier: the product-limit estimator in the operator's exact
     // log-space DECIMAL discipline (9-dp terms, 9-dp ln, 6-dp exp).
     "q_survival_km" ->
-      s"""WITH $survivalSubjSql,
-         |cells AS (
-         |  SELECT grp0 AS grp, dur AS t,
-         |    count(*) FILTER (WHERE ev) AS events,
-         |    count(*) FILTER (WHERE NOT ev) AS cens
-         |  FROM subj GROUP BY 1, 2),
-         |steps AS (
-         |  SELECT grp, t, events,
-         |    CAST(sum(events + cens) OVER (PARTITION BY grp)
-         |      - sum(events + cens) OVER (PARTITION BY grp ORDER BY t)
-         |      + events + cens AS BIGINT) AS at_risk
-         |  FROM cells),
+      s"""WITH $survivalStepsSql,
          |st AS (
          |  SELECT grp, t, at_risk, events,
          |    round(1.0 - CAST(events AS DOUBLE) / CAST(at_risk AS DOUBLE), 9)
@@ -8324,18 +8298,7 @@ object SparkEntry {
     // Nelson–Aalen: per-step 9-dp hazards, DECIMAL cumsum, 6-dp
     // publish; exp(−H) is the Fleming–Harrington survival.
     "q_survival_hazard" ->
-      s"""WITH $survivalSubjSql,
-         |cells AS (
-         |  SELECT grp0 AS grp, dur AS t,
-         |    count(*) FILTER (WHERE ev) AS events,
-         |    count(*) FILTER (WHERE NOT ev) AS cens
-         |  FROM subj GROUP BY 1, 2),
-         |steps AS (
-         |  SELECT grp, t, events,
-         |    CAST(sum(events + cens) OVER (PARTITION BY grp)
-         |      - sum(events + cens) OVER (PARTITION BY grp ORDER BY t)
-         |      + events + cens AS BIGINT) AS at_risk
-         |  FROM cells),
+      s"""WITH $survivalStepsSql,
          |st AS (
          |  SELECT grp, t, at_risk, events,
          |    round(CAST(events AS DOUBLE) / CAST(at_risk AS DOUBLE), 9) AS h
@@ -8445,9 +8408,7 @@ object SparkEntry {
     // ACF mirror: 9-dp mean/dev, DECIMAL sums, 6-dp publish; the lag
     // join runs on the same zero-filled grid.
     "q_ts_acf" ->
-      s"""WITH $tsGridSql,
-         |b AS (SELECT day, n, CAST(row_number() OVER (ORDER BY day)
-         |             AS BIGINT) AS rn FROM g2),
+      s"""WITH $tsSeriesSql,
          |m AS (SELECT round(CAST(sum(CAST(n AS DECIMAL(28,9))) AS DOUBLE) /
          |             CAST(count(*) AS DOUBLE), 9) AS mean FROM b),
          |dv AS (SELECT rn, round(CAST(n AS DOUBLE) - mean, 9) AS dev
@@ -8503,9 +8464,7 @@ object SparkEntry {
     // EWMA closed-form mirror: ln/exp 9-dp decay powers, same term
     // nesting and DECIMAL accumulation as the operator.
     "q_ts_ewma" ->
-      s"""WITH $tsGridSql,
-         |b AS (SELECT day, n, CAST(row_number() OVER (ORDER BY day)
-         |             AS BIGINT) AS rn FROM g2),
+      s"""WITH $tsSeriesSql,
          |p AS (SELECT t.day, t.n, a.rn AS ri, t.rn - a.rn AS k,
          |             CAST(a.n AS DOUBLE) AS x
          |      FROM b t JOIN b a ON a.rn <= t.rn),
@@ -8546,24 +8505,12 @@ object SparkEntry {
       s"""WITH $tsGridSql,
          |vc AS (SELECT CAST(n AS DOUBLE) AS v, count(*) AS c
          |       FROM g2 GROUP BY 1),
-         |m1 AS (SELECT v AS med FROM
-         |  (SELECT v, c, sum(c) OVER (ORDER BY v) AS cum,
-         |          sum(c) OVER () AS nn FROM vc)
-         |  WHERE cum - c < CAST(ceil(round(0.5 * CAST(nn AS DOUBLE), 9))
-         |          AS BIGINT)
-         |    AND CAST(ceil(round(0.5 * CAST(nn AS DOUBLE), 9)) AS BIGINT)
-         |          <= cum),
+         |${lowerMedianSql("m1", "med", "vc")},
          |ad AS (SELECT day, n, med,
          |         round(abs(CAST(n AS DOUBLE) - med), 9) AS adev
          |       FROM g2, m1),
          |ac AS (SELECT adev AS v, count(*) AS c FROM ad GROUP BY 1),
-         |m2 AS (SELECT v AS madv FROM
-         |  (SELECT v, c, sum(c) OVER (ORDER BY v) AS cum,
-         |          sum(c) OVER () AS nn FROM ac)
-         |  WHERE cum - c < CAST(ceil(round(0.5 * CAST(nn AS DOUBLE), 9))
-         |          AS BIGINT)
-         |    AND CAST(ceil(round(0.5 * CAST(nn AS DOUBLE), 9)) AS BIGINT)
-         |          <= cum),
+         |${lowerMedianSql("m2", "madv", "ac")},
          |z AS (SELECT day, n, med, madv,
          |    CASE WHEN madv > 0 THEN
          |      CAST(round(CAST(round(
@@ -8708,13 +8655,7 @@ object SparkEntry {
     // Growth-accounting mirror: same per-user lag/lead window over
     // distinct (user, day) pairs; churn credited to day + 1.
     "q_growth_accounting" ->
-      """WITH pairs AS (SELECT DISTINCT user_id AS u, CAST(ts AS DATE) AS day
-        |               FROM events
-        |               WHERE ts IS NOT NULL AND user_id IS NOT NULL),
-        |t AS (SELECT u, day,
-        |        lag(day) OVER (PARTITION BY u ORDER BY day) AS prev,
-        |        lead(day) OVER (PARTITION BY u ORDER BY day) AS nxt
-        |      FROM pairs),
+      s"""WITH $userDaysSql,
         |st AS (SELECT day, count(*) AS n_active,
         |         count(CASE WHEN prev IS NULL THEN 1 END) AS n_new,
         |         count(CASE WHEN date_diff('day', prev, day) = 1 THEN 1 END)
@@ -8785,16 +8726,7 @@ object SparkEntry {
         |  round(CAST(sum(CAST(w AS DECIMAL(20,9))) AS DOUBLE), 6) AS psi
         |FROM t GROUP BY 1 ORDER BY 1""".stripMargin,
     "q_ts_rollcorr" ->
-      """WITH e AS (SELECT CAST(ts AS DATE) AS day,
-        |    round(CAST(value AS DOUBLE), 9) AS x,
-        |    round(CAST(event_id % 97 AS DOUBLE), 9) AS y
-        |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL),
-        |daily AS (SELECT day, count(*) AS n,
-        |    sum(CAST(x AS DECIMAL(28,9))) AS sx,
-        |    sum(CAST(y AS DECIMAL(28,9))) AS sy
-        |  FROM e GROUP BY 1),
-        |dm AS (SELECT day, round(CAST(sx AS DOUBLE)/n, 9) AS mx,
-        |              round(CAST(sy AS DOUBLE)/n, 9) AS my FROM daily),
+      s"""WITH $dailyMeansSql,
         |b AS (SELECT min(day) AS d0, max(day) AS d1 FROM dm),
         |grid AS (SELECT CAST(unnest(generate_series(d0, d1,
         |    INTERVAL 1 DAY)) AS DATE) AS day FROM b),
@@ -8812,31 +8744,14 @@ object SparkEntry {
         |  FROM g WINDOW w AS (ORDER BY day
         |    ROWS BETWEEN 6 PRECEDING AND CURRENT ROW))
         |SELECT day, round(mx, 6) AS x_mean, round(my, 6) AS y_mean,
-        |  CASE WHEN k < 7
-        |    OR round(sxx - round(sx*sx/CAST(k AS DOUBLE), 9), 9) <= 0
-        |    OR round(syy - round(sy*sy/CAST(k AS DOUBLE), 9), 9) <= 0
-        |  THEN NULL ELSE
-        |    round(round(sxy - round(sx*sy/CAST(k AS DOUBLE), 9), 9) /
-        |      round(sqrt(round(sxx - round(sx*sx/CAST(k AS DOUBLE), 9), 9)) *
-        |            sqrt(round(syy - round(sy*sy/CAST(k AS DOUBLE), 9), 9)),
-        |        9), 6)
-        |  END AS corr
+        |  $rollCorrSql AS corr
         |FROM r ORDER BY day""".stripMargin,
 
     // End-day-keyed mirror: each daily mean-cell replicates to the 7
     // end-days it serves; per-end-day exact DECIMAL moment sums, same
     // 9-dp/6-dp chain; only observed end days emit.
     "q_ts_rollcorr_stream" ->
-      """WITH e AS (SELECT CAST(ts AS DATE) AS day,
-        |    round(CAST(value AS DOUBLE), 9) AS x,
-        |    round(CAST(event_id % 97 AS DOUBLE), 9) AS y
-        |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL),
-        |daily AS (SELECT day, count(*) AS n,
-        |    sum(CAST(x AS DECIMAL(28,9))) AS sx,
-        |    sum(CAST(y AS DECIMAL(28,9))) AS sy
-        |  FROM e GROUP BY 1),
-        |dm AS (SELECT day, round(CAST(sx AS DOUBLE)/n, 9) AS mx,
-        |              round(CAST(sy AS DOUBLE)/n, 9) AS my FROM daily),
+      s"""WITH $dailyMeansSql,
         |keyed AS (SELECT dm.day, dm.mx, dm.my, o.off,
         |    dm.day + to_days(CAST(o.off AS INTEGER)) AS end_day
         |  FROM dm CROSS JOIN
@@ -8855,15 +8770,7 @@ object SparkEntry {
         |    max(CASE WHEN off = 0 THEN 1 ELSE 0 END) AS obs
         |  FROM keyed GROUP BY 1)
         |SELECT day, round(mxe, 6) AS x_mean, round(mye, 6) AS y_mean,
-        |  CASE WHEN k < 7
-        |    OR round(sxx - round(sx*sx/CAST(k AS DOUBLE), 9), 9) <= 0
-        |    OR round(syy - round(sy*sy/CAST(k AS DOUBLE), 9), 9) <= 0
-        |  THEN NULL ELSE
-        |    round(round(sxy - round(sx*sy/CAST(k AS DOUBLE), 9), 9) /
-        |      round(sqrt(round(sxx - round(sx*sx/CAST(k AS DOUBLE), 9), 9)) *
-        |            sqrt(round(syy - round(sy*sy/CAST(k AS DOUBLE), 9), 9)),
-        |        9), 6)
-        |  END AS corr
+        |  $rollCorrSql AS corr
         |FROM agg WHERE obs = 1 ORDER BY day""".stripMargin,
     "q_eval_conformal" -> conformalOracleSql,
 
@@ -8909,13 +8816,7 @@ object SparkEntry {
         |FROM grid g LEFT JOIN obs o ON g.key = o.key AND g.day = o.day
         |ORDER BY g.key, g.day""".stripMargin,
     "q_growth_flags" ->
-      """WITH pairs AS (SELECT DISTINCT user_id AS u, CAST(ts AS DATE) AS day
-        |               FROM events
-        |               WHERE ts IS NOT NULL AND user_id IS NOT NULL),
-        |t AS (SELECT u, day,
-        |        lag(day) OVER (PARTITION BY u ORDER BY day) AS prev,
-        |        lead(day) OVER (PARTITION BY u ORDER BY day) AS nxt
-        |      FROM pairs)
+      s"""WITH $userDaysSql
         |SELECT * FROM (
         |  SELECT CAST(u AS VARCHAR) AS "user", day,
         |    CASE WHEN prev IS NULL THEN 'new'
@@ -8973,9 +8874,7 @@ object SparkEntry {
     // Holt/Brown mirror: two closed-form EWMA passes, exact-decimal
     // 6-dp publishes.
     "q_ts_holt" ->
-      s"""WITH $tsGridSql,
-         |b AS (SELECT day, n, CAST(row_number() OVER (ORDER BY day)
-         |             AS BIGINT) AS rn FROM g2),
+      s"""WITH $tsSeriesSql,
          |b1 AS (SELECT rn, CAST(n AS DOUBLE) AS x FROM b),
          |${holtPassSql("b1", "s1")},
          |${holtPassSql("s1", "s2")},
@@ -9008,13 +8907,7 @@ object SparkEntry {
          |       FROM (SELECT count(*) AS t FROM b GROUP BY n)),
          |sl AS (SELECT round((nj - ni) / CAST(dk AS DOUBLE), 9) AS v,
          |              count(*) AS c FROM pr GROUP BY 1),
-         |med AS (SELECT v AS sen FROM
-         |  (SELECT v, c, sum(c) OVER (ORDER BY v) AS cum,
-         |          sum(c) OVER () AS nt FROM sl)
-         |  WHERE cum - c < CAST(ceil(round(0.5 * CAST(nt AS DOUBLE), 9))
-         |          AS BIGINT)
-         |    AND CAST(ceil(round(0.5 * CAST(nt AS DOUBLE), 9)) AS BIGINT)
-         |          <= cum),
+         |${lowerMedianSql("med", "sen", "sl")},
          |mw AS (SELECT max(sen) AS sen FROM med),
          |fin AS (SELECT n_days, sv,
          |    round((CAST(n_days AS DOUBLE) * (CAST(n_days AS DOUBLE) - 1.0) *
@@ -9111,15 +9004,7 @@ object SparkEntry {
          |    '', 'g')) / length(t2), 6) AS other
          |FROM t ORDER BY doc_id""".stripMargin,
     "q_embed_outliers" ->
-      """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings),
-        |ex AS (SELECT vec_id, label, unnest(v) AS x,
-        |              unnest(range(1, len(v) + 1)) AS pos FROM e),
-        |cent AS (
-        |  SELECT label, pos,
-        |    CAST(sum(CAST(round(x, 9) AS DECIMAL(27,9))) AS DOUBLE) / count(*) AS c
-        |  FROM ex GROUP BY 1, 2),
-        |cl AS (SELECT label, list(c ORDER BY pos) AS cv FROM cent GROUP BY 1),
+      s"""WITH $labelCentroidsSql,
         |scored AS (
         |  SELECT e.vec_id, e.label,
         |         round(list_cosine_similarity(e.v, cl.cv), 6) AS cosine
@@ -9146,14 +9031,9 @@ object SparkEntry {
          |   OR (source = 'src2' AND bef < 1)
          |ORDER BY doc_id""".stripMargin,
     "q_snapshot_diff" ->
-      """WITH o AS (SELECT doc_id AS id, md5(text) AS od, true AS op
+      s"""WITH o AS (SELECT doc_id AS id, md5(text) AS od, true AS op
         |           FROM documents),
-        |n0 AS (
-        |  SELECT doc_id, CASE WHEN doc_id % 7 = 0 THEN text || ' v2'
-        |                      ELSE text END AS text
-        |  FROM documents WHERE doc_id % 10 != 0
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id < 5),
+        |n0 AS ($snapshotV2Sql),
         |n AS (SELECT doc_id AS id, md5(text) AS nd, true AS np FROM n0)
         |SELECT coalesce(o.id, n.id) AS id,
         |  CASE WHEN op IS NULL THEN 'added'
@@ -9162,13 +9042,7 @@ object SparkEntry {
         |       ELSE 'changed' END AS status
         |FROM o FULL OUTER JOIN n ON o.id = n.id
         |ORDER BY id""".stripMargin,
-    "q_snapshot_apply" ->
-      """SELECT doc_id, CASE WHEN doc_id % 7 = 0 THEN text || ' v2'
-        |                    ELSE text END AS text
-        |FROM documents WHERE doc_id % 10 != 0
-        |UNION ALL
-        |SELECT doc_id + 1000000, text FROM documents WHERE doc_id < 5
-        |ORDER BY doc_id""".stripMargin,
+    "q_snapshot_apply" -> s"$snapshotV2Sql\nORDER BY doc_id",
     "q_incr_agg" ->
       """SELECT o_orderpriority, count(o_totalprice) AS n,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
@@ -9191,64 +9065,12 @@ object SparkEntry {
     // Unseeded LPA, 2 rounds unrolled: l0 = own id as string; majority
     // votes with (count desc, label asc) STRING-order ties; no clamping.
     "q_graph_communities" ->
-      """WITH ids AS (SELECT doc_id FROM documents),
-        |leaves AS (SELECT doc_id AS src, doc_id - (doc_id % 5) AS dst
-        |           FROM ids WHERE doc_id % 5 != 0),
-        |hubset AS (SELECT doc_id AS hid FROM ids WHERE doc_id % 5 = 0),
-        |chain AS (SELECT h.doc_id AS src, h.doc_id + 5 AS dst
-        |          FROM ids h JOIN hubset t ON h.doc_id + 5 = t.hid
-        |          WHERE h.doc_id % 5 = 0),
-        |fwd AS (SELECT src, dst FROM leaves UNION ALL SELECT src, dst FROM chain),
-        |und AS (SELECT DISTINCT a, b FROM (
-        |  SELECT src AS a, dst AS b FROM fwd
-        |  UNION ALL SELECT dst AS a, src AS b FROM fwd) t WHERE a != b),
-        |nodes AS (SELECT DISTINCT a AS node FROM und),
-        |l0 AS (SELECT node, CAST(node AS VARCHAR) AS lab FROM nodes),
-        |v1 AS (SELECT u.b AS node, l.lab, count(*) AS n
-        |       FROM und u JOIN l0 l ON u.a = l.node GROUP BY 1, 2),
-        |m1 AS (SELECT node, lab FROM (
-        |         SELECT node, lab, row_number() OVER (PARTITION BY node
-        |           ORDER BY n DESC, lab ASC) AS rn FROM v1) t WHERE rn = 1),
-        |l1 AS (SELECT n.node, coalesce(m.lab, CAST(n.node AS VARCHAR)) AS lab
-        |       FROM nodes n LEFT JOIN m1 m USING (node)),
-        |v2 AS (SELECT u.b AS node, l.lab, count(*) AS n
-        |       FROM und u JOIN l1 l ON u.a = l.node GROUP BY 1, 2),
-        |m2 AS (SELECT node, lab FROM (
-        |         SELECT node, lab, row_number() OVER (PARTITION BY node
-        |           ORDER BY n DESC, lab ASC) AS rn FROM v2) t WHERE rn = 1),
-        |l2 AS (SELECT n.node, coalesce(m.lab, CAST(n.node AS VARCHAR)) AS lab
-        |       FROM nodes n LEFT JOIN m2 m USING (node))
+      s"""WITH $communitiesSql
         |SELECT node, lab AS community FROM l2 ORDER BY node""".stripMargin,
     // Communities CTE chain + modularity: per-community terms round to
     // 9 dp and decimal-sum; every division shape mirrors the operator.
     "q_graph_modularity" ->
-      """WITH ids AS (SELECT doc_id FROM documents),
-        |leaves AS (SELECT doc_id AS src, doc_id - (doc_id % 5) AS dst
-        |           FROM ids WHERE doc_id % 5 != 0),
-        |hubset AS (SELECT doc_id AS hid FROM ids WHERE doc_id % 5 = 0),
-        |chain AS (SELECT h.doc_id AS src, h.doc_id + 5 AS dst
-        |          FROM ids h JOIN hubset t ON h.doc_id + 5 = t.hid
-        |          WHERE h.doc_id % 5 = 0),
-        |fwd AS (SELECT src, dst FROM leaves UNION ALL SELECT src, dst FROM chain),
-        |und AS (SELECT DISTINCT a, b FROM (
-        |  SELECT src AS a, dst AS b FROM fwd
-        |  UNION ALL SELECT dst AS a, src AS b FROM fwd) t WHERE a != b),
-        |nodes AS (SELECT DISTINCT a AS node FROM und),
-        |l0 AS (SELECT node, CAST(node AS VARCHAR) AS lab FROM nodes),
-        |v1 AS (SELECT u.b AS node, l.lab, count(*) AS n
-        |       FROM und u JOIN l0 l ON u.a = l.node GROUP BY 1, 2),
-        |m1 AS (SELECT node, lab FROM (
-        |         SELECT node, lab, row_number() OVER (PARTITION BY node
-        |           ORDER BY n DESC, lab ASC) AS rn FROM v1) t WHERE rn = 1),
-        |l1 AS (SELECT n.node, coalesce(m.lab, CAST(n.node AS VARCHAR)) AS lab
-        |       FROM nodes n LEFT JOIN m1 m USING (node)),
-        |v2 AS (SELECT u.b AS node, l.lab, count(*) AS n
-        |       FROM und u JOIN l1 l ON u.a = l.node GROUP BY 1, 2),
-        |m2 AS (SELECT node, lab FROM (
-        |         SELECT node, lab, row_number() OVER (PARTITION BY node
-        |           ORDER BY n DESC, lab ASC) AS rn FROM v2) t WHERE rn = 1),
-        |l2 AS (SELECT n.node, coalesce(m.lab, CAST(n.node AS VARCHAR)) AS lab
-        |       FROM nodes n LEFT JOIN m2 m USING (node)),
+      s"""WITH $communitiesSql,
         |tagged AS (SELECT la.lab AS ca, lb.lab AS cb
         |           FROM und u JOIN l2 la ON u.a = la.node
         |                      JOIN l2 lb ON u.b = lb.node),
@@ -9267,15 +9089,7 @@ object SparkEntry {
     // edge from its lower-(degree, id) endpoint, build wedges, close
     // them against the oriented list — each triangle once, integers only.
     "q_graph_triangles" ->
-      """WITH ids AS (SELECT doc_id FROM documents),
-        |fwd AS (
-        |  SELECT doc_id AS src, doc_id + 1 AS dst FROM ids
-        |  UNION ALL SELECT doc_id, doc_id + 2 FROM ids
-        |  UNION ALL SELECT doc_id, doc_id - (doc_id % 10) FROM ids
-        |    WHERE doc_id % 10 != 0),
-        |und AS (SELECT DISTINCT a, b FROM (
-        |  SELECT src AS a, dst AS b FROM fwd
-        |  UNION ALL SELECT dst AS a, src AS b FROM fwd) t WHERE a != b),
+      s"""WITH ${decadeGraphSql()},
         |deg AS (SELECT a AS node, count(*) AS dg FROM und GROUP BY 1),
         |o AS (SELECT u.a, u.b FROM und u
         |      JOIN deg da ON u.a = da.node JOIN deg db ON u.b = db.node
@@ -9298,15 +9112,7 @@ object SparkEntry {
     // self-join through centers with 2 <= deg <= 8, per-center
     // 1/ln(deg) snapped to 9 dp and summed as DECIMAL(28,9).
     "q_graph_linkpred" ->
-      """WITH ids AS (SELECT doc_id FROM documents),
-        |fwd AS (
-        |  SELECT doc_id AS src, doc_id + 1 AS dst FROM ids
-        |  UNION ALL SELECT doc_id, doc_id + 2 FROM ids
-        |  UNION ALL SELECT doc_id, doc_id - (doc_id % 10) FROM ids
-        |    WHERE doc_id % 10 != 0),
-        |und AS (SELECT DISTINCT a, b FROM (
-        |  SELECT src AS a, dst AS b FROM fwd
-        |  UNION ALL SELECT dst AS a, src AS b FROM fwd) t WHERE a != b),
+      s"""WITH ${decadeGraphSql()},
         |deg AS (SELECT a AS node, count(*) AS dg FROM und GROUP BY 1),
         |star AS (SELECT u.a AS c, u.b,
         |           round(1.0 / ln(CAST(d.dg AS DOUBLE)), 9) AS aa
@@ -9329,15 +9135,7 @@ object SparkEntry {
     // 3 unrolled min-relaxations from the century seeds over the same
     // symmetrized scaffold; reached nodes only.
     "q_graph_bfs" ->
-      """WITH ids AS (SELECT doc_id FROM documents),
-        |fwd AS (
-        |  SELECT doc_id AS src, doc_id + 1 AS dst FROM ids
-        |  UNION ALL SELECT doc_id, doc_id + 2 FROM ids
-        |  UNION ALL SELECT doc_id, doc_id - (doc_id % 10) FROM ids
-        |    WHERE doc_id % 10 != 0),
-        |und AS (SELECT DISTINCT a, b FROM (
-        |  SELECT src AS a, dst AS b FROM fwd
-        |  UNION ALL SELECT dst AS a, src AS b FROM fwd) t WHERE a != b),
+      s"""WITH ${decadeGraphSql()},
         |nodes AS (SELECT DISTINCT a AS node FROM und),
         |d0 AS (SELECT node, CAST(0 AS BIGINT) AS dist FROM nodes
         |       JOIN ids ON node = doc_id WHERE node % 100 = 0),
@@ -9357,15 +9155,7 @@ object SparkEntry {
     // Newman assortativity: Pearson of endpoint degrees over both
     // orientations; exact integer moments, 9-dp means, 6-dp publish.
     "q_graph_assortativity" ->
-      """WITH ids AS (SELECT doc_id FROM documents),
-        |fwd AS (
-        |  SELECT doc_id AS src, doc_id + 1 AS dst FROM ids
-        |  UNION ALL SELECT doc_id, doc_id + 2 FROM ids
-        |  UNION ALL SELECT doc_id, doc_id - (doc_id % 10) FROM ids
-        |    WHERE doc_id % 10 != 0),
-        |und AS (SELECT DISTINCT a, b FROM (
-        |  SELECT src AS a, dst AS b FROM fwd
-        |  UNION ALL SELECT dst AS a, src AS b FROM fwd) t WHERE a != b),
+      s"""WITH ${decadeGraphSql()},
         |deg AS (SELECT a AS node, count(*) AS dg FROM und GROUP BY 1),
         |bt AS (SELECT dx.dg AS x, dy.dg AS y FROM und u
         |       JOIN deg dx ON u.a = dx.node JOIN deg dy ON u.b = dy.node),
@@ -9387,15 +9177,7 @@ object SparkEntry {
     // degrees over the surviving edges and keeps nodes with >= k;
     // converged = the last peel deleted nothing (edge counts equal).
     "q_graph_kcore" ->
-      """WITH ids AS (SELECT doc_id FROM documents),
-        |fwd AS (
-        |  SELECT doc_id AS src, doc_id + 1 AS dst FROM ids
-        |  UNION ALL SELECT doc_id, doc_id + 2 FROM ids
-        |  UNION ALL SELECT doc_id, doc_id - (doc_id % 10) FROM ids
-        |    WHERE doc_id % 10 != 0),
-        |e0 AS (SELECT DISTINCT a, b FROM (
-        |  SELECT src AS a, dst AS b FROM fwd
-        |  UNION ALL SELECT dst AS a, src AS b FROM fwd) t WHERE a != b),
+      s"""WITH ${decadeGraphSql("e0")},
         |k1 AS (SELECT a AS node FROM e0 GROUP BY 1 HAVING count(*) >= 3),
         |e1 AS (SELECT e.a, e.b FROM e0 e JOIN k1 x ON e.a = x.node
         |       JOIN k1 y ON e.b = y.node),
@@ -9415,17 +9197,7 @@ object SparkEntry {
     // labeled-neighbor vote + (count desc, label asc) argmax; seeds
     // clamp via the coalesce order.
     "q_graph_labelprop" ->
-      """WITH ids AS (SELECT doc_id, n_chars FROM documents),
-        |leaves AS (SELECT doc_id AS src, doc_id - (doc_id % 5) AS dst
-        |           FROM ids WHERE doc_id % 5 != 0),
-        |hubset AS (SELECT doc_id AS hid FROM ids WHERE doc_id % 5 = 0),
-        |chain AS (SELECT h.doc_id AS src, h.doc_id + 5 AS dst
-        |          FROM ids h JOIN hubset t ON h.doc_id + 5 = t.hid
-        |          WHERE h.doc_id % 5 = 0),
-        |fwd AS (SELECT src, dst FROM leaves UNION ALL SELECT src, dst FROM chain),
-        |und AS (SELECT DISTINCT a, b FROM (
-        |  SELECT src AS a, dst AS b FROM fwd
-        |  UNION ALL SELECT dst AS a, src AS b FROM fwd) t WHERE a != b),
+      s"""WITH ${quintetGraphSql("doc_id, n_chars")},
         |nodes AS (SELECT DISTINCT a AS node FROM und
         |          UNION SELECT doc_id FROM ids WHERE doc_id % 10 = 0),
         |seed AS (SELECT doc_id AS node,
@@ -9465,29 +9237,11 @@ object SparkEntry {
     // Sorted-neighborhood: the sliding window over sort ranks is a
     // rank-difference self-join in SQL (same block, rank gap 1..w-1).
     "q_dedup_sortedneigh" ->
-      """WITH ranked AS (
-        |  SELECT p_partkey AS id, p_name AS k, substr(p_name, 1, 4) AS blk,
-        |    row_number() OVER (PARTITION BY substr(p_name, 1, 4)
-        |                       ORDER BY p_name, p_partkey) AS rnk
-        |  FROM part)
-        |SELECT a.id AS id_a, b.id AS id_b,
-        |  CAST(b.rnk - a.rnk AS INTEGER) AS dist
-        |FROM ranked a JOIN ranked b
-        |  ON a.blk = b.blk AND b.rnk > a.rnk AND b.rnk - a.rnk <= 2
-        |ORDER BY id_a, id_b""".stripMargin,
+      sortedNeighborsSql("part", "p_partkey", "p_name", 4, ""),
 
     "q_linkage_jw" ->
-      """WITH ranked AS (
-        |  SELECT s_suppkey AS id, s_name AS k, substr(s_name, 1, 9) AS blk,
-        |    row_number() OVER (PARTITION BY substr(s_name, 1, 9)
-        |                       ORDER BY s_name, s_suppkey) AS rnk
-        |  FROM supplier)
-        |SELECT a.id AS id_a, b.id AS id_b,
-        |  CAST(b.rnk - a.rnk AS INTEGER) AS dist,
-        |  round(jaro_winkler_similarity(a.k, b.k), 6) AS jw
-        |FROM ranked a JOIN ranked b
-        |  ON a.blk = b.blk AND b.rnk > a.rnk AND b.rnk - a.rnk <= 2
-        |ORDER BY id_a, id_b""".stripMargin,
+      sortedNeighborsSql("supplier", "s_suppkey", "s_name", 9,
+        ",\n  round(jaro_winkler_similarity(a.k, b.k), 6) AS jw"),
 
     "q_linkage_score" -> (linkageOracleBase + " ORDER BY id_a, id_b"),
     "q_linkage_match" ->
@@ -9587,13 +9341,7 @@ object SparkEntry {
 
     // The q_pack packing CTE, aggregated to the efficiency report.
     "q_pack_stats" ->
-      """WITH t AS (
-        |  SELECT doc_id, doc_id % 8 AS shard,
-        |    CAST(len(regexp_split_to_array(trim(text), '[ \t\n\x0b\f\r]+')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |c AS (SELECT doc_id, shard, n_tokens,
-        |        sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id) AS cum
-        |      FROM t),
+      s"""WITH $packCumSql,
         |p AS (SELECT shard,
         |        CAST(floor(CAST(cum - n_tokens AS DOUBLE) / CAST(500 AS DOUBLE)) AS BIGINT) AS pack,
         |        n_tokens
@@ -9712,9 +9460,7 @@ object SparkEntry {
     "q_profile_benford" -> benfordOracle,
 
     "q_dedup_cluster_sizes" ->
-      """WITH all_docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text FROM documents),
+      s"""WITH all_docs AS ($docsWithTwinsSql),
         |g AS (SELECT md5(text) AS h, CAST(count(*) AS BIGINT) AS cluster_size
         |      FROM all_docs GROUP BY 1),
         |s AS (SELECT cluster_size, CAST(count(*) AS BIGINT) AS n_clusters
@@ -9743,9 +9489,7 @@ object SparkEntry {
         |FROM p WHERE pairs > 0 GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
 
     "q_vocab_coverage" ->
-      """WITH toks AS (
-        |  SELECT unnest(regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+')) AS term
-        |  FROM documents),
+      s"""WITH $termsSql,
         |counts AS (SELECT term, CAST(count(*) AS BIGINT) AS n FROM toks
         |           WHERE length(term) > 0 GROUP BY 1),
         |ranked AS (SELECT term, n,
@@ -9799,15 +9543,7 @@ object SparkEntry {
     // cosines via list_cosine_similarity (matches VF.cosine at 6 dp),
     // mean as a DECIMAL(20,6) sum of exact 6-dp terms.
     "q_embed_separation" ->
-      """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings),
-        |ex AS (SELECT vec_id, label, unnest(v) AS x,
-        |              unnest(range(1, len(v) + 1)) AS pos FROM e),
-        |cent AS (
-        |  SELECT label, pos,
-        |    CAST(sum(CAST(round(x, 9) AS DECIMAL(27,9))) AS DOUBLE) / count(*) AS c
-        |  FROM ex GROUP BY 1, 2),
-        |cl AS (SELECT label, list(c ORDER BY pos) AS cv FROM cent GROUP BY 1),
+      s"""WITH $labelCentroidsSql,
         |self AS (SELECT e.vec_id, e.label,
         |           round(list_cosine_similarity(e.v, cl.cv), 6) AS c
         |         FROM e JOIN cl USING (label)),
@@ -10087,25 +9823,9 @@ object SparkEntry {
     // Pooled two-proportion z: exact per-arm counts in one pass, z on
     // the EXACT int/int rates (the 6-dp conv columns are display-only).
     "q_ab_proportion" ->
-      """WITH m AS (SELECT
-        |    count(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '0'
-        |               THEN 1 END) AS n_a,
-        |    count(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '0'
-        |                AND coalesce(event_type = 'purchase', FALSE)
-        |               THEN 1 END) AS k_a,
-        |    count(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '1'
-        |               THEN 1 END) AS n_b,
-        |    count(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '1'
-        |                AND coalesce(event_type = 'purchase', FALSE)
-        |               THEN 1 END) AS k_b
-        |  FROM events)
+      s"""WITH $purchaseCellsSql
         |SELECT n_a, n_b,
-        |  CASE WHEN n_a = 0 THEN NULL
-        |       ELSE round(CAST(k_a AS DOUBLE) / CAST(n_a AS DOUBLE), 6)
-        |  END AS conv_a,
-        |  CASE WHEN n_b = 0 THEN NULL
-        |       ELSE round(CAST(k_b AS DOUBLE) / CAST(n_b AS DOUBLE), 6)
-        |  END AS conv_b,
+        |  $convRatesSql,
         |  CASE WHEN n_a = 0 OR n_b = 0 THEN NULL
         |       ELSE round(CAST(k_a AS DOUBLE) / CAST(n_a AS DOUBLE) -
         |                  CAST(k_b AS DOUBLE) / CAST(n_b AS DOUBLE), 6)
@@ -10139,14 +9859,14 @@ object SparkEntry {
     // row over a corpus-growing range; pins the CumWalk rank walk.
     "q_ab_mannwhitney_wide" -> mannWhitneyOracle("value + event_id * pi()"),
     "q_ab_did" ->
-      s"""WITH e AS (SELECT CAST(user_id % 2 AS VARCHAR) AS g,
+      s"""WITH e AS (SELECT $paritySql AS g,
          |    CASE WHEN extract(day FROM CAST(ts AS DATE)) <= 15
          |         THEN 'pre' ELSE 'post' END AS p, value FROM events),
          |m AS (SELECT
-         |  ${didCellSql("1", "pre", "tp")},
-         |  ${didCellSql("1", "post", "tq")},
-         |  ${didCellSql("0", "pre", "cp")},
-         |  ${didCellSql("0", "post", "cq")}
+         |  ${momentCellsSql("g = '1' AND p = 'pre'", "tp")},
+         |  ${momentCellsSql("g = '1' AND p = 'post'", "tq")},
+         |  ${momentCellsSql("g = '0' AND p = 'pre'", "cp")},
+         |  ${momentCellsSql("g = '0' AND p = 'post'", "cq")}
          |  FROM e),
          |st AS (SELECT *,
          |  ${didStatSql("tp")}, ${didStatSql("tq")},
@@ -10174,34 +9894,7 @@ object SparkEntry {
     // Grouped-Welch mirror: per-segment moment cells, 9-dp t, Welch
     // df, and the same erf-chain p on |t|.
     "q_ab_welch_grouped" ->
-      """WITH m AS (SELECT event_type AS grp,
-        |    count(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '0'
-        |                AND value IS NOT NULL THEN 1 END) AS n_a,
-        |    sum(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '0'
-        |             THEN CAST(round(value, 9) AS DECIMAL(28,9)) END) AS s_a,
-        |    sum(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '0'
-        |             THEN CAST(round(round(value, 9) * round(value, 9), 9)
-        |                       AS DECIMAL(28,9)) END) AS s2_a,
-        |    count(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '1'
-        |                AND value IS NOT NULL THEN 1 END) AS n_b,
-        |    sum(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '1'
-        |             THEN CAST(round(value, 9) AS DECIMAL(28,9)) END) AS s_b,
-        |    sum(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '1'
-        |             THEN CAST(round(round(value, 9) * round(value, 9), 9)
-        |                       AS DECIMAL(28,9)) END) AS s2_b
-        |  FROM events GROUP BY 1),
-        |st AS (SELECT grp, n_a, n_b,
-        |    round(CAST(s_a AS DOUBLE) / CAST(n_a AS DOUBLE), 9) AS m_a,
-        |    round(CAST(s_b AS DOUBLE) / CAST(n_b AS DOUBLE), 9) AS m_b,
-        |    round(CAST(s2_a AS DOUBLE) / CAST(n_a AS DOUBLE), 9) AS e2_a,
-        |    round(CAST(s2_b AS DOUBLE) / CAST(n_b AS DOUBLE), 9) AS e2_b
-        |  FROM m),
-        |vv AS (SELECT grp, n_a, n_b, m_a, m_b,
-        |    round((e2_a - m_a * m_a) *
-        |      (CAST(n_a AS DOUBLE) / (CAST(n_a AS DOUBLE) - 1.0)), 9) AS v_a,
-        |    round((e2_b - m_b * m_b) *
-        |      (CAST(n_b AS DOUBLE) / (CAST(n_b AS DOUBLE) - 1.0)), 9) AS v_b
-        |  FROM st),
+      s"""WITH ${welchMomentsSql(Some("event_type"))},
         |tt AS (SELECT *,
         |    (n_a < 2 OR n_b < 2 OR v_a + v_b = 0.0) AS degen,
         |    CASE WHEN n_a < 2 OR n_b < 2 OR v_a + v_b = 0.0 THEN NULL
@@ -10223,27 +9916,16 @@ object SparkEntry {
         |  CASE WHEN n_b = 0 THEN NULL ELSE round(m_b, 6) END AS mean_b,
         |  CASE WHEN degen THEN NULL ELSE round(t9, 6) END AS t,
         |  CASE WHEN degen THEN NULL
-        |       ELSE round(
-        |         (v_a / CAST(n_a AS DOUBLE) + v_b / CAST(n_b AS DOUBLE)) *
-        |         (v_a / CAST(n_a AS DOUBLE) + v_b / CAST(n_b AS DOUBLE)) /
-        |         ((v_a / CAST(n_a AS DOUBLE)) * (v_a / CAST(n_a AS DOUBLE)) /
-        |            (CAST(n_a AS DOUBLE) - 1.0) +
-        |          (v_b / CAST(n_b AS DOUBLE)) * (v_b / CAST(n_b AS DOUBLE)) /
-        |            (CAST(n_b AS DOUBLE) - 1.0)), 6)
+        |       ELSE $welchDfSql
         |  END AS df,
         |  CASE WHEN degen THEN NULL ELSE round(p9, 6) END AS p_normal
         |FROM pc ORDER BY grp NULLS FIRST""".stripMargin,
     // Grouped-z mirror: per-segment cells, 9-dp z, then the erf-chain
     // two-sided p (identical snaps on both engines).
     "q_ab_z_grouped" -> (abZGroupedSql +
-      """fin AS (SELECT * FROM pchain)
+      s"""fin AS (SELECT * FROM pchain)
         |SELECT grp AS "group", n_a, n_b,
-        |  CASE WHEN n_a = 0 THEN NULL
-        |       ELSE round(CAST(k_a AS DOUBLE) / CAST(n_a AS DOUBLE), 6)
-        |  END AS conv_a,
-        |  CASE WHEN n_b = 0 THEN NULL
-        |       ELSE round(CAST(k_b AS DOUBLE) / CAST(n_b AS DOUBLE), 6)
-        |  END AS conv_b,
+        |  $convRatesSql,
         |  CASE WHEN degen THEN NULL ELSE round(z9, 6) END AS z,
         |  CASE WHEN degen THEN NULL ELSE round(p9, 6) END AS p_value
         |FROM fin ORDER BY grp NULLS FIRST""".stripMargin),
@@ -10266,18 +9948,7 @@ object SparkEntry {
         |FROM q2 ORDER BY rnk""".stripMargin),
     // Proportion-MDE mirror: conversion cells, observed-rate variances.
     "q_ab_mde_prop" ->
-      s"""WITH m AS (SELECT
-         |    count(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '0'
-         |               THEN 1 END) AS n_a,
-         |    count(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '0'
-         |                AND coalesce(event_type = 'purchase', FALSE)
-         |               THEN 1 END) AS k_a,
-         |    count(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '1'
-         |               THEN 1 END) AS n_b,
-         |    count(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '1'
-         |                AND coalesce(event_type = 'purchase', FALSE)
-         |               THEN 1 END) AS k_b
-         |  FROM events),
+      s"""WITH $purchaseCellsSql,
          |p AS (SELECT n_a, n_b,
          |    round(CAST(k_a AS DOUBLE) /
          |      CASE WHEN n_a = 0 THEN 1.0 ELSE CAST(n_a AS DOUBLE) END, 9)
@@ -10315,34 +9986,7 @@ object SparkEntry {
     // mSPRT mirror: welch's moment cells, ln-sqrt evidence term,
     // exact-decimal publishes.
     "q_ab_msprt" ->
-      """WITH m AS (SELECT
-        |    count(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '0'
-        |                AND value IS NOT NULL THEN 1 END) AS n_a,
-        |    sum(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '0'
-        |             THEN CAST(round(value, 9) AS DECIMAL(28,9)) END) AS s_a,
-        |    sum(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '0'
-        |             THEN CAST(round(round(value, 9) * round(value, 9), 9)
-        |                       AS DECIMAL(28,9)) END) AS s2_a,
-        |    count(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '1'
-        |                AND value IS NOT NULL THEN 1 END) AS n_b,
-        |    sum(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '1'
-        |             THEN CAST(round(value, 9) AS DECIMAL(28,9)) END) AS s_b,
-        |    sum(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '1'
-        |             THEN CAST(round(round(value, 9) * round(value, 9), 9)
-        |                       AS DECIMAL(28,9)) END) AS s2_b
-        |  FROM events),
-        |st AS (SELECT n_a, n_b,
-        |    round(CAST(s_a AS DOUBLE) / CAST(n_a AS DOUBLE), 9) AS m_a,
-        |    round(CAST(s_b AS DOUBLE) / CAST(n_b AS DOUBLE), 9) AS m_b,
-        |    round(CAST(s2_a AS DOUBLE) / CAST(n_a AS DOUBLE), 9) AS e2_a,
-        |    round(CAST(s2_b AS DOUBLE) / CAST(n_b AS DOUBLE), 9) AS e2_b
-        |  FROM m),
-        |vv AS (SELECT n_a, n_b, m_a, m_b,
-        |    round((e2_a - m_a * m_a) *
-        |      (CAST(n_a AS DOUBLE) / (CAST(n_a AS DOUBLE) - 1.0)), 9) AS v_a,
-        |    round((e2_b - m_b * m_b) *
-        |      (CAST(n_b AS DOUBLE) / (CAST(n_b AS DOUBLE) - 1.0)), 9) AS v_b
-        |  FROM st),
+      s"""WITH ${welchMomentsSql()},
         |f AS (SELECT *,
         |    round(v_a / CAST(n_a AS DOUBLE) + v_b / CAST(n_b AS DOUBLE), 9)
         |      AS bv,
@@ -10372,34 +10016,7 @@ object SparkEntry {
     // MDE mirror: welch's moment cells, the driver-side z constant
     // interpolated identically on both engines.
     "q_ab_mde" ->
-      s"""WITH m AS (SELECT
-         |    count(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '0'
-         |                AND value IS NOT NULL THEN 1 END) AS n_a,
-         |    sum(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '0'
-         |             THEN CAST(round(value, 9) AS DECIMAL(28,9)) END) AS s_a,
-         |    sum(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '0'
-         |             THEN CAST(round(round(value, 9) * round(value, 9), 9)
-         |                       AS DECIMAL(28,9)) END) AS s2_a,
-         |    count(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '1'
-         |                AND value IS NOT NULL THEN 1 END) AS n_b,
-         |    sum(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '1'
-         |             THEN CAST(round(value, 9) AS DECIMAL(28,9)) END) AS s_b,
-         |    sum(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '1'
-         |             THEN CAST(round(round(value, 9) * round(value, 9), 9)
-         |                       AS DECIMAL(28,9)) END) AS s2_b
-         |  FROM events),
-         |st AS (SELECT n_a, n_b,
-         |    round(CAST(s_a AS DOUBLE) / CAST(n_a AS DOUBLE), 9) AS m_a,
-         |    round(CAST(s_b AS DOUBLE) / CAST(n_b AS DOUBLE), 9) AS m_b,
-         |    round(CAST(s2_a AS DOUBLE) / CAST(n_a AS DOUBLE), 9) AS e2_a,
-         |    round(CAST(s2_b AS DOUBLE) / CAST(n_b AS DOUBLE), 9) AS e2_b
-         |  FROM m),
-         |vv AS (SELECT n_a, n_b, m_a, m_b,
-         |    round((e2_a - m_a * m_a) *
-         |      (CAST(n_a AS DOUBLE) / (CAST(n_a AS DOUBLE) - 1.0)), 9) AS v_a,
-         |    round((e2_b - m_b * m_b) *
-         |      (CAST(n_b AS DOUBLE) / (CAST(n_b AS DOUBLE) - 1.0)), 9) AS v_b
-         |  FROM st),
+      s"""WITH ${welchMomentsSql()},
          |f AS (SELECT *,
          |    round(CAST($mdeZsum AS DOUBLE) * round(sqrt(greatest(round(
          |      v_a / CAST(n_a AS DOUBLE) + v_b / CAST(n_b AS DOUBLE), 9),
@@ -10472,7 +10089,7 @@ object SparkEntry {
         |  END AS r2
         |FROM f ORDER BY key""".stripMargin,
     "q_ab_uplift" ->
-      """WITH base AS (SELECT CAST(user_id % 2 AS VARCHAR) AS v,
+      s"""WITH base AS (SELECT $paritySql AS v,
         |    round(value, 6) AS s,
         |    CASE WHEN event_id % 3 = 0 THEN 1 ELSE 0 END AS c
         |  FROM events WHERE value IS NOT NULL),
@@ -10509,34 +10126,7 @@ object SparkEntry {
         |       END AS qini
         |FROM q ORDER BY bucket""".stripMargin,
     "q_ab_welch" ->
-      """WITH m AS (SELECT
-        |    count(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '0'
-        |                AND value IS NOT NULL THEN 1 END) AS n_a,
-        |    sum(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '0'
-        |             THEN CAST(round(value, 9) AS DECIMAL(28,9)) END) AS s_a,
-        |    sum(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '0'
-        |             THEN CAST(round(round(value, 9) * round(value, 9), 9)
-        |                       AS DECIMAL(28,9)) END) AS s2_a,
-        |    count(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '1'
-        |                AND value IS NOT NULL THEN 1 END) AS n_b,
-        |    sum(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '1'
-        |             THEN CAST(round(value, 9) AS DECIMAL(28,9)) END) AS s_b,
-        |    sum(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '1'
-        |             THEN CAST(round(round(value, 9) * round(value, 9), 9)
-        |                       AS DECIMAL(28,9)) END) AS s2_b
-        |  FROM events),
-        |st AS (SELECT n_a, n_b,
-        |    round(CAST(s_a AS DOUBLE) / CAST(n_a AS DOUBLE), 9) AS m_a,
-        |    round(CAST(s_b AS DOUBLE) / CAST(n_b AS DOUBLE), 9) AS m_b,
-        |    round(CAST(s2_a AS DOUBLE) / CAST(n_a AS DOUBLE), 9) AS e2_a,
-        |    round(CAST(s2_b AS DOUBLE) / CAST(n_b AS DOUBLE), 9) AS e2_b
-        |  FROM m),
-        |vv AS (SELECT n_a, n_b, m_a, m_b,
-        |    round((e2_a - m_a * m_a) *
-        |      (CAST(n_a AS DOUBLE) / (CAST(n_a AS DOUBLE) - 1.0)), 9) AS v_a,
-        |    round((e2_b - m_b * m_b) *
-        |      (CAST(n_b AS DOUBLE) / (CAST(n_b AS DOUBLE) - 1.0)), 9) AS v_b
-        |  FROM st)
+      s"""WITH ${welchMomentsSql()}
         |SELECT n_a, n_b,
         |  CASE WHEN n_a = 0 THEN NULL ELSE round(m_a, 6) END AS mean_a,
         |  CASE WHEN n_b = 0 THEN NULL ELSE round(m_b, 6) END AS mean_b,
@@ -10546,13 +10136,7 @@ object SparkEntry {
         |              v_b / CAST(n_b AS DOUBLE)), 6)
         |  END AS t,
         |  CASE WHEN n_a < 2 OR n_b < 2 OR v_a + v_b = 0.0 THEN NULL
-        |       ELSE round(
-        |         (v_a / CAST(n_a AS DOUBLE) + v_b / CAST(n_b AS DOUBLE)) *
-        |         (v_a / CAST(n_a AS DOUBLE) + v_b / CAST(n_b AS DOUBLE)) /
-        |         ((v_a / CAST(n_a AS DOUBLE)) * (v_a / CAST(n_a AS DOUBLE)) /
-        |            (CAST(n_a AS DOUBLE) - 1.0) +
-        |          (v_b / CAST(n_b AS DOUBLE)) * (v_b / CAST(n_b AS DOUBLE)) /
-        |            (CAST(n_b AS DOUBLE) - 1.0)), 6)
+        |       ELSE $welchDfSql
         |  END AS df
         |FROM vv""".stripMargin,
 
@@ -10561,35 +10145,13 @@ object SparkEntry {
     // forms with a 9-dp round at every named checkpoint — the t and
     // variance-reduction figures are pure double forms of those.
     "q_ab_cuped" ->
-      """WITH b AS (SELECT CAST(user_id % 2 AS VARCHAR) AS v,
+      s"""WITH b AS (SELECT $paritySql AS v,
         |             round(value, 9) AS y,
         |             round(floor(value), 9) AS x
         |           FROM events),
         |m AS (SELECT
-        |    count(CASE WHEN v = '0' AND y IS NOT NULL AND x IS NOT NULL
-        |               THEN 1 END) AS n_a,
-        |    sum(CASE WHEN v = '0' AND y IS NOT NULL AND x IS NOT NULL
-        |             THEN CAST(x AS DECIMAL(28,9)) END) AS sx_a,
-        |    sum(CASE WHEN v = '0' AND y IS NOT NULL AND x IS NOT NULL
-        |             THEN CAST(y AS DECIMAL(28,9)) END) AS sy_a,
-        |    sum(CASE WHEN v = '0' AND y IS NOT NULL AND x IS NOT NULL
-        |             THEN CAST(round(x * y, 9) AS DECIMAL(28,9)) END) AS sxy_a,
-        |    sum(CASE WHEN v = '0' AND y IS NOT NULL AND x IS NOT NULL
-        |             THEN CAST(round(x * x, 9) AS DECIMAL(28,9)) END) AS sxx_a,
-        |    sum(CASE WHEN v = '0' AND y IS NOT NULL AND x IS NOT NULL
-        |             THEN CAST(round(y * y, 9) AS DECIMAL(28,9)) END) AS syy_a,
-        |    count(CASE WHEN v = '1' AND y IS NOT NULL AND x IS NOT NULL
-        |               THEN 1 END) AS n_b,
-        |    sum(CASE WHEN v = '1' AND y IS NOT NULL AND x IS NOT NULL
-        |             THEN CAST(x AS DECIMAL(28,9)) END) AS sx_b,
-        |    sum(CASE WHEN v = '1' AND y IS NOT NULL AND x IS NOT NULL
-        |             THEN CAST(y AS DECIMAL(28,9)) END) AS sy_b,
-        |    sum(CASE WHEN v = '1' AND y IS NOT NULL AND x IS NOT NULL
-        |             THEN CAST(round(x * y, 9) AS DECIMAL(28,9)) END) AS sxy_b,
-        |    sum(CASE WHEN v = '1' AND y IS NOT NULL AND x IS NOT NULL
-        |             THEN CAST(round(x * x, 9) AS DECIMAL(28,9)) END) AS sxx_b,
-        |    sum(CASE WHEN v = '1' AND y IS NOT NULL AND x IS NOT NULL
-        |             THEN CAST(round(y * y, 9) AS DECIMAL(28,9)) END) AS syy_b
+        |    ${cupedCellsSql("0", "a")},
+        |    ${cupedCellsSql("1", "b")}
         |  FROM b),
         |pool AS (SELECT *,
         |    CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE) AS n,
@@ -10606,28 +10168,8 @@ object SparkEntry {
         |t2 AS (SELECT *, round(cov_p / var_p, 9) AS theta FROM th
         |       WHERE var_p <> 0.0),
         |aa AS (SELECT *,
-        |    round(CAST(sx_a AS DOUBLE) / CAST(n_a AS DOUBLE), 9) AS mx_a,
-        |    round(CAST(sy_a AS DOUBLE) / CAST(n_a AS DOUBLE), 9) AS my_a,
-        |    round((CAST(sxy_a AS DOUBLE) - CAST(sx_a AS DOUBLE) *
-        |      CAST(sy_a AS DOUBLE) / CAST(n_a AS DOUBLE)) /
-        |      (CAST(n_a AS DOUBLE) - 1.0), 9) AS cov_a,
-        |    round((CAST(sxx_a AS DOUBLE) - CAST(sx_a AS DOUBLE) *
-        |      CAST(sx_a AS DOUBLE) / CAST(n_a AS DOUBLE)) /
-        |      (CAST(n_a AS DOUBLE) - 1.0), 9) AS vx_a,
-        |    round((CAST(syy_a AS DOUBLE) - CAST(sy_a AS DOUBLE) *
-        |      CAST(sy_a AS DOUBLE) / CAST(n_a AS DOUBLE)) /
-        |      (CAST(n_a AS DOUBLE) - 1.0), 9) AS vy_a,
-        |    round(CAST(sx_b AS DOUBLE) / CAST(n_b AS DOUBLE), 9) AS mx_b,
-        |    round(CAST(sy_b AS DOUBLE) / CAST(n_b AS DOUBLE), 9) AS my_b,
-        |    round((CAST(sxy_b AS DOUBLE) - CAST(sx_b AS DOUBLE) *
-        |      CAST(sy_b AS DOUBLE) / CAST(n_b AS DOUBLE)) /
-        |      (CAST(n_b AS DOUBLE) - 1.0), 9) AS cov_b,
-        |    round((CAST(sxx_b AS DOUBLE) - CAST(sx_b AS DOUBLE) *
-        |      CAST(sx_b AS DOUBLE) / CAST(n_b AS DOUBLE)) /
-        |      (CAST(n_b AS DOUBLE) - 1.0), 9) AS vx_b,
-        |    round((CAST(syy_b AS DOUBLE) - CAST(sy_b AS DOUBLE) *
-        |      CAST(sy_b AS DOUBLE) / CAST(n_b AS DOUBLE)) /
-        |      (CAST(n_b AS DOUBLE) - 1.0), 9) AS vy_b
+        |    ${cupedArmSql("a")},
+        |    ${cupedArmSql("b")}
         |  FROM t2),
         |fin AS (SELECT *,
         |    round(my_a - theta * (mx_a - xbar), 9) AS ma,
@@ -10658,11 +10200,11 @@ object SparkEntry {
     // ceil(round(p·n, 9)) discipline as q_profile_quantiles), pivoted
     // to (p, q_a, q_b, diff).
     "q_ab_quantiles" ->
-      """WITH base AS (SELECT CAST(user_id % 2 AS VARCHAR) AS v,
+      s"""WITH base AS (SELECT $paritySql AS v,
         |                value AS x
         |              FROM events
         |              WHERE value IS NOT NULL
-        |                AND CAST(user_id % 2 AS VARCHAR) IN ('0', '1')),
+        |                AND $paritySql IN ('0', '1')),
         |ranked AS (SELECT v, x,
         |    row_number() OVER (PARTITION BY v ORDER BY x ASC) AS rn,
         |    count(*) OVER (PARTITION BY v) AS n
@@ -10680,8 +10222,8 @@ object SparkEntry {
     // CMH: per-stratum 2×2 cells in one pass, 9-dp E/Var/OR terms
     // decimal-summed, the two statistics as double forms at the end.
     "q_ab_cmh" ->
-      """WITH b AS (SELECT CAST(user_id % 5 AS VARCHAR) AS st,
-        |             CAST(user_id % 2 AS VARCHAR) AS v,
+      s"""WITH b AS (SELECT CAST(user_id % 5 AS VARCHAR) AS st,
+        |             $paritySql AS v,
         |             coalesce(event_type = 'purchase', FALSE) AS ok
         |           FROM events),
         |cells AS (SELECT st,
@@ -10729,10 +10271,10 @@ object SparkEntry {
     // SRM: two conditional counts, the designed-split expectations at
     // 9 dp, one 6-dp chi-square against the 95% critical value.
     "q_ab_srm" ->
-      """WITH m AS (SELECT
-        |    count(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '0'
+      s"""WITH m AS (SELECT
+        |    count(CASE WHEN $paritySql = '0'
         |               THEN 1 END) AS n_a,
-        |    count(CASE WHEN CAST(user_id % 2 AS VARCHAR) = '1'
+        |    count(CASE WHEN $paritySql = '1'
         |               THEN 1 END) AS n_b
         |  FROM events),
         |e AS (SELECT n_a, n_b,
@@ -10814,9 +10356,6 @@ object SparkEntry {
     * as piiOracle), one UNION arm per category in redaction order. */
   private def piiReportOracle: String = {
     import graft.operators.Pii._
-    val inject = "text || ' reach user' || CAST(doc_id AS VARCHAR) || " +
-      "'@example.com or 10.' || CAST(doc_id % 200 AS VARCHAR) || " +
-      "'.0.1 ssn 123-45-6789 tel 555-123-4567'"
     val cats = Seq("email" -> emailPattern, "ssn" -> ssnPattern,
       "phone" -> phonePattern, "ip" -> ipv4Pattern)
     val arms = cats.zipWithIndex.map { case ((name, pat), i) =>
@@ -10829,10 +10368,7 @@ object SparkEntry {
          |    THEN 1 END) AS DOUBLE) / count(*), 6) AS doc_frac
          |FROM injected""".stripMargin
     }.mkString("\nUNION ALL\n")
-    s"""WITH injected AS (
-       |  SELECT doc_id,
-       |    CASE WHEN doc_id % 3 <> 0 THEN $inject ELSE text END AS text
-       |  FROM documents)
+    s"""WITH $piiInjectedSql
        |SELECT * FROM ($arms) u ORDER BY category""".stripMargin
   }
 
@@ -10863,9 +10399,7 @@ object SparkEntry {
     * as DECIMAL(25,9), closed-form slope/intercept/r² in the identical
     * expression shape (precedence-matched to the operator). */
   private def zipfOracle: String =
-    """WITH toks AS (
-      |  SELECT unnest(regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+')) AS term
-      |  FROM documents),
+    s"""WITH $termsSql,
       |top AS (SELECT term, CAST(count(*) AS BIGINT) AS n FROM toks
       |        WHERE length(term) > 0 GROUP BY 1
       |        ORDER BY n DESC, term ASC LIMIT 500),
@@ -10914,19 +10448,17 @@ object SparkEntry {
        |FROM s ORDER BY digit""".stripMargin
   }
 
-  /** Fellegi-Sunter oracle: the same (m,u)-derived weight literals as
+  /** The linkage fields pre-projected as f0..fn — mirrors
+    * Linkage.project (field exprs evaluated once per row, bare columns). */
+  private def linkageFieldsSql: String = linkageFields.zipWithIndex
+    .map { case (f, i) => s"${f.exprA} AS f$i" }.mkString(", ")
+
+  /** Fellegi-Sunter pair columns over projected sides a, b: n_agree and
+    * the score — the same (m,u)-derived weight literals as
     * `linkageFields` (Double.toString is shortest-round-trip, so DuckDB
     * parses back the identical IEEE double), summed in the same field
     * order — per-pair fixed-order double arithmetic on both engines. */
-  /** The pre-projected side of the linkage oracle — mirrors
-    * Linkage.project (field exprs evaluated once per row, bare columns). */
-  private def linkageProjCte: String = {
-    val fs = linkageFields.zipWithIndex
-      .map { case (f, i) => s"${f.exprA} AS f$i" }.mkString(", ")
-    s"pa AS (SELECT p_partkey AS id, p_brand AS blk, $fs FROM part)"
-  }
-
-  private def linkageOracleBase: String = {
+  private def linkageScoreSql: String = {
     val terms = linkageFields.zipWithIndex.map { case (f, i) =>
       s"CASE WHEN a.f$i = b.f$i THEN ${f.agreeWeight} " +
         s"ELSE ${f.disagreeWeight} END"
@@ -10934,29 +10466,26 @@ object SparkEntry {
     val agrees = linkageFields.indices.map { i =>
       s"CASE WHEN a.f$i = b.f$i THEN 1 ELSE 0 END"
     }.mkString("(", " + ", ")")
+    s"""CAST($agrees AS INTEGER) AS n_agree,
+       |  round($terms, 6) AS score""".stripMargin
+  }
+
+  private def linkageProjCte: String =
+    s"pa AS (SELECT p_partkey AS id, p_brand AS blk, $linkageFieldsSql FROM part)"
+
+  private def linkageOracleBase: String =
     s"""WITH $linkageProjCte
        |SELECT a.id AS id_a, b.id AS id_b,
-       |  CAST($agrees AS INTEGER) AS n_agree,
-       |  round($terms, 6) AS score
+       |  $linkageScoreSql
        |FROM pa a JOIN pa b ON a.blk = b.blk AND a.id < b.id""".stripMargin
-  }
 
   /** Multi-pass blocking oracle: UNION (distinct) of the two blocked
     * self-joins' id pairs — exactly the operator's pair-dedup — then
     * each pair scored once with the shared fixed-order arithmetic. */
-  private def linkageMultiOracle: String = {
-    val fs = linkageFields.zipWithIndex
-      .map { case (f, i) => s"${f.exprA} AS f$i" }.mkString(", ")
-    val terms = linkageFields.zipWithIndex.map { case (f, i) =>
-      s"CASE WHEN a.f$i = b.f$i THEN ${f.agreeWeight} " +
-        s"ELSE ${f.disagreeWeight} END"
-    }.mkString("(", " + ", ")")
-    val agrees = linkageFields.indices.map { i =>
-      s"CASE WHEN a.f$i = b.f$i THEN 1 ELSE 0 END"
-    }.mkString("(", " + ", ")")
+  private def linkageMultiOracle: String =
     s"""WITH pm AS (SELECT p_partkey AS id,
        |  p_brand || '#' || CAST(p_size AS VARCHAR) AS blk1,
-       |  substring(p_name, 1, 12) AS blk2, $fs FROM part),
+       |  substring(p_name, 1, 12) AS blk2, $linkageFieldsSql FROM part),
        |cand AS (
        |  SELECT a.id AS id_a, b.id AS id_b FROM pm a JOIN pm b
        |    ON a.blk1 = b.blk1 AND a.id < b.id
@@ -10964,36 +10493,23 @@ object SparkEntry {
        |  SELECT a.id, b.id FROM pm a JOIN pm b
        |    ON a.blk2 = b.blk2 AND a.id < b.id)
        |SELECT c.id_a, c.id_b,
-       |  CAST($agrees AS INTEGER) AS n_agree,
-       |  round($terms, 6) AS score
+       |  $linkageScoreSql
        |FROM cand c JOIN pm a ON a.id = c.id_a JOIN pm b ON b.id = c.id_b
        |ORDER BY id_a, id_b""".stripMargin
-  }
 
   /** Capped-linkage oracle: the same HOT-block funnel and the same
     * over-cap anti-join semantics (blocks with count > 100 drop from
     * both sides), then the identical fixed-order score arithmetic. */
-  private def linkageCappedOracle: String = {
-    val fs = linkageFields.zipWithIndex
-      .map { case (f, i) => s"${f.exprA} AS f$i" }.mkString(", ")
-    val terms = linkageFields.zipWithIndex.map { case (f, i) =>
-      s"CASE WHEN a.f$i = b.f$i THEN ${f.agreeWeight} " +
-        s"ELSE ${f.disagreeWeight} END"
-    }.mkString("(", " + ", ")")
-    val agrees = linkageFields.indices.map { i =>
-      s"CASE WHEN a.f$i = b.f$i THEN 1 ELSE 0 END"
-    }.mkString("(", " + ", ")")
+  private def linkageCappedOracle: String =
     s"""WITH pa AS (SELECT p_partkey AS id,
        |  CASE WHEN p_partkey % 7 = 0 THEN 'HOT' ELSE p_brand END AS blk,
-       |  $fs FROM part),
+       |  $linkageFieldsSql FROM part),
        |hot AS (SELECT blk FROM pa GROUP BY blk HAVING count(*) > 100),
        |pb AS (SELECT * FROM pa WHERE blk NOT IN (SELECT blk FROM hot))
        |SELECT a.id AS id_a, b.id AS id_b,
-       |  CAST($agrees AS INTEGER) AS n_agree,
-       |  round($terms, 6) AS score
+       |  $linkageScoreSql
        |FROM pb a JOIN pb b ON a.blk = b.blk AND a.id < b.id
        |ORDER BY id_a, id_b""".stripMargin
-  }
 
   /** N-round EM oracle: replays emEstimate exactly — the agreement-
     * pattern histogram computed ONCE, then per round the left-to-right
@@ -11137,22 +10653,7 @@ object SparkEntry {
       s"""docs0 AS (SELECT doc_id,
          |    CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y
          |  FROM documents),
-         |toks AS (SELECT doc_id,
-         |    regexp_split_to_array(trim(lower(text)), '[ \\t\\n\\x0b\\f\\r]+')
-         |      AS ws
-         |  FROM documents),
-         |uni AS (SELECT doc_id, w, i
-         |  FROM (SELECT doc_id, unnest(ws) AS w,
-         |          unnest(range(1, len(ws) + 1)) AS i FROM toks)
-         |  WHERE length(w) > 0),
-         |feats AS (SELECT doc_id, w AS f FROM uni
-         |  UNION ALL
-         |  SELECT a.doc_id, a.w || ' ' || b.w
-         |  FROM uni a JOIN uni b ON a.doc_id = b.doc_id AND b.i = a.i + 1),
-         |fb AS (SELECT DISTINCT doc_id,
-         |    list_reduce(list_transform(string_split(f, ''), x -> unicode(x)),
-         |                (h, c) -> (h * 31 + c) % 2000003) % $buckets AS b
-         |  FROM feats),
+         |${hashedFeatsSql(buckets, distinct = true)},
          |n AS (SELECT CAST(count(*) AS BIGINT) AS nn FROM docs0),
          |w0 AS (SELECT unnest(range(-1, $buckets)) AS b,
          |    CAST(0.0 AS DOUBLE) AS wt),
@@ -11216,22 +10717,7 @@ object SparkEntry {
     s"""WITH docs0 AS (SELECT lang AS g, doc_id,
        |    CASE WHEN length(text) > 200 THEN 1.0 ELSE 0.0 END AS y
        |  FROM documents),
-       |toks AS (SELECT lang AS g, doc_id,
-       |    regexp_split_to_array(trim(lower(text)), '[ \\t\\n\\x0b\\f\\r]+')
-       |      AS ws
-       |  FROM documents),
-       |uni AS (SELECT g, doc_id, w, i
-       |  FROM (SELECT g, doc_id, unnest(ws) AS w,
-       |          unnest(range(1, len(ws) + 1)) AS i FROM toks)
-       |  WHERE length(w) > 0),
-       |feats AS (SELECT g, doc_id, w AS f FROM uni
-       |  UNION ALL
-       |  SELECT a.g, a.doc_id, a.w || ' ' || b.w
-       |  FROM uni a JOIN uni b ON a.doc_id = b.doc_id AND b.i = a.i + 1),
-       |fb AS (SELECT DISTINCT g, doc_id,
-       |    list_reduce(list_transform(string_split(f, ''), x -> unicode(x)),
-       |                (h, c) -> (h * 31 + c) % 2000003) % $buckets AS b
-       |  FROM feats),
+       |${hashedFeatsSql(buckets, distinct = true, Some("lang AS g" -> "g"))},
        |n AS (SELECT g, CAST(count(*) AS BIGINT) AS nn FROM docs0 GROUP BY g),
        |w0 AS (SELECT g, unnest(range(-1, $buckets)) AS b,
        |    CAST(0.0 AS DOUBLE) AS wt
@@ -11503,6 +10989,28 @@ object SparkEntry {
         s"(((($e) >> $i) & 1) << ${i * dims.size + j})")
     }.mkString(" + ")
 
+  /** SQL mirror of [[coOrderEdges]] as the PageRank operators see it
+    * (duplicate edges counted once): `edges`(src, dst), `outdeg`,
+    * `nodes`. */
+  private val coOrderGraphSql: String =
+    """pairs AS (
+      |  SELECT DISTINCT 'c:' || o_custkey AS c, 's:' || l_suppkey AS p
+      |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
+      |edges AS (SELECT c AS src, p AS dst FROM pairs
+      |          UNION SELECT p, c FROM pairs),
+      |outdeg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
+      |nodes AS (SELECT src AS node FROM edges
+      |          UNION SELECT dst FROM edges)""".stripMargin
+
+  /** PageRank round i's per-edge contributions `c<i>` (rank / out-degree
+    * at 9 dp, as DECIMAL) summed per node into `s<i>`. */
+  private def prContribSql(i: Int): String =
+    s"""c$i AS (SELECT e.dst AS node,
+       |  CAST(round(r.rank / o.deg, 9) AS DECIMAL(22,9)) AS c
+       |  FROM edges e JOIN r${i - 1} r ON e.src = r.node
+       |  JOIN outdeg o ON e.src = o.src),
+       |s$i AS (SELECT node, sum(c) AS s FROM c$i GROUP BY node)""".stripMargin
+
   /** DuckDB mirror of q_graph_pagerank: the same iteration count
     * unrolled as CTE rounds. Teleport is spelled `(1 - d)` — NEVER a
     * folded 0.15 literal — because 1-0.85 and 0.15 are different
@@ -11510,23 +11018,12 @@ object SparkEntry {
   private def pageRankOracle(iterations: Int, damping: Double): String = {
     val d = damping.toString
     val rounds = (1 to iterations).map { i =>
-      s"""c$i AS (SELECT e.dst AS node,
-         |  CAST(round(r.rank / o.deg, 9) AS DECIMAL(22,9)) AS c
-         |  FROM edges e JOIN r${i - 1} r ON e.src = r.node
-         |  JOIN outdeg o ON e.src = o.src),
-         |s$i AS (SELECT node, sum(c) AS s FROM c$i GROUP BY node),
+      s"""${prContribSql(i)},
          |r$i AS (SELECT n.node,
          |  round((1 - $d) + $d * CAST(coalesce(s.s, 0) AS DOUBLE), 9) AS rank
          |  FROM nodes n LEFT JOIN s$i s ON n.node = s.node)""".stripMargin
     }.mkString(",\n")
-    s"""WITH pairs AS (
-       |  SELECT DISTINCT 'c:' || o_custkey AS c, 's:' || l_suppkey AS p
-       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-       |edges AS (SELECT c AS src, p AS dst FROM pairs
-       |          UNION SELECT p, c FROM pairs),
-       |outdeg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-       |nodes AS (SELECT src AS node FROM edges
-       |          UNION SELECT dst FROM edges),
+    s"""WITH $coOrderGraphSql,
        |r0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS rank FROM nodes),
        |$rounds
        |SELECT node, round(rank, 6) AS rank FROM r$iterations
@@ -11574,24 +11071,13 @@ object SparkEntry {
   private def pprOracle(iterations: Int, damping: Double): String = {
     val d = damping.toString
     val rounds = (1 to iterations).map { i =>
-      s"""c$i AS (SELECT e.dst AS node,
-         |  CAST(round(r.rank / o.deg, 9) AS DECIMAL(22,9)) AS c
-         |  FROM edges e JOIN r${i - 1} r ON e.src = r.node
-         |  JOIN outdeg o ON e.src = o.src),
-         |s$i AS (SELECT node, sum(c) AS s FROM c$i GROUP BY node),
+      s"""${prContribSql(i)},
          |r$i AS (SELECT n.node, n.sf,
          |  round((1 - $d) * n.sf + $d * CAST(coalesce(s.s, 0) AS DOUBLE), 9)
          |    AS rank
          |  FROM n2 n LEFT JOIN s$i s ON n.node = s.node)""".stripMargin
     }.mkString(",\n")
-    s"""WITH pairs AS (
-       |  SELECT DISTINCT 'c:' || o_custkey AS c, 's:' || l_suppkey AS p
-       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-       |edges AS (SELECT c AS src, p AS dst FROM pairs
-       |          UNION SELECT p, c FROM pairs),
-       |outdeg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-       |nodes AS (SELECT src AS node FROM edges
-       |          UNION SELECT dst FROM edges),
+    s"""WITH $coOrderGraphSql,
        |seeds AS (SELECT DISTINCT 'c:' || c_custkey AS node FROM customer
        |          WHERE c_custkey % 100 = 0),
        |n2 AS (SELECT n.node,
@@ -11763,26 +11249,42 @@ object SparkEntry {
           |        FROM r CROSS JOIN (SELECT unnest(range(0, 2)) AS s)"""
           .stripMargin)}""".stripMargin
 
+  /** The ADC oracles' per-probe lookup table `lut`(query_id, s, code,
+    * dot), the corpus codes pivoted per vector `cs`(vec_id, c0, c1),
+    * and the top-3 tail over candidate scores `sc`. */
+  private val pqLutSql: String =
+    """lut AS (SELECT p.vec_id AS query_id, cb.s, cb.code,
+      |          list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+      |            list_transform(range(1, 33),
+      |              i -> p.v[cb.s*32 + i] * cb.c[i])),
+      |            (a, b) -> a + b) AS dot
+      |        FROM (SELECT vec_id, v FROM e WHERE vec_id < 5) p
+      |          CROSS JOIN cb)""".stripMargin
+  private val pqCodesPivotSql: String =
+    """cs AS (SELECT vec_id,
+      |         max(CASE WHEN s = 0 THEN code END) AS c0,
+      |         max(CASE WHEN s = 1 THEN code END) AS c1
+      |       FROM codes GROUP BY 1)""".stripMargin
+  private val pqTop3Sql: String =
+    """ranked AS (SELECT query_id, vec_id, score,
+      |            row_number() OVER (PARTITION BY query_id
+      |              ORDER BY score DESC, vec_id ASC) AS rank
+      |           FROM sc)
+      |SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id,
+      |  round(score, 6) AS score
+      |FROM ranked WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
+
   /** Residual-ADC ranking: score = dot(q, centroid) + Σ_s lut. */
   private def pqResidualAdcOracle: String =
     s"""WITH $pqResidualCtes,
-       |lut AS (SELECT p.vec_id AS query_id, cb.s, cb.code,
-       |          list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |            list_transform(range(1, 33),
-       |              i -> p.v[cb.s*32 + i] * cb.c[i])),
-       |            (a, b) -> a + b) AS dot
-       |        FROM (SELECT vec_id, v FROM e WHERE vec_id < 5) p
-       |          CROSS JOIN cb),
+       |$pqLutSql,
        |base AS (SELECT p.vec_id AS query_id,
        |           list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
        |             list_transform(range(1, 65), i -> p.v[i] * c[i])),
        |             (a, b) -> a + b) AS b
        |         FROM (SELECT vec_id, v FROM e WHERE vec_id < 5) p
        |           CROSS JOIN cl),
-       |cs AS (SELECT vec_id,
-       |         max(CASE WHEN s = 0 THEN code END) AS c0,
-       |         max(CASE WHEN s = 1 THEN code END) AS c1
-       |       FROM codes GROUP BY 1),
+       |$pqCodesPivotSql,
        |sc AS (SELECT l0.query_id, cs.vec_id,
        |         base.b + l0.dot + l1.dot AS score
        |       FROM cs
@@ -11791,13 +11293,7 @@ object SparkEntry {
        |         AND l1.query_id = l0.query_id
        |       JOIN base ON base.query_id = l0.query_id
        |       WHERE cs.vec_id != l0.query_id),
-       |ranked AS (SELECT query_id, vec_id, score,
-       |            row_number() OVER (PARTITION BY query_id
-       |              ORDER BY score DESC, vec_id ASC) AS rank
-       |           FROM sc)
-       |SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id,
-       |  round(score, 6) AS score
-       |FROM ranked WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
+       |$pqTop3Sql""".stripMargin
 
   private def pqCodesOracle: String =
     s"""WITH $pqOracleCtes
@@ -11807,10 +11303,7 @@ object SparkEntry {
 
   private def pqErrorOracle: String =
     s"""WITH $pqOracleCtes,
-       |cs AS (SELECT vec_id,
-       |         max(CASE WHEN s = 0 THEN code END) AS c0,
-       |         max(CASE WHEN s = 1 THEN code END) AS c1
-       |       FROM codes GROUP BY 1),
+       |$pqCodesPivotSql,
        |rec AS (SELECT cs.vec_id, cb0.c || cb1.c AS r
        |        FROM cs
        |        JOIN cb cb0 ON cb0.s = 0 AND cb0.code = cs.c0
@@ -11830,17 +11323,8 @@ object SparkEntry {
   /** ADC scoring CTEs shared by the plain-ADC oracle and the recall
     * audit: per-probe LUT, pivoted codes, base-0 score per candidate. */
   private val pqAdcScoreCtes: String =
-    """lut AS (SELECT p.vec_id AS query_id, cb.s, cb.code,
-      |          list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |            list_transform(range(1, 33),
-      |              i -> p.v[cb.s*32 + i] * cb.c[i])),
-      |            (a, b) -> a + b) AS dot
-      |        FROM (SELECT vec_id, v FROM e WHERE vec_id < 5) p
-      |          CROSS JOIN cb),
-      |cs AS (SELECT vec_id,
-      |         max(CASE WHEN s = 0 THEN code END) AS c0,
-      |         max(CASE WHEN s = 1 THEN code END) AS c1
-      |       FROM codes GROUP BY 1),
+    s"""$pqLutSql,
+      |$pqCodesPivotSql,
       |sc AS (SELECT l0.query_id, cs.vec_id,
       |         CAST(0.0 AS DOUBLE) + l0.dot + l1.dot AS score
       |       FROM cs
@@ -11852,13 +11336,7 @@ object SparkEntry {
   private def pqAdcOracle: String =
     s"""WITH $pqOracleCtes,
        |$pqAdcScoreCtes,
-       |ranked AS (SELECT query_id, vec_id, score,
-       |            row_number() OVER (PARTITION BY query_id
-       |              ORDER BY score DESC, vec_id ASC) AS rank
-       |           FROM sc)
-       |SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id,
-       |  round(score, 6) AS score
-       |FROM ranked WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
+       |$pqTop3Sql""".stripMargin
 
   /** Recall audit oracle: exact brute-force top-10 vs ADC top-10, both
     * fully replayed in SQL, intersected per query. */

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
  * CALLER-OWNED lifetime. A session running many heavy queries
  * back-to-back should free each consumed result with
  * [[graft.plans.Checkpoints.release]] (after which the frame is dead)
- * — Bench/QueryTime/Verify do; see Checkpoints' scaladoc for the sf1
+ * — Bench/Verify do; see Checkpoints' scaladoc for the sf1
  * measurement that motivated the contract.
  *
  * Determinism across engines (the repo's float policy): per-edge
@@ -44,14 +44,15 @@ import org.apache.spark.sql.functions._
  */
 object Graph {
 
+  /** Rounds between lineage truncations in every iterative operator. */
+  private val checkpointEvery = 5
+
   /** Iterate PageRank over `edges(srcCol, dstCol)`; returns
     * `(node, rank)` for every node appearing on either side. Duplicate
     * edges are counted once (dedup'd up front). */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iterations: Int, damping: Double = 0.85,
-               checkpointEvery: Int = 5): DataFrame = {
-    val (ranks, caches) = pageRankRaw(edges, srcCol, dstCol, iterations,
-      damping, checkpointEvery)
+               iterations: Int, damping: Double = 0.85): DataFrame = {
+    val (ranks, caches) = pageRankRaw(edges, srcCol, dstCol, iterations, damping)
     // materialize before releasing the cached inputs the lineage reads
     val out = ranks.truncateLineage(eager = true)
     caches.foreach(_.unpersist())
@@ -62,8 +63,8 @@ object Graph {
     * (for PlanAuditSpec's cached-edge-reuse assert) plus the cached
     * frames the caller must unpersist. */
   private[graft] def pageRankRaw(edges: DataFrame, srcCol: String, dstCol: String,
-                                 iterations: Int, damping: Double = 0.85,
-                                 checkpointEvery: Int = 5): (DataFrame, Seq[DataFrame]) = {
+                                 iterations: Int,
+                                 damping: Double = 0.85): (DataFrame, Seq[DataFrame]) = {
     require(iterations >= 1, "at least one iteration")
     // pinned exchange width for the per-iteration cell aggregates
     // (cluster-adaptive: executors x cores, not a local constant)
@@ -139,8 +140,7 @@ object Graph {
    */
   def pageRankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
                        weightCol: String, iterations: Int,
-                       damping: Double = 0.85,
-                       checkpointEvery: Int = 5): DataFrame = {
+                       damping: Double = 0.85): DataFrame = {
     require(iterations >= 1, "at least one iteration")
     // pinned exchange width for the per-iteration cell aggregates
     // (cluster-adaptive: executors x cores, not a local constant)
@@ -222,8 +222,7 @@ object Graph {
   def personalizedPageRank(edges: DataFrame, srcCol: String,
                            dstCol: String, seeds: DataFrame,
                            seedCol: String, iterations: Int,
-                           damping: Double = 0.85,
-                           checkpointEvery: Int = 5): DataFrame = {
+                           damping: Double = 0.85): DataFrame = {
     require(iterations >= 1, "at least one iteration")
     // pinned exchange width for the per-iteration cell aggregates
     // (cluster-adaptive: executors x cores, not a local constant)
@@ -316,7 +315,7 @@ object Graph {
    * oracle unrolls the same rounds.
    */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-           iterations: Int, checkpointEvery: Int = 5): DataFrame = {
+           iterations: Int): DataFrame = {
     require(iterations >= 1, "at least one iteration")
     // pinned exchange width for the per-iteration cell aggregates
     // (cluster-adaptive: executors x cores, not a local constant)
@@ -399,8 +398,7 @@ object Graph {
    */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        seeds: DataFrame, nodeCol: String, labelCol: String,
-                       iterations: Int,
-                       checkpointEvery: Int = 5): DataFrame = {
+                       iterations: Int): DataFrame = {
     require(iterations >= 1, "at least one iteration")
     val fwd = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
     val und = fwd.union(fwd.select(col("b").as("a"), col("a").as("b")))
@@ -460,8 +458,7 @@ object Graph {
    * edges, per-round (node, label) vote shuffle + per-node window.
    */
   def communities(edges: DataFrame, srcCol: String, dstCol: String,
-                  iterations: Int,
-                  checkpointEvery: Int = 5): DataFrame = {
+                  iterations: Int): DataFrame = {
     require(iterations >= 1, "at least one iteration")
     val fwd = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
     val und = fwd.union(fwd.select(col("b").as("a"), col("a").as("b")))

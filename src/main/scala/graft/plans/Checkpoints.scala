@@ -25,8 +25,8 @@ import org.apache.spark.sql.DataFrame
  * derived from it that was not itself materialized) throws. Call it
  * when — and only when — the result has been fully consumed (written,
  * collected, or folded into something materialized). Bench and
- * QueryTime release every query's result between timed runs for
- * exactly this reason.
+ * Verify release every query's result between runs for exactly this
+ * reason.
  */
 object Checkpoints {
 

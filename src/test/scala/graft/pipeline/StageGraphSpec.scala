@@ -17,7 +17,7 @@ class StageGraphSpec extends AnyFunSuite {
 
   test("sampleStages.json: a lone JOIN with no LOADs has no inputs and no edges") {
     val stages = StageJson.parseStages(java.nio.file.Files.readString(
-      java.nio.file.Path.of("/root/reference/ui/src/sampleStages.json")))
+      java.nio.file.Path.of(getClass.getResource("/fixtures/sampleStages.json").toURI)))
     assume(stages.nonEmpty)
     val nodes = StageGraph.buildStageGraph(stages)
     // no LOAD registered either table name -> the truthiness guard
