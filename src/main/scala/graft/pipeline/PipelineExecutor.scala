@@ -42,10 +42,16 @@ object ErrorPolicy extends Enumeration {
  *  - every result is registered as a temp view so CUSTOM SQL stages can
  *    reference it.
  *
- * Deliberate difference (SURVEY §4): results stay LAZY temp views, not
- * eagerly materialized tables — Catalyst fuses the whole chain and pushes
- * filters/pruning into the scan. Call `materialize(name)` (cache) only for
- * interactive re-use.
+ * Deliberate difference (SURVEY §4): stage results stay LAZY temp views,
+ * not eagerly materialized tables — Catalyst fuses the whole chain and
+ * pushes filters and pruning into the scan of its inputs. The inputs
+ * themselves are tables as in the reference: `Ingest.loadCsvTable` keeps
+ * each upload as a cached in-memory copy (the reference's CREATE TABLE),
+ * so a click re-runs its lineage from that copy, never from the file.
+ * Caching every stage result as well was measured and not adopted
+ * (ROADMAP direction 2): it made clicks slower, doubled their tasks and
+ * held a third more heap. Call `materialize(name)` (cache) to pin one
+ * result.
  */
 final class PipelineExecutor(val spark: SparkSession) {
 

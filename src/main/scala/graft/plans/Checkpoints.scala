@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftshim.PlanBridge
 
 /**
  * Release contract for checkpoint-backed results — the missing half of
@@ -54,6 +55,15 @@ object Checkpoints {
    * Both strategies materialize the same rows, so results are
    * digit-identical (pinned by CheckpointStrategySpec); [[release]]
    * frees either kind.
+   *
+   * The returned leaf carries its own size estimate. Spark's checkpoint
+   * leaf keeps the estimate of the plan it replaced, and the estimate of
+   * a join is the product of its sides', so a loop that joins its state
+   * and truncates squared its estimate every round (3,927 bits after 8
+   * Bradley–Terry rounds, 10^6 after 16, all of it spent in BigInteger
+   * multiplies on the driver). So an eager truncation carries the bytes
+   * its checkpoint stored, and a lazy one the old estimate capped at
+   * `spark.sql.defaultSizeInBytes`: neither compounds across rounds.
    */
   def truncate(df: DataFrame, eager: Boolean = true): DataFrame = {
     val spark = df.sparkSession
@@ -69,8 +79,15 @@ object Checkpoints {
       require(sc.getCheckpointDir.isDefined,
         s"$ReliableConf=true needs a checkpoint dir: call " +
           "sparkContext.setCheckpointDir(...) (HDFS/S3 on a cluster)")
-      df.checkpoint(eager)
-    } else df.localCheckpoint(eager)
+      withOwnSize(df.checkpoint(eager), eager)
+    } else withOwnSize(df.localCheckpoint(eager), eager)
+  }
+
+  private def withOwnSize(cp: DataFrame, eager: Boolean): DataFrame = {
+    val size =
+      if (eager) BigInt(PlanBridge.storedBytes(cp))
+      else PlanBridge.leafSize(cp).min(cp.sparkSession.sessionState.conf.defaultSizeInBytes)
+    PlanBridge.withLeafSize(cp, size)
   }
 
   /** Unpersist every checkpoint-backed leaf (`LogicalRDD` sources
@@ -79,8 +96,9 @@ object Checkpoints {
     * Returns the number of storage handles released. No-op (0) for
     * plans with no checkpoint leaves — safe to call on any frame.
     * Deliberately does NOT touch `InMemoryRelation` (`.cache()`)
-    * leaves: a cached table is a deliberate cross-query PIN
-    * (PipelineExecutor.materialize) with its own unpersist path, and
+    * leaves: a cached table is a deliberate cross-query PIN (an upload
+    * from Ingest.loadCsvTable, or PipelineExecutor.materialize) with its
+    * own unpersist path, and
     * unlike a checkpoint it can recompute if evicted — the leak this
     * contract closes is specifically the unrecomputable, caller-owned
     * checkpoint block. */

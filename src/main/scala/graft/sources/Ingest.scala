@@ -1,14 +1,26 @@
 package graft.sources
 
+import com.univocity.parsers.csv.CsvParser
 import graft.pipeline.PipelineExecutor
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.csv.{CSVInferSchema, CSVOptions}
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.graftshim.PlanBridge
 import org.apache.spark.sql.types._
 
 /**
  * Data ingestion, mirroring the reference's sources (SURVEY §2.3):
  *
  *  - CSV with inferred schema — the `read_csv_auto(f, header=true,
- *    auto_detect=true)` path (reference: ui/src/App.tsx:370-374,392-395);
+ *    auto_detect=true)` path (reference: ui/src/App.tsx:370-374,392-395).
+ *    An upload is one file: the driver reads it once to infer the schema
+ *    (the same bytes Spark's header and inference jobs would read, with
+ *    no job), and [[loadCsvTable]] keeps it as an in-memory table, as the
+ *    reference's `CREATE TABLE` does (ui/src/App.tsx:362-446);
  *  - all-VARCHAR fallback capped at 10,000 data rows — the manual-parse
  *    tier (ui/src/App.tsx:417-420);
  *  - image-payload tables `{name, columns:[{name,type}], rows:[[...]]}`
@@ -18,36 +30,101 @@ import org.apache.spark.sql.types._
  */
 object Ingest {
 
-  /** Primary CSV path: header + schema inference. `escape = "` selects
-    * RFC-4180 doubled-quote escaping ("" inside a quoted field) — what
-    * DuckDB's read_csv_auto and the reference's quote-aware manual parser
+  /** Options of the primary CSV path. `escape = "` selects RFC-4180
+    * doubled-quote escaping ("" inside a quoted field) — what DuckDB's
+    * read_csv_auto and the reference's quote-aware manual parser
     * (ui/src/App.tsx:328-352) both speak; Spark's default backslash
     * escape silently splits such fields at embedded commas (caught by the
     * q_load_csv_quoted parity gate). */
-  def csv(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .option("header", "true")
-      .option("inferSchema", "true")
-      .option("escape", "\"")
-      .option("mode", "PERMISSIVE")
-      .csv(path)
+  private val CsvOptions = Map(
+    "header" -> "true", "inferSchema" -> "true",
+    "escape" -> "\"", "mode" -> "PERMISSIVE")
+
+  /** Primary CSV path: header + schema inference, with the schema and
+    * rows of Spark's `inferSchema=true` read. A single file's schema is
+    * inferred on the driver ([[inferCsvSchema]]) and handed to the read,
+    * so building the frame launches no job; a directory or glob goes
+    * through Spark's own inference. */
+  def csv(spark: SparkSession, path: String): DataFrame = {
+    val reader = spark.read.options(CsvOptions)
+    inferCsvSchema(spark, path).fold(reader.csv(path))(reader.schema(_).csv(path))
+  }
+
+  /**
+   * The schema Spark's `inferSchema=true` read gives the single CSV file
+   * at `path`, inferred on the driver; None when `path` is not a file.
+   *
+   * It makes the calls `TextInputCSVDataSource.inferFromDataset` makes:
+   * the first line whose spaces-only trim is non-empty is the header,
+   * parsed by univocity with `CSVOptions.asParserSettings` and made safe
+   * by `CSVUtils.makeSafeHeader`; the other lines pass
+   * `CSVUtils.filterCommentAndEmpty` and `filterHeaderLine`, and
+   * `CSVInferSchema.inferRowType` folds their parsed cells into one type
+   * per column, which `toStructFields` names. Spark runs that fold as an
+   * RDD aggregate after a `take(1)` job for the header; here it is one
+   * pass over the file's lines in order (LF, CR or CRLF ends a line, as
+   * for Hadoop's line reader). A file Spark would split into several
+   * partitions is folded in one piece, where Spark merges per-partition
+   * types with `mergeRowTypes`.
+   */
+  def inferCsvSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val file = new Path(path)
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val fs = file.getFileSystem(hadoopConf)
+    if (!fs.isFile(file)) None
+    else PlanBridge.withActiveConf(spark) { conf =>
+      val options = new CSVOptions(CsvOptions, conf.csvColumnPruning,
+        conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+      val raw = fs.open(file)
+      val in = Option(new CompressionCodecFactory(hadoopConf).getCodec(file))
+        .fold[java.io.InputStream](raw)(_.createInputStream(raw))
+      val reader = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
+      try {
+        val lines = Iterator.continually(reader.readLine()).takeWhile(_ != null)
+          .dropWhile(l => !l.exists(_ != ' ') ||
+            (options.isCommentSet && l.startsWith(options.comment.toString)))
+        val header = if (lines.hasNext) {
+          val first = lines.next()
+          Option(new CsvParser(options.asParserSettings).parseLine(first))
+            .map(row => (first, CSVUtils.makeSafeHeader(row, conf.caseSensitiveAnalysis, options)))
+        } else None
+        Some(header.fold(StructType(Nil)) { case (first, names) =>
+          val inferrer = new CSVInferSchema(options)
+          val parser = new CsvParser(options.asParserSettings)
+          val types = CSVUtils.filterHeaderLine(
+              CSVUtils.filterCommentAndEmpty(lines, options), first, options)
+            .map(parser.parseLine)
+            .foldLeft(Array.fill[DataType](names.length)(NullType))(inferrer.inferRowType)
+          StructType(inferrer.toStructFields(types, names))
+        })
+      } finally reader.close()
+    }
+  }
 
   /** Fallback CSV path: every column VARCHAR, first 10k data rows
     * (ui/src/App.tsx:417-420). */
   def csvFallback(spark: SparkSession, path: String, maxRows: Int = 10000): DataFrame =
-    spark.read
-      .option("header", "true")
-      .option("inferSchema", "false")
-      .option("escape", "\"")
-      .option("mode", "PERMISSIVE")
-      .csv(path)
-      .limit(maxRows)
+    spark.read.options(CsvOptions + ("inferSchema" -> "false")).csv(path).limit(maxRows)
 
-  /** Load + register a CSV under the reference's `table_<stem>` name. */
+  /**
+   * Load + register a CSV upload under the reference's `table_<stem>`
+   * name, as a lazily cached columnar table: the first action over it
+   * (the upload's own preview) builds the in-memory copy, and clicks,
+   * `describe` and exports read that copy, never the file. Launches no
+   * job. Spark's cache manager matches cached data by plan (path and
+   * schema), not by file contents, so a copy an earlier upload of the
+   * same path left is dropped first; once built, the copy keeps what
+   * the file held at upload, whatever later happens to the file. A
+   * preview reads only the file splits it needs, so an upload Spark
+   * splits into several partitions is fully copied by its first full
+   * scan.
+   */
   def loadCsvTable(spark: SparkSession, path: String): (String, DataFrame) = {
     val fileName = new java.io.File(path).getName
     val name = PipelineExecutor.tableNameForFile(fileName)
-    val df = csv(spark, path)
+    val scan = csv(spark, path)
+    scan.unpersist()
+    val df = scan.cache()
     df.createOrReplaceTempView(name)
     (name, df)
   }

@@ -160,4 +160,32 @@ class PlanGrowthSpec extends SparkTestBase {
       assertBoundedGrowth("linkage.weightFitEm", minRounds = 6)
     }
   }
+
+  // Catalyst multiplies the size estimates of a join's sides, so a
+  // checkpoint leaf that kept the estimate of the plan it replaced
+  // squared a join-and-truncate loop's estimate every round (Bradley–
+  // Terry: 64 bits at 2 rounds, 3,927 at 8, 10^6 at 16).
+  private def estimateBits(d: org.apache.spark.sql.DataFrame): Int =
+    d.queryExecution.optimizedPlan.stats.sizeInBytes.bitLength
+
+  test("eager truncation: estimate bits do not grow with the number of rounds") {
+    val games = df("w BIGINT, l BIGINT", Seq(
+      Row(0L, 1L), Row(1L, 2L), Row(0L, 2L), Row(0L, 1L), Row(2L, 3L)))
+    val bits = Seq(2, 8, 16).map(n =>
+      estimateBits(Preference.bradleyTerry(games, "w", "l", iterations = n)))
+    assert(bits.forall(_ == bits.head), s"estimate bits at 2/8/16 rounds: $bits")
+    assert(bits.head < 63, s"estimate bits: $bits")
+  }
+
+  test("lazy truncation: estimate bits stay capped across rounds") {
+    import org.apache.spark.sql.functions.col
+    val start = df("k BIGINT", (1L to 4L).map(Row(_)))
+    def bits(rounds: Int) = estimateBits((1 to rounds).foldLeft(start) { (cur, _) =>
+      Checkpoints.truncate(cur.join(cur.select(col("k").as("k2")), col("k") === col("k2"))
+        .select("k"), eager = false)
+    })
+    val capBits = BigInt(spark.sessionState.conf.defaultSizeInBytes).bitLength
+    val b = Seq(1, 6, 12).map(bits)
+    assert(b.forall(_ <= capBits), s"estimate bits at 1/6/12 rounds: $b (cap $capBits)")
+  }
 }

@@ -50,6 +50,76 @@ class IngestSpec extends SparkTestBase {
     assert(spark.sql(s"SELECT * FROM $name").count() == 1)
   }
 
+  // ---- upload lifecycle: the upload is a cached copy, as the
+  // reference's CREATE TABLE is
+
+  /** Jobs `body` launches, counted by a listener. The body runs in its
+    * own job group; a marker job after it flushes the listener queue,
+    * which delivers events in order. */
+  private def jobsLaunchedBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"graft_ingest_probe_${System.nanoTime()}"
+    val marker = s"${group}_end"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`marker`) => flushed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "probe")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("loadCsvTable launches no job; Spark's own inference launches some") {
+    val p = writeCsv("a,b\n1,x\n2,y\n")
+    assert(jobsLaunchedBy(Ingest.loadCsvTable(spark, p)) == 0)
+    assert(jobsLaunchedBy(spark.read.option("header", "true")
+      .option("inferSchema", "true").csv(p)) > 0)
+  }
+
+  test("re-uploading changed rows at the same path shows the new rows") {
+    val p = writeCsv("a,b\n1,x\n2,y\n")
+    val (name, first) = Ingest.loadCsvTable(spark, p)
+    assertSameRows(first, Seq(Seq(1, "x"), Seq(2, "y")))
+    Files.writeString(java.nio.file.Path.of(p), "a,b\n3,z\n4,w\n5,v\n")
+    val (_, second) = Ingest.loadCsvTable(spark, p)
+    assertSameRows(second, Seq(Seq(3, "z"), Seq(4, "w"), Seq(5, "v")))
+    assertSameRows(spark.table(name), Seq(Seq(3, "z"), Seq(4, "w"), Seq(5, "v")))
+  }
+
+  test("after the upload's preview, clicks read the copy, not the file") {
+    import graft.model.{FilterCondition, FilterStage}
+    import graft.pipeline.PipelineExecutor
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val p = writeCsv("a,b\n1,x\n2,y\n3,z\n")
+    val (name, upload) = Ingest.loadCsvTable(spark, p)
+    val ex = new PipelineExecutor(spark).register(name, upload)
+    assert(ex.preview(name).length == 3)
+    // the user's file changes on disk after the upload
+    Files.writeString(java.nio.file.Path.of(p), "a,b\n9,q\n")
+    val click = ex.run(Seq(FilterStage("stage_1", "a > 1", Some(name),
+      Seq(FilterCondition("a", ">", 1)))))
+    assertSameRows(click, Seq(Seq(2, "y"), Seq(3, "z")))
+    val plan = click.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    assert(helper.collect(plan) { case s: FileSourceScanExec => s }.isEmpty, plan)
+    assert(helper.collect(plan) { case s: InMemoryTableScanExec => s }.nonEmpty, plan)
+  }
+
   test("image payload: lowercased columns, VARCHAR default, NULL literals") {
     val df = Ingest.fromImagePayload(spark,
       Seq(Ingest.ImageColumn("Product_ID", "INTEGER"),
