@@ -56,14 +56,15 @@ object Checkpoints {
    * digit-identical (pinned by CheckpointStrategySpec); [[release]]
    * frees either kind.
    *
-   * The returned leaf carries its own size estimate. Spark's checkpoint
-   * leaf keeps the estimate of the plan it replaced, and the estimate of
-   * a join is the product of its sides', so a loop that joins its state
-   * and truncates squared its estimate every round (3,927 bits after 8
-   * Bradley–Terry rounds, 10^6 after 16, all of it spent in BigInteger
-   * multiplies on the driver). So an eager truncation carries the bytes
-   * its checkpoint stored, and a lazy one the old estimate capped at
-   * `spark.sql.defaultSizeInBytes`: neither compounds across rounds.
+   * The returned leaf's size estimate is capped at
+   * `spark.sql.defaultSizeInBytes`. Spark's checkpoint leaf keeps the
+   * estimate of the plan it replaced, and the estimate of a join is the
+   * product of its sides', so a loop that joins its state and truncates
+   * squared its estimate every round (3,927 bits after 8 Bradley–Terry
+   * rounds, 10^6 after 16, all of it spent in BigInteger multiplies on
+   * the driver). Capped, it cannot compound across rounds. Below the
+   * cap the estimate is Spark's own, and above it every size is far
+   * past any broadcast threshold, so no broadcast choice changes.
    */
   def truncate(df: DataFrame, eager: Boolean = true): DataFrame = {
     val spark = df.sparkSession
@@ -79,16 +80,12 @@ object Checkpoints {
       require(sc.getCheckpointDir.isDefined,
         s"$ReliableConf=true needs a checkpoint dir: call " +
           "sparkContext.setCheckpointDir(...) (HDFS/S3 on a cluster)")
-      withOwnSize(df.checkpoint(eager), eager)
-    } else withOwnSize(df.localCheckpoint(eager), eager)
+      capped(df.checkpoint(eager))
+    } else capped(df.localCheckpoint(eager))
   }
 
-  private def withOwnSize(cp: DataFrame, eager: Boolean): DataFrame = {
-    val size =
-      if (eager) BigInt(PlanBridge.storedBytes(cp))
-      else PlanBridge.leafSize(cp).min(cp.sparkSession.sessionState.conf.defaultSizeInBytes)
-    PlanBridge.withLeafSize(cp, size)
-  }
+  private def capped(cp: DataFrame): DataFrame =
+    PlanBridge.withLeafSizeAtMost(cp, cp.sparkSession.sessionState.conf.defaultSizeInBytes)
 
   /** Unpersist every checkpoint-backed leaf (`LogicalRDD` sources
     * reachable from `df`'s analyzed plan) and, for RELIABLE

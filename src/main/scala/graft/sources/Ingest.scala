@@ -7,7 +7,9 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.csv.{CSVInferSchema, CSVOptions}
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.graftshim.PlanBridge
 import org.apache.spark.sql.types._
@@ -17,10 +19,11 @@ import org.apache.spark.sql.types._
  *
  *  - CSV with inferred schema — the `read_csv_auto(f, header=true,
  *    auto_detect=true)` path (reference: ui/src/App.tsx:370-374,392-395).
- *    An upload is one file: the driver reads it once to infer the schema
- *    (the same bytes Spark's header and inference jobs would read, with
- *    no job), and [[loadCsvTable]] keeps it as an in-memory table, as the
- *    reference's `CREATE TABLE` does (ui/src/App.tsx:362-446);
+ *    An upload is one file: when Spark reads it as one split, the driver
+ *    reads it once to infer the schema (the same bytes Spark's header and
+ *    inference jobs would read, with no job), and [[loadCsvTable]] keeps
+ *    it as an in-memory table, as the reference's `CREATE TABLE` does
+ *    (ui/src/App.tsx:362-446);
  *  - all-VARCHAR fallback capped at 10,000 data rows — the manual-parse
  *    tier (ui/src/App.tsx:417-420);
  *  - image-payload tables `{name, columns:[{name,type}], rows:[[...]]}`
@@ -41,18 +44,21 @@ object Ingest {
     "escape" -> "\"", "mode" -> "PERMISSIVE")
 
   /** Primary CSV path: header + schema inference, with the schema and
-    * rows of Spark's `inferSchema=true` read. A single file's schema is
-    * inferred on the driver ([[inferCsvSchema]]) and handed to the read,
-    * so building the frame launches no job; a directory or glob goes
-    * through Spark's own inference. */
+    * rows of Spark's `inferSchema=true` read. The schema of a file Spark
+    * reads as one split is inferred on the driver ([[inferCsvSchema]])
+    * and handed to the read, so building the frame launches no job; a
+    * larger file, a directory or a glob goes through Spark's own
+    * inference. */
   def csv(spark: SparkSession, path: String): DataFrame = {
     val reader = spark.read.options(CsvOptions)
     inferCsvSchema(spark, path).fold(reader.csv(path))(reader.schema(_).csv(path))
   }
 
   /**
-   * The schema Spark's `inferSchema=true` read gives the single CSV file
-   * at `path`, inferred on the driver; None when `path` is not a file.
+   * The schema Spark's `inferSchema=true` read gives the CSV file at
+   * `path`, inferred on the driver; None when `path` is not a file or is
+   * longer than the split size Spark's scan of that file would use
+   * (`FilePartition.maxSplitBytes`).
    *
    * It makes the calls `TextInputCSVDataSource.inferFromDataset` makes:
    * the first line whose spaces-only trim is non-empty is the header,
@@ -63,15 +69,21 @@ object Ingest {
    * per column, which `toStructFields` names. Spark runs that fold as an
    * RDD aggregate after a `take(1)` job for the header; here it is one
    * pass over the file's lines in order (LF, CR or CRLF ends a line, as
-   * for Hadoop's line reader). A file Spark would split into several
-   * partitions is folded in one piece, where Spark merges per-partition
-   * types with `mergeRowTypes`.
+   * for Hadoop's line reader). A file of at most one split is one
+   * partition of that aggregate, folded in the same order, so the two
+   * schemas agree by construction. A longer file would be inferred in
+   * parallel, one partition per split, and is left to Spark.
    */
   def inferCsvSchema(spark: SparkSession, path: String): Option[StructType] = {
     val file = new Path(path)
     val hadoopConf = spark.sessionState.newHadoopConf()
     val fs = file.getFileSystem(hadoopConf)
-    if (!fs.isFile(file)) None
+    val oneSplit = fs.isFile(file) && {
+      val status = fs.getFileStatus(file)
+      status.getLen <= FilePartition.maxSplitBytes(spark,
+        Seq(PartitionDirectory(InternalRow.empty, Array(status))))
+    }
+    if (!oneSplit) None
     else PlanBridge.withActiveConf(spark) { conf =>
       val options = new CSVOptions(CsvOptions, conf.csvColumnPruning,
         conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
@@ -110,20 +122,26 @@ object Ingest {
    * Load + register a CSV upload under the reference's `table_<stem>`
    * name, as a lazily cached columnar table: the first action over it
    * (the upload's own preview) builds the in-memory copy, and clicks,
-   * `describe` and exports read that copy, never the file. Launches no
-   * job. Spark's cache manager matches cached data by plan (path and
-   * schema), not by file contents, so a copy an earlier upload of the
-   * same path left is dropped first; once built, the copy keeps what
-   * the file held at upload, whatever later happens to the file. A
-   * preview reads only the file splits it needs, so an upload Spark
-   * splits into several partitions is fully copied by its first full
-   * scan.
+   * `describe` and exports read that copy, never the file. For a file
+   * Spark reads as one split it launches no job ([[csv]]). Once built,
+   * the copy keeps what the file held at upload, whatever later happens
+   * to the file. A preview reads only the file splits it needs, so an
+   * upload Spark splits into several partitions is fully copied by its
+   * first full scan.
+   *
+   * The copy lives as long as its table, as the reference's table does.
+   * An earlier upload's table of the same name is dropped first, and its
+   * copy with it (Spark's cache manager matches cached data by plan —
+   * path and schema — not by file contents, so a re-upload of changed
+   * rows at the same path would otherwise read the old copy).
+   * `spark.catalog.dropTempView(name)` or
+   * `spark.catalog.uncacheTable(name)` drops it explicitly.
    */
   def loadCsvTable(spark: SparkSession, path: String): (String, DataFrame) = {
     val fileName = new java.io.File(path).getName
     val name = PipelineExecutor.tableNameForFile(fileName)
     val scan = csv(spark, path)
-    scan.unpersist()
+    spark.catalog.dropTempView(name)
     val df = scan.cache()
     df.createOrReplaceTempView(name)
     (name, df)

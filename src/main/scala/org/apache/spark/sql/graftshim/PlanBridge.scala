@@ -1,17 +1,14 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.SparkEnv
 import org.apache.spark.sql.{DataFrame, SparkSession, classic}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.storage.RDDBlockId
 
 /**
- * Bridge into the `private[sql]` / `private[spark]` pieces that
- * `graft.plans.Checkpoints` and `graft.sources.Ingest` need: the
- * session's own SQL conf, a checkpoint's storage, and re-wrapping a
- * checkpoint leaf. Same rationale as [[CatalystBridge]].
+ * Bridge into the `private[sql]` pieces that `graft.plans.Checkpoints`
+ * and `graft.sources.Ingest` need: the session's own SQL conf, and
+ * re-wrapping a checkpoint leaf. Same rationale as [[CatalystBridge]].
  */
 object PlanBridge {
 
@@ -23,48 +20,22 @@ object PlanBridge {
     s.withActive(f(s.sessionState.conf))
   }
 
-  /** The checkpoint leaf of a frame `Dataset.checkpoint` /
-    * `localCheckpoint` returned. */
-  private def leaf(cp: DataFrame): LogicalRDD =
-    cp.asInstanceOf[classic.Dataset[_]].logicalPlan match {
+  /** `cp`, a frame `Dataset.checkpoint` / `localCheckpoint` returned,
+    * with its checkpoint leaf's size estimate capped at `maxBytes`;
+    * rows, lineage and constraints are the leaf's own. */
+  def withLeafSizeAtMost(cp: DataFrame, maxBytes: BigInt): DataFrame = {
+    val lr = cp.asInstanceOf[classic.Dataset[_]].logicalPlan match {
       case lr: LogicalRDD => lr
       case other => throw new IllegalArgumentException(
         s"not a checkpoint frame: ${other.nodeName}")
     }
-
-  /** The size estimate the checkpoint leaf carries now. */
-  def leafSize(cp: DataFrame): BigInt = leaf(cp).stats.sizeInBytes
-
-  /** Bytes an eager checkpoint stored: its blocks in the block
-    * managers (local checkpoint) or its files (reliable checkpoint).
-    * The block managers' master learns of every block before the task
-    * that stored it ends, so the count is complete once the checkpoint
-    * job has returned. */
-  def storedBytes(cp: DataFrame): Long = {
-    val rdd = leaf(cp).rdd
-    rdd.getCheckpointFile match {
-      case Some(dir) =>
-        val path = new org.apache.hadoop.fs.Path(dir)
-        path.getFileSystem(rdd.sparkContext.hadoopConfiguration)
-          .getContentSummary(path).getLength
-      case None =>
-        SparkEnv.get.blockManager.master.getStorageStatus.iterator
-          .flatMap(_.rddBlocks.iterator)
-          .collect { case (RDDBlockId(id, _), s) if id == rdd.id =>
-            s.memSize + s.diskSize }
-          .sum
+    if (lr.stats.sizeInBytes <= maxBytes) cp
+    else {
+      val session = cp.sparkSession.asInstanceOf[classic.SparkSession]
+      val resized = LogicalRDD(lr.output, lr.rdd, lr.outputPartitioning,
+        lr.outputOrdering, lr.isStreaming, lr.stream)(
+        session, Some(Statistics(sizeInBytes = maxBytes)), Some(lr.constraints))
+      classic.Dataset.ofRows(session, resized)
     }
-  }
-
-  /** `cp` with its checkpoint leaf re-wrapped to carry `sizeInBytes`
-    * as its whole size estimate; rows, lineage and constraints are
-    * the leaf's own. */
-  def withLeafSize(cp: DataFrame, sizeInBytes: BigInt): DataFrame = {
-    val lr = leaf(cp)
-    val session = cp.sparkSession.asInstanceOf[classic.SparkSession]
-    val resized = LogicalRDD(lr.output, lr.rdd, lr.outputPartitioning,
-      lr.outputOrdering, lr.isStreaming, lr.stream)(
-      session, Some(Statistics(sizeInBytes = sizeInBytes)), Some(lr.constraints))
-    classic.Dataset.ofRows(session, resized)
   }
 }

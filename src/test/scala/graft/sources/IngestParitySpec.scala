@@ -5,10 +5,11 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 
 /**
- * `Ingest.csv` infers a file's schema on the driver instead of running
- * Spark's inference jobs. Each case here reads one file both ways and
- * requires the same schema and the same rows, in file order, as Spark's
- * own `inferSchema=true` read with the same options.
+ * `Ingest.csv` infers the schema of a file Spark reads as one split on
+ * the driver instead of running Spark's inference jobs, and leaves longer
+ * files, directories and globs to Spark. Each case here reads one path
+ * both ways and requires the same schema and the same rows, in file
+ * order, as Spark's own `inferSchema=true` read with the same options.
  */
 class IngestParitySpec extends SparkTestBase {
 
@@ -87,6 +88,22 @@ class IngestParitySpec extends SparkTestBase {
   test("a header-only file and an empty file") {
     parity("a,b,c\n")
     parity("")
+  }
+
+  test("a file longer than one split goes through Spark's own inference") {
+    // ints for the first splits, a double in the last: Spark infers each
+    // split in its own task and merges the per-split types
+    val f = Files.createTempFile("graft_parity_split", ".csv")
+    Files.writeString(f, "n,s\n" + (1 to 40).map(i => s"$i,x$i\n").mkString + "2.5,y\n")
+    val key = "spark.sql.files.maxPartitionBytes"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "64")
+    try {
+      assert(Ingest.inferCsvSchema(spark, f.toString).isEmpty)
+      assert(sparkInferred(f.toString).rdd.getNumPartitions > 1)
+      assertParity(f.toString)
+    } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(Ingest.inferCsvSchema(spark, f.toString).isDefined)
   }
 
   test("a directory goes through Spark's own inference") {

@@ -120,6 +120,26 @@ class IngestSpec extends SparkTestBase {
     assert(helper.collect(plan) { case s: InMemoryTableScanExec => s }.nonEmpty, plan)
   }
 
+  test("an upload's copy lives as long as its table name") {
+    import org.apache.spark.storage.StorageLevel
+    def upload(content: String): (String, org.apache.spark.sql.DataFrame) = {
+      val dir = Files.createTempDirectory("graft_ingest_life")
+      val p = dir.resolve("orders.csv")
+      Files.writeString(p, content)
+      val (name, df) = Ingest.loadCsvTable(spark, p.toString)
+      df.count()
+      (name, df)
+    }
+    val (name, first) = upload("a\n1\n")
+    assert(first.storageLevel != StorageLevel.NONE)
+    val (again, second) = upload("a\n2\n3\n")
+    assert(again == name)
+    assert(first.storageLevel == StorageLevel.NONE)
+    assert(second.storageLevel != StorageLevel.NONE)
+    spark.catalog.dropTempView(name)
+    assert(second.storageLevel == StorageLevel.NONE)
+  }
+
   test("image payload: lowercased columns, VARCHAR default, NULL literals") {
     val df = Ingest.fromImagePayload(spark,
       Seq(Ingest.ImageColumn("Product_ID", "INTEGER"),
